@@ -30,23 +30,38 @@ _SRC = str(_REPO / "src")
 if _SRC not in sys.path:
     sys.path.insert(0, _SRC)
 
+_PKG_ROOT = _REPO / "src" / "dedup"
 _ZIP = _REPO / "dist" / "dedup.zip"
 _PREPARED_APPS: set[str] = set()
 
 
+def _write_zip(pkg_root: Path, dest: Path) -> None:
+    """Zip the package's .py files into `dest`, byte-identical for
+    identical sources: entries sorted by archive name, with a fixed
+    timestamp and permissions instead of the files' mtime and mode (a
+    fresh checkout stamps every file with the checkout time)."""
+    names = sorted(
+        ("dedup/" + p.relative_to(pkg_root).as_posix(), p)
+        for p in pkg_root.rglob("*.py")
+    )
+    with zipfile.ZipFile(dest, "w") as z:
+        for name, p in names:
+            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            info.compress_type = zipfile.ZIP_DEFLATED
+            info.external_attr = 0o644 << 16
+            z.writestr(info, p.read_bytes())
+
+
 def _ensure_zip() -> Path:
     """(Re)build dist/dedup.zip whenever any source file is newer than the
-    zip, so addPyFile always ships code matching the driver-side modules."""
-    pkg_root = _REPO / "src" / "dedup"
-    py_files = sorted(pkg_root.rglob("*.py"))
-    newest_src = max(p.stat().st_mtime for p in py_files)
+    zip, so addPyFile always ships code matching the driver-side modules.
+    A rebuild from unchanged sources leaves the bytes unchanged."""
+    newest_src = max(p.stat().st_mtime for p in _PKG_ROOT.rglob("*.py"))
     if _ZIP.exists() and _ZIP.stat().st_mtime >= newest_src:
         return _ZIP
     _ZIP.parent.mkdir(exist_ok=True)
     tmp = _ZIP.with_name("dedup.zip.tmp")
-    with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-        for p in py_files:
-            z.write(p, "dedup/" + str(p.relative_to(pkg_root)))
+    _write_zip(_PKG_ROOT, tmp)
     tmp.replace(_ZIP)
     return _ZIP
 
@@ -118,3 +133,8 @@ def oracle_sql() -> dict[str, str]:
     return {
         name: sql for name, (_fn, sql) in _registry().items() if sql is not None
     }
+
+
+if __name__ == "__main__":
+    # `python3 __spark_entry__.py` (re)builds dist/dedup.zip for spark-submit
+    print(_ensure_zip())

@@ -294,9 +294,20 @@ _PROBES_SQL = "[bucket, " + ", ".join(
 
 # sort key packing for batch-local top-k: floor(sim*1e4+0.5) fits in
 # ~15 bits signed, vec_id must fit below the shift. 2^44 leaves headroom to
-# |key| < 2^59; asserted per batch so a larger-id corpus fails loudly
+# |key| < 2^59; checked per batch so a larger-id corpus fails loudly
 # instead of mis-ranking.
 _TOPK_ID_SHIFT = 44
+
+
+def _check_packable(ids: np.ndarray, what: str) -> None:
+    """Raise ValueError unless every id lies in [0, 2^_TOPK_ID_SHIFT): a
+    key `sim_floor * 2^shift - id` outside that range would rank into a
+    neighbouring similarity's band."""
+    if ids.size and (ids.min() < 0 or ids.max() >= 1 << _TOPK_ID_SHIFT):
+        raise ValueError(
+            f"{what} outside [0, 2^{_TOPK_ID_SHIFT}): the top-k sort key "
+            f"cannot pack it (min {ids.min()}, max {ids.max()})"
+        )
 
 
 def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,7 +356,7 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             if n_b == 0:
                 continue
             vid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            assert vid.max() < (1 << _TOPK_ID_SHIFT), "vec_id exceeds key packing"
+            _check_packable(vid, "vec_id")
             V = _np_mat(pdf["embedding"])
             nv = _np_fold_norm(V)
             fl = _np_sim4_floor_matrix(V, nv, bQm, bnq)  # (B, Q) exact ints
@@ -664,6 +675,7 @@ def _ivf_topk(emb: DataFrame, mod: int = _IVF_CENTROID_MOD) -> DataFrame:
     from . import track_persist
 
     c_ids, C, nc = _collect_centroids(emb, mod)
+    _check_packable(c_ids, "centroid vec_id")  # _qprobe packs c_ids
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, C, nc))
 
     def _assign(batches):
@@ -715,8 +727,6 @@ def _ivf_topk(emb: DataFrame, mod: int = _IVF_CENTROID_MOD) -> DataFrame:
             Q = _np_mat(pdf["embedding"])
             nq = _np_fold_norm(Q)
             qid = pdf["vec_id"].to_numpy(dtype=np.int64)
-            assert (qid.max() < (1 << _TOPK_ID_SHIFT)
-                    and bc_ids.max() < (1 << _TOPK_ID_SHIFT))
             fl = _np_sim4_floor_matrix(Q, nq, bC, bnc)   # (B, K)
             key = fl.astype(np.int64) * (1 << _TOPK_ID_SHIFT) - bc_ids[None, :]
             if n_c > m:

@@ -84,8 +84,9 @@ def sampled_span_hashes(docs: DataFrame, L: int = SPAN_L, p: int = SPAN_P,
     convention as the LSH band keys; sampling tests the low bits, which the
     two's-complement view preserves.
     """
+    if p < 1 or p & (p - 1):
+        raise ValueError(f"p must be a power of two (h % p == low bits), got {p}")
     mask = np.uint64(p - 1)
-    assert p & (p - 1) == 0, "p must be a power of two (h % p == low bits)"
 
     def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # r6: one concatenated rolling-hash pass per Arrow batch

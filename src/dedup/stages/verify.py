@@ -24,6 +24,10 @@ Physical plan: two repartition-joins attach contents by doc_id, then an
 explicit `repartition(content-bearing pair rows)` bounds task payload before
 mapInPandas (pair rows carry TWO contents — SURVEY.md section 4.2.2), and the
 verification runs one Arrow batch at a time with no Spark-side per-row Python.
+The repartition makes one partition per core slot, not more: every Spark
+task that evaluates Python pays ~200 ms of worker CPU whatever its size
+(README "Performance notes"), so a Python stage gets one task per slot
+unless its data needs more.
 """
 
 from __future__ import annotations
@@ -225,9 +229,12 @@ def verify_edges(pairs_with_content: DataFrame, config: DedupConfig,
         # - unlike the previous repartitionByRange, a hash exchange needs
         #   no range-boundary sampling pass, which re-evaluated the whole
         #   screens + content-join subtree a second time;
-        # - 8x cores in partition count so the scheduler can balance
-        #   residual per-pair cost skew (content lengths vary 40x).
-        df = df.repartition(num_partitions * 8, "src", "dst") \
+        # - one partition per core slot: each Python task costs ~200 ms
+        #   of worker CPU whatever its size (README "Performance notes"),
+        #   so finer partitions to even out per-pair cost skew cost more
+        #   than the skew when a partition holds few pairs; at scale each
+        #   partition holds many pairs and the (src, dst) hash balances.
+        df = df.repartition(num_partitions, "src", "dst") \
                .sortWithinPartitions("src", "dst")
     return df.mapInPandas(_verify, _OUT_SCHEMA)
 

@@ -13,6 +13,7 @@ plus a timezone-sensitive query under a stock session.
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -62,3 +63,28 @@ def test_queries_run_under_stock_session_clean_env():
         f"stdout:\n{proc.stdout[-4000:]}\n\nstderr:\n{proc.stderr[-4000:]}"
     )
     assert "OK entry" in proc.stdout
+
+
+def test_package_zip_is_byte_identical_across_builds(tmp_path):
+    """dist/dedup.zip depends only on the sources' names and bytes, not on
+    their mtime or mode, so a rebuild after a fresh checkout leaves the
+    committed zip unchanged."""
+    import zipfile
+
+    import __spark_entry__ as e
+
+    a, b = tmp_path / "a" / "dedup", tmp_path / "b" / "dedup"
+    for root in (a, b):
+        shutil.copytree(e._PKG_ROOT, root,
+                        ignore=shutil.ignore_patterns("__pycache__"))
+    for p in b.rglob("*.py"):
+        os.utime(p, (1_700_000_000, 1_700_000_000))
+        p.chmod(0o600)
+    e._write_zip(a, tmp_path / "a.zip")
+    e._write_zip(b, tmp_path / "b.zip")
+    e._write_zip(e._PKG_ROOT, tmp_path / "repo.zip")
+    data = (tmp_path / "a.zip").read_bytes()
+    assert data == (tmp_path / "b.zip").read_bytes()
+    assert data == (tmp_path / "repo.zip").read_bytes()
+    names = zipfile.ZipFile(tmp_path / "a.zip").namelist()
+    assert names == sorted(names) and "dedup/__init__.py" in names

@@ -221,6 +221,60 @@ def test_ivf_stride_sizing():
     assert math.ceil(big / mod) <= _IVF_MAX_CELLS
 
 
+def _embeddings_dir(tmp_path, vec_ids):
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame({
+        "vec_id": np.asarray(vec_ids, dtype=np.int64),
+        "embedding": [rng.standard_normal(64).astype("float32").tolist()
+                      for _ in vec_ids],
+    })
+    d = tmp_path / "ids"
+    d.mkdir()
+    pdf.to_parquet(d / "embeddings.parquet", index=False)
+    return str(d)
+
+
+def test_check_packable_bounds():
+    """The top-k sort key packs ids into [0, 2^_TOPK_ID_SHIFT); anything
+    outside raises ValueError (not an assert, which `python -O` strips)."""
+    import numpy as np
+
+    from dedup.ops.similarity import _TOPK_ID_SHIFT, _check_packable
+
+    top = (1 << _TOPK_ID_SHIFT) - 1
+    _check_packable(np.array([0, top], dtype=np.int64), "id")
+    _check_packable(np.array([], dtype=np.int64), "id")
+    for bad in (top + 1, -1):
+        with pytest.raises(ValueError, match="outside"):
+            _check_packable(np.array([0, bad], dtype=np.int64), "id")
+
+
+def test_topk_cosine_rejects_unpackable_vec_id(spark, tmp_path):
+    """An index-side vec_id past the key packing fails the query with the
+    worker's ValueError instead of mis-ranking."""
+    from dedup.ops.similarity import _TOPK_ID_SHIFT, embedding_topk_cosine
+
+    d = _embeddings_dir(tmp_path, [0, 1, 2, 1 << _TOPK_ID_SHIFT])
+    with pytest.raises(Exception, match="ValueError: vec_id outside"):
+        embedding_topk_cosine(spark, d).collect()
+
+
+def test_ivf_rejects_unpackable_centroid_id(spark, tmp_path):
+    """A centroid id past the key packing raises ValueError on the driver,
+    before the probe packs it."""
+    from dedup.ops.similarity import (
+        _IVF_CENTROID_MOD, _TOPK_ID_SHIFT, embedding_ann_ivf,
+    )
+
+    big = _IVF_CENTROID_MOD * ((1 << _TOPK_ID_SHIFT) // _IVF_CENTROID_MOD + 1)
+    d = _embeddings_dir(tmp_path, [0, 1, 2, big])
+    with pytest.raises(ValueError, match="centroid vec_id outside"):
+        embedding_ann_ivf(spark, d)
+
+
 def test_ann_derives_plane_count_from_corpus(spark, tmp_path):
     """The query path calls ann_n_planes(count): at driver-tier sizes the
     derivation returns the oracled 8, so _ann_topk(emb) must be row-identical

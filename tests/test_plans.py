@@ -8,13 +8,15 @@ codegen in the hot expressions.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from dedup.config import DedupConfig
 from dedup.corpus import generate_corpus
 from dedup.pipeline import run_dataframe_pipeline
-from dedup.stages import exact as SE, minhash_lsh as SM
+from dedup.stages import exact as SE, minhash_lsh as SM, verify as SV
 
 CFG = DedupConfig(shuffle_partitions=8)
 
@@ -60,6 +62,26 @@ def test_bucket_pairs_use_partial_aggregation(spark, files):
     sigs = SM.signatures(reps, CFG)
     plan = _plan(SM.candidate_pairs(SM.band_rows(sigs), CFG))
     assert "partial_count" in plan or "partial count" in plan.lower()
+
+
+def test_verify_runs_one_python_task_per_slot(spark):
+    """verify_edges hash-partitions the pair rows on (src, dst) into exactly
+    `num_partitions` partitions right beneath its MapInPandas: every Python
+    task costs a fixed ~200 ms of worker CPU, so the stage gets one task per
+    core slot, not a multiple of it."""
+    pairs = spark.createDataFrame(
+        [(1, 2, 0.9, "a" * 200, "a" * 200)],
+        "src long, dst long, est_jaccard double, "
+        "content_src string, content_dst string",
+    )
+    lines = _plan(SV.verify_edges(pairs, CFG, num_partitions=3)).splitlines()
+    (mip,) = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange " in ln]
+    assert exchanges and min(exchanges) > mip
+    assert re.search(r"Exchange hashpartitioning\(src#\d+L?, dst#\d+L?, 3\)",
+                     lines[min(exchanges)])
+    between = lines[mip + 1:min(exchanges)]
+    assert all("Sort [src" in ln for ln in between if "Sort" in ln)
 
 
 def test_scan_pushdown_on_filtered_read(spark, files):

@@ -123,6 +123,16 @@ def test_short_and_empty_docs_emit_nothing(spark):
     assert sampled_span_hashes(docs).count() == 0
 
 
+def test_sampling_rate_must_be_power_of_two(spark):
+    """The mod-p sample tests the low bits of h, so p must be a power of
+    two; anything else raises ValueError (not an assert, which `python -O`
+    strips)."""
+    docs = spark.createDataFrame([(1, _BLOCK)], "doc_id long, text string")
+    for p in (3, 0, 24):
+        with pytest.raises(ValueError, match="power of two"):
+            sampled_span_hashes(docs, p=p)
+
+
 def test_plan_has_no_cartesian_and_one_python_stage(spark, tmp_path):
     sf = _docs_dir(tmp_path, [(i, _unique(60 + i)) for i in range(6)])
     plan = doc_dup_span_stats(spark, sf)._jdf.queryExecution().executedPlan().toString()
