@@ -30,6 +30,8 @@ _SRC = str(_REPO / "src")
 if _SRC not in sys.path:
     sys.path.insert(0, _SRC)
 
+from dedup.ops import registry  # noqa: E402 — needs the sys.path entry above
+
 _PKG_ROOT = _REPO / "src" / "dedup"
 _ZIP = _REPO / "dist" / "dedup.zip"
 _PREPARED_APPS: set[str] = set()
@@ -93,19 +95,6 @@ def _prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def _registry():
-    from dedup.ops import (
-        dedup_queries, ledger_queries, multimodal, relational, similarity,
-        spans, textops,
-    )
-
-    merged: dict[str, tuple] = {}
-    for mod in (dedup_queries, textops, spans, similarity, relational,
-                multimodal, ledger_queries):
-        merged.update(mod.QUERIES)
-    return merged
-
-
 def _self_contained(fn):
     def runner(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fn(_prepare(spark), sf_dir)
@@ -125,13 +114,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        name: _self_contained(fn) for name, (fn, _sql) in _registry().items()
+        name: _self_contained(fn) for name, (fn, _sql) in registry().items()
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        name: sql for name, (_fn, sql) in _registry().items() if sql is not None
+        name: sql for name, (_fn, sql) in registry().items() if sql is not None
     }
 
 

@@ -40,23 +40,12 @@ def _session(cpus: str):
     )
 
 
-def _registry():
-    from dedup.ops import (
-        dedup_queries, ledger_queries, multimodal, relational, similarity,
-        spans, textops,
-    )
-
-    merged = {}
-    for mod in (dedup_queries, textops, spans, similarity, relational,
-                multimodal, ledger_queries):
-        merged.update(mod.QUERIES)
-    return merged
-
-
 def run_queries(sf_dir: str, cpus: str, names: list[str], trials: int,
                 plans_dir: str | None, plans_suffix: str) -> dict:
+    from dedup.ops import registry
+
     spark = _session(cpus)
-    q = _registry()
+    q = registry()
     timings: dict[str, float] = {}
     # untimed warmup (same rationale as bench.py)
     warm_fn, _ = q["q1_pricing_summary"]

@@ -45,19 +45,6 @@ class DedupConfig:
     # With num_perm=128, sd(J=0.10) = sqrt(0.1*0.9/128) = 0.0265 ->
     # gate - 1.5*sd = 0.060.
     prefilter_min_est_jaccard: float = 0.06
-    # --- pre-shuffle LCS fingerprint screen (verify.prepare_pairs) ---
-    # Per doc, k-gram window hashes (width lcs_min_chars, normalized text)
-    # are SAMPLED content-defined (keep h < 2^64/p with p ~ len/fp_budget,
-    # floor fp_min_rate), so two docs sharing a run select the same hashes
-    # within it. A pair whose only accept path is LCS can then be rejected
-    # JVM-side, before its content ever shuffles, when its fingerprint
-    # arrays don't overlap — PROVIDED the expected number of sampled grams
-    # in a threshold-length run, lambda = (threshold - lcs_min + 1)/max(p),
-    # is at least fp_screen_min_lambda (miss probability <= e^-lambda).
-    # Pairs below that lambda (short or length-skewed) are never screened.
-    fp_budget: int = 256            # target fingerprints per doc (~2 KB)
-    fp_min_rate: int = 16           # densest sampling 1-in-16 (short docs)
-    fp_screen_min_lambda: float = 7.0   # e^-7 ~ 0.09% miss, only at the edge
     # --- skew handling ---
     bucket_cap: int = 64            # LSH bucket size above which we star-link
     # hard cap on per-bucket pair emission for sub-cap buckets (C(64,2)=2016
@@ -115,8 +102,11 @@ class DedupConfig:
         """est-Jaccard below which the Jaccard accept branch is statistically
         impossible: 4 sigma under jaccard_floor at this signature length
         (P < 4e-5 for a true at-floor pair). Shared by the verify stage
-        (skip exact Jaccard) and prepare_pairs (fingerprint screen applies
-        only to pairs whose sole possible accept path is LCS)."""
+        (skip exact Jaccard) and prepare_pairs, whose winnowed-fingerprint
+        screen applies only to pairs whose sole possible accept path is LCS.
+        The MinHash-estimate cuts (this gate and prefilter_min_est_jaccard)
+        are the only probabilistic screens before verify: the fingerprint
+        screen never drops a pair the LCS branch would accept."""
         sd = (
             self.jaccard_floor * (1.0 - self.jaccard_floor) / self.num_perm
         ) ** 0.5

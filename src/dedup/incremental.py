@@ -376,7 +376,7 @@ def ingest_batch(
         else:
             # backfill (ADVICE r3): a work dir whose simhash stage completed
             # before the sim_blocks index existed derives it ONCE from the
-            # committed simhashes table, mirroring the fingerprints backfill
+            # committed simhashes table, mirroring the winnow_fps backfill
             sb_all = _p(stage_simhash.with_sbucket(
                 stage_simhash.block_rows(store.read(spark, "simhashes"))
             ))
@@ -416,13 +416,15 @@ def ingest_batch(
         )
         # fingerprints are persisted alongside the other indexes so each ingest
         # fingerprints ONLY its new reps (ADVICE r2: the fps=None default ran
-        # the pandas UDF over the whole corpus per batch); a pre-fingerprint
-        # store is backfilled once, then the table grows by appends. The new
-        # reps' fingerprints ride the fused signature pass (with_fp=True):
-        # no second content scan of the batch.
+        # the pandas UDF over the whole corpus per batch); a store without a
+        # `winnow_fps` table (written before it existed, or with the older
+        # sampled `fingerprints`, whose hashes never match winnowed ones) is
+        # backfilled once, then the table grows by appends. The new reps'
+        # fingerprints ride the fused signature pass (with_fp=True): no
+        # second content scan of the batch.
         fps_new = joint_new.select("doc_id", "fp", "nlen")
-        if store.exists("fingerprints"):
-            fps_all = store.read(spark, "fingerprints").unionByName(fps_new)
+        if store.exists("winnow_fps"):
+            fps_all = store.read(spark, "winnow_fps").unionByName(fps_new)
             fp_stage = ("append", fps_new)
         else:
             fps_all = _p(
@@ -568,7 +570,7 @@ def ingest_batch(
                 ["sbucket"],
             ),
             "clusters": store.stage(cl_stage[1], "clusters", cl_stage[0]),
-            "fingerprints": store.stage(fp_stage[1], "fingerprints", fp_stage[0]),
+            "winnow_fps": store.stage(fp_stage[1], "winnow_fps", fp_stage[0]),
         }
         store.commit_many(updates, expected=replace_base)
         snapshots = {t: store.current_snapshot(t) for t in updates}

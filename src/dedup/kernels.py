@@ -221,6 +221,34 @@ def run_hashes_batch(
     return mix64(h), counts
 
 
+def winnow_fingerprints(text: str, L: int) -> np.ndarray:
+    """Winnowed fingerprints of `text` (Schleimer, Wilkerson & Aiken,
+    SIGMOD 2003): the sorted unique uint64 set of minima over every window
+    of w consecutive run_hashes(text, k), with k = max(1, L // 2) and
+    w = L - k + 1.
+
+    One window spans w + k - 1 = L chars, so any common run of >= L chars
+    holds a full window in both texts, and selection by value puts that
+    window's minimum in both sets: two texts sharing a run of >= L chars
+    always share a fingerprint. Empty when len(text) < L. About 2/(w+1)
+    of the window positions are selected.
+
+    The window minimum is the O(n) van Herk/Gil-Werman form: per w-block
+    prefix and suffix minima, so window [i, i+w) is
+    min(suffix[i], prefix[i+w-1])."""
+    k = max(1, L // 2)
+    w = L - k + 1
+    h = run_hashes(text, k)
+    m = h.size
+    if L <= 0 or m < w:
+        return np.empty(0, dtype=np.uint64)
+    pad = np.full(-m % w, np.iinfo(np.uint64).max, dtype=np.uint64)
+    blocks = np.concatenate((h, pad)).reshape(-1, w)
+    prefix = np.minimum.accumulate(blocks, axis=1).ravel()
+    suffix = np.minimum.accumulate(blocks[:, ::-1], axis=1)[:, ::-1].ravel()
+    return np.unique(np.minimum(suffix[:m - w + 1], prefix[w - 1:m]))
+
+
 class RunHasher:
     """Memoized per-document state for `run_hashes`: the L-INDEPENDENT work
     (utf-32 encode, power/inverse-power cumprods, prefix sums — three O(n)

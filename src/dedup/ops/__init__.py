@@ -3,7 +3,8 @@
 Each module exposes `QUERIES: dict[name, (spark_fn, oracle_sql | None)]`
 where spark_fn(spark, sf_dir) -> DataFrame and oracle_sql is the DuckDB-
 equivalent ANSI SQL (None => non-SQL-expressible, driver does a rows-only
-check). `__spark_entry__.py` aggregates them all.
+check). `registry()` merges them all; `__spark_entry__.py` and the bench
+instruments read it.
 """
 
 from __future__ import annotations
@@ -13,34 +14,15 @@ def load_table(spark, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# --------------------------------------------------- one-shot query caches
-# VERDICT r5 #6: query paths persist intermediates that are consumed twice
-# within one composition but were never released, so a long-lived analytics
-# driver re-running queries accumulates storage blocks. Query functions now
-# persist through track_persist(); a long-lived driver calls release_caches()
-# after materializing a query's result (the ingest modules' tracked-caches
-# pattern, incremental_ann.py). One-shot processes (bench, driver gate) need
-# not call it — the session ends.
+def registry() -> dict[str, tuple]:
+    """Every module's QUERIES merged: name -> (spark_fn, oracle_sql | None)."""
+    from . import (
+        dedup_queries, ledger_queries, multimodal, relational, similarity,
+        spans, textops,
+    )
 
-_TRACKED_CACHES: list = []
-
-
-def track_persist(df):
-    """persist() + registration for later release_caches()."""
-    _TRACKED_CACHES.append(df.persist())
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every tracked one-shot query cache; returns the count.
-    Safe to call at any time AFTER the consuming DataFrames are fully
-    materialized (unpersisting earlier just recomputes lazily)."""
-    n = 0
-    while _TRACKED_CACHES:
-        df = _TRACKED_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    merged: dict[str, tuple] = {}
+    for mod in (dedup_queries, textops, spans, similarity, relational,
+                multimodal, ledger_queries):
+        merged.update(mod.QUERIES)
+    return merged

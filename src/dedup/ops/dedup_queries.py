@@ -121,10 +121,12 @@ def neardup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Full value-hash oracles for the signature channels (VERDICT r2 #2/#3):
 # the uint64 kernel chain inlined as literal-constant DuckDB SQL, pair
 # generation mirrored closed-form, clustering via a recursive CTE. The
-# clusters oracle applies the PURE verify rule (jaccard OR common-run);
-# the Spark path's recall-safe screens (est-Jaccard prefilter, fingerprint
-# screen) have bounded-miss probabilities small enough that both sides
-# agree on the test corpora — asserted by the driver gate per round.
+# clusters oracle applies the PURE verify rule (jaccard OR common-run).
+# The Spark path's winnowed-fingerprint screen never drops a pair the
+# common-run branch accepts; its only probabilistic screens are the
+# est-Jaccard cuts (prefilter_min_est_jaccard, jaccard_floor_gate), whose
+# miss probability is small enough that both sides agree on the test
+# corpora — asserted by the driver gate per round.
 MINHASH_LSH_CANDIDATES_SQL = oracle_u64.minhash_lsh_candidates_sql(DOC_CFG)
 SIMHASH_CANDIDATES_SQL = oracle_u64.simhash_candidates_sql(DOC_CFG)
 NEARDUP_CLUSTERS_SQL = oracle_u64.neardup_clusters_documents_sql(DOC_CFG)

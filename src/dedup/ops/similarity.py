@@ -672,8 +672,6 @@ def _ivf_topk(emb: DataFrame, mod: int = _IVF_CENTROID_MOD) -> DataFrame:
     window; assignment is bit-identical (argmax over exact rounded csim
     with first-max = lowest c_id realizing the struct(csim, -c_id) order;
     measured identical on all 20k sf1.0 rows — OPTIMIZATION_r06.md)."""
-    from . import track_persist
-
     c_ids, C, nc = _collect_centroids(emb, mod)
     _check_packable(c_ids, "centroid vec_id")  # _qprobe packs c_ids
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, C, nc))
@@ -698,12 +696,10 @@ def _ivf_topk(emb: DataFrame, mod: int = _IVF_CENTROID_MOD) -> DataFrame:
                 "cell": bc_ids[best],
             })
 
-    assigned = track_persist(
-        emb.select("vec_id", "embedding").mapInPandas(
-            _assign,
-            "vec_id long, embedding array<float>, nv double, cell long",
-        )
-    )
+    assigned = emb.select("vec_id", "embedding").mapInPandas(
+        _assign,
+        "vec_id long, embedding array<float>, nv double, cell long",
+    ).persist()
     wc = Window.partitionBy("cell").orderBy(F.asc("vec_id"))
     idx = (
         assigned.withColumn("crk", F.row_number().over(wc))
@@ -866,18 +862,15 @@ def _neardup_edges(
     the annotation now matches the tuple return)."""
     from ..config import DedupConfig
     from ..stages.minhash_lsh import pairs_from_buckets
-    from . import track_persist
 
     emb = load_table(spark, sf_dir, "embeddings")
     if n_planes is None:
         n_planes = ann_n_planes(_corpus_count(sf_dir, emb))
     vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = track_persist(
-        emb.select(
-            F.col("vec_id").alias("doc_id"), vec.alias("v"),
-            _bucket_col(vec, n_planes).alias("bucket"),
-        ).withColumn("nv", _norm_col(F.col("v")))
-    )
+    base = emb.select(
+        F.col("vec_id").alias("doc_id"), vec.alias("v"),
+        _bucket_col(vec, n_planes).alias("bucket"),
+    ).withColumn("nv", _norm_col(F.col("v"))).persist()
     rows = base.select(
         "doc_id",
         F.explode(_probes_col(F.col("bucket"), n_planes)).alias("bucket"),

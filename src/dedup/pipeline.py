@@ -317,7 +317,9 @@ class Pipeline:
             .dropDuplicates(["src", "dst"])
         )
         # fingerprints persist as their own index table: incremental ingests
-        # then fingerprint only their new reps (ADVICE r2)
+        # then fingerprint only their new reps (ADVICE r2). The table name
+        # names the scheme (winnowed), so a store written with another
+        # fingerprint scheme has no `winnow_fps` and ingest backfills it.
         fps = stage_verify.doc_fingerprints(reps, self.config).persist()
         pairs = stage_verify.prepare_pairs(edges, reps, sigs, self.config,
                                            fps=fps)
@@ -325,7 +327,7 @@ class Pipeline:
             pairs, self.config, num_partitions=self.config.shuffle_partitions
         )
         return {"edges_verified": verified.where("accepted"),
-                "fingerprints": fps}
+                "winnow_fps": fps}
 
     def _stage_cluster(self) -> dict[str, DataFrame]:
         edges = self.store.read(self.spark, "edges_verified")

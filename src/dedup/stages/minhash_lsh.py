@@ -96,12 +96,13 @@ def joint_signatures(
     bit-identical to running signatures() and simhash.simhashes()
     separately.
 
-    `with_fp=True` additionally folds the verify stage's content-defined
-    LCS fingerprints (verify.doc_fingerprints) into the SAME pass: the
+    `with_fp=True` additionally folds the verify stage's winnowed LCS
+    fingerprints (verify.doc_fingerprints) into the SAME pass: the
     normalization and the Arrow content hop are shared, so the one-shot
     composition paths read the corpus ONCE where they previously read it
-    twice (a full extra corpus scan at 100 TB). Outputs are bit-identical
-    to doc_fingerprints — pinned by test.
+    twice (a full extra corpus scan at 100 TB). Both passes call the one
+    kernel, kernels.winnow_fingerprints; the outputs' equality is pinned
+    by test.
 
     Used by the one-shot composition paths (bench pipeline, incremental
     ingest, query channels); the resumable Pipeline keeps minhash_lsh,
@@ -113,8 +114,6 @@ def joint_signatures(
     n_blocks = config.hamming_radius + 1
     a, b = K.make_minhash_coeffs(config.num_perm, config.seed)
     width = config.lcs_min_chars
-    budget = config.fp_budget
-    min_rate = config.fp_min_rate
 
     fields = [
         T.StructField("sig", T.ArrayType(T.LongType())),
@@ -143,15 +142,11 @@ def joint_signatures(
             "blocks": list(blocks),
         }
         if with_fp:
-            fps, nlens = [], []
-            for t in ts:  # mirrors verify.doc_fingerprints exactly
-                h = K.run_hashes(t, width)
-                p = max(min_rate, (len(t) + budget - 1) // budget)
-                thr = np.uint64(2**64 // p)
-                fps.append(np.unique(h[h < thr]).view(np.int64).tolist())
-                nlens.append(len(t))
-            out["fp"] = fps
-            out["nlen"] = nlens
+            out["fp"] = [
+                K.winnow_fingerprints(t, width).view(np.int64).tolist()
+                for t in ts
+            ]
+            out["nlen"] = [len(t) for t in ts]
         return pd.DataFrame(out)
 
     cols = ["sig", "bands", "simhash", "blocks"] + (

@@ -48,18 +48,12 @@ _OUT_SCHEMA = (
 
 
 def doc_fingerprints(reps: DataFrame, config: DedupConfig) -> DataFrame:
-    """(doc_id, fp: array<long>, nlen: int) — content-defined sampled
-    fingerprints for the pre-shuffle LCS screen.
-
-    fp holds the width-`lcs_min_chars` window hashes of the NORMALIZED text
-    whose value is below 2^64/p, with p = clamp(nlen / fp_budget,
-    fp_min_rate, ...). Selection depends only on content, so two docs
-    sharing a run select identical hashes inside it; a run of g grams then
-    yields a shared fingerprint with probability 1 - (1 - 1/max(p))^g.
-    One O(n)-per-doc pandas pass — per DOC, never per pair."""
+    """(doc_id, fp: array<long>, nlen: int) — winnowed fingerprints of the
+    NORMALIZED text (kernels.winnow_fingerprints at L = lcs_min_chars) for
+    the pre-shuffle LCS screen. Two docs sharing a run of >= lcs_min_chars
+    chars always share a fingerprint. One O(n)-per-doc pandas pass — per
+    DOC, never per pair."""
     width = config.lcs_min_chars
-    budget = config.fp_budget
-    min_rate = config.fp_min_rate
     norm = config.normalize
 
     @F.pandas_udf(T.StructType([
@@ -69,16 +63,12 @@ def doc_fingerprints(reps: DataFrame, config: DedupConfig) -> DataFrame:
     def fp_udf(texts: pd.Series) -> pd.DataFrame:
         import numpy as np
 
-        fps, nlens = [], []
-        for raw in texts:
-            t = K.normalize_text(raw) if norm else raw
-            h = K.run_hashes(t, width)
-            p = max(min_rate, (len(t) + budget - 1) // budget)
-            thr = np.uint64(2**64 // p)
-            sel = np.unique(h[h < thr]).view(np.int64)
-            fps.append(sel.tolist())
-            nlens.append(len(t))
-        return pd.DataFrame({"fp": fps, "nlen": nlens})
+        ts = [K.normalize_text(t) for t in texts] if norm else texts.tolist()
+        return pd.DataFrame({
+            "fp": [K.winnow_fingerprints(t, width).view(np.int64).tolist()
+                   for t in ts],
+            "nlen": [len(t) for t in ts],
+        })
 
     return reps.select("doc_id", fp_udf("content").alias("f")).select(
         "doc_id", F.col("f.fp").alias("fp"), F.col("f.nlen").alias("nlen")
@@ -101,17 +91,17 @@ def prepare_pairs(
        branch (< jaccard_floor_gate), a pair whose LCS threshold exceeds
        the shorter doc's length is dropped outright;
     3. fingerprint screen: for the same Jaccard-impossible band, the
-       content-defined sampled fingerprints (doc_fingerprints) must
-       overlap whenever the screen's detection mass
-       lambda = (threshold - width + 1)/max(p_a, p_b) clears
-       fp_screen_min_lambda — pairs failing arrays_overlap are rejected
-       with miss probability <= e^-lambda (config.py). Below the lambda
-       bar (short docs, skewed lengths) the screen abstains.
+       winnowed fingerprints (doc_fingerprints) must overlap. The LCS
+       threshold is never below lcs_min_chars, and a common run of that
+       length always yields a shared winnowed fingerprint, so the screen
+       never drops a pair the LCS branch would accept; hash collisions
+       only keep extra pairs.
 
-    Only SURVIVORS join against the content table, so the verify
-    exchange carries ~2 KB of fingerprints per candidate instead of two
-    full contents: this is what keeps the dominant (reject) path's shuffle
-    volume per-candidate-bounded at 100 TB.
+    Only SURVIVORS join against the content table. The screen's own
+    exchange carries each side's signature plus its fingerprints, about
+    2/(w+1) of its window positions at 8 B each (w = lcs_min_chars -
+    lcs_min_chars // 2 + 1): ~0.5 B per char at lcs_min_chars=60, ~110
+    fingerprints for a 1.8 KB code file. Rejected pairs never move content.
     """
     if fps is None:
         # one pandas pass over the docs; persistent-index callers (the
@@ -144,23 +134,10 @@ def prepare_pairs(
         F.lit(config.lcs_min_chars),
         F.floor(F.lit(config.lcs_min_ratio) * min_len).cast("int"),
     )
-    rate = lambda c: F.greatest(  # noqa: E731 — mirrors doc_fingerprints
-        F.lit(config.fp_min_rate),
-        F.ceil(F.col(c) / F.lit(config.fp_budget)).cast("int"),
-    )
-    lam = (
-        (threshold - F.lit(config.lcs_min_chars) + 1).cast("double")
-        / F.greatest(rate("nlen_src"), rate("nlen_dst"))
-    )
     jaccard_possible = F.col("est_jaccard") >= F.lit(config.jaccard_floor_gate())
     lcs_fits = threshold <= min_len
-    screen_applies = (~jaccard_possible) & lcs_fits & (
-        lam >= F.lit(config.fp_screen_min_lambda)
-    )
-    keep = (
-        jaccard_possible
-        | (lcs_fits & ~screen_applies)
-        | (screen_applies & F.arrays_overlap("fp_src", "fp_dst"))
+    keep = jaccard_possible | (
+        lcs_fits & F.arrays_overlap("fp_src", "fp_dst")
     )
     survivors = (
         edges.join(src_side, "src")

@@ -88,3 +88,16 @@ def test_package_zip_is_byte_identical_across_builds(tmp_path):
     assert data == (tmp_path / "repo.zip").read_bytes()
     names = zipfile.ZipFile(tmp_path / "a.zip").namelist()
     assert names == sorted(names) and "dedup/__init__.py" in names
+
+
+def test_committed_package_zip_is_current(tmp_path):
+    """The committed dist/dedup.zip equals a fresh build of src/dedup.
+    `_ensure_zip` rebuilds only when a source is newer than the zip, and a
+    fresh checkout stamps both with the checkout time, so a stale committed
+    zip would ship as is. Rebuild it with `python3 __spark_entry__.py`."""
+    import __spark_entry__ as e
+
+    e._write_zip(e._PKG_ROOT, tmp_path / "fresh.zip")
+    assert (tmp_path / "fresh.zip").read_bytes() == e._ZIP.read_bytes(), (
+        "dist/dedup.zip is stale: run `python3 __spark_entry__.py`"
+    )

@@ -285,7 +285,7 @@ def test_ingest_auto_compacts_appended_indexes(spark, tmp_path):
     for b in batches[1:]:
         out = pipe.ingest(spark.createDataFrame(b)).toPandas()
     for t in ("hashed", "reps", "signatures", "bands", "simhashes",
-              "sim_blocks", "fingerprints"):
+              "sim_blocks", "winnow_fps"):
         assert len(pipe.store.paths(t)) <= cfg.compact_segments, t
     # compaction changed layout only: every doc still assigned, minima canon
     assert len(out) == 200
@@ -295,23 +295,68 @@ def test_ingest_auto_compacts_appended_indexes(spark, tmp_path):
     assert (mins.index == mins.values).all()
 
 
+def _lcs_only_pair(cfg: DedupConfig) -> tuple[str, str]:
+    """Two 1201-char docs sharing a 400-char run: the LCS threshold is
+    max(60, 0.25 * 1201) = 300, so the LCS branch accepts them, while their
+    MinHash estimate sits under the Jaccard gate (asserted), so LCS is
+    their only accept path."""
+    import random
+
+    import numpy as np
+
+    from dedup import kernels as K
+
+    rng = random.Random(5)
+
+    def words(n):
+        out = []
+        while len(" ".join(out)) < n:
+            out.append("".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
+                               for _ in range(rng.randint(2, 8))))
+        return " ".join(out)[:n]
+
+    block = words(400)
+    old_doc, new_doc = words(800) + " " + block, block + " " + words(800)
+    a, b = K.make_minhash_coeffs(cfg.num_perm, cfg.seed)
+    sig = K.minhash_batch([old_doc, new_doc], cfg.shingle_k, a, b)
+    assert np.mean(sig[0] == sig[1]) < cfg.jaccard_floor_gate()
+    return old_doc, new_doc
+
+
 def test_ingest_backfills_missing_sim_blocks(spark, tmp_path):
     """ADVICE r3: a work dir whose simhash stage committed before the
     sim_blocks index existed must not crash the first ingest — the index is
     derived once from the committed simhashes table and committed with the
-    batch."""
-    cfg = DedupConfig(shuffle_partitions=8)
+    batch. Likewise for `winnow_fps`: a store without it (written before it
+    existed, or holding the older sampled `fingerprints`, whose hashes
+    never match winnowed ones) backfills it once from the old reps, so an
+    LCS-only near-dup of an old doc still passes the fingerprint screen and
+    is clustered."""
+    # 64x2 bands make the planted Jaccard-0.2 pair an LSH candidate
+    cfg = DedupConfig(shuffle_partitions=8, bands=64, rows_per_band=2)
     c = generate_corpus(160, seed=11)
-    fa = c.files.iloc[:120].reset_index(drop=True)
-    fb = c.files.iloc[120:].reset_index(drop=True)
+    old_doc, new_doc = _lcs_only_pair(cfg)
+    planted = pd.DataFrame({
+        "repo": "org/planted", "path": ["old.txt", "new.txt"],
+        "commit": "c0", "lang": "text", "content": [old_doc, new_doc],
+    })
+    fa = pd.concat([c.files.iloc[:120], planted.iloc[:1]], ignore_index=True)
+    fb = pd.concat([c.files.iloc[120:], planted.iloc[1:]], ignore_index=True)
     pipe = Pipeline(spark, cfg, tmp_path / "w")
     pipe.run(spark.createDataFrame(fa))
     pipe.store.drop("sim_blocks")  # simulate the pre-format store
+    pipe.store.drop("winnow_fps")
 
     out = pipe.ingest(spark.createDataFrame(fb)).toPandas()
-    assert len(out) == 160 and out.doc_id.is_unique
-    # backfilled index covers old AND new docs, partitioned for pruning
-    sim_blocks = pipe.store.read(spark, "sim_blocks")
+    assert len(out) == 162 and out.doc_id.is_unique
+    # backfilled indexes cover old AND new docs, sim_blocks partitioned
+    # for pruning
     reps = pipe.store.read(spark, "reps")
-    assert sim_blocks.select("doc_id").distinct().count() == reps.count()
+    for t in ("sim_blocks", "winnow_fps"):
+        got = pipe.store.read(spark, t).select("doc_id").distinct().count()
+        assert got == reps.count(), t
     assert pipe.store.partition_cols("sim_blocks") == ["sbucket"]
+    ids = spark.createDataFrame(planted).selectExpr(
+        "xxhash64(repo, path, commit) AS doc_id").toPandas().doc_id
+    cl = out.set_index("doc_id").cluster_id
+    assert cl[ids[0]] == cl[ids[1]], "LCS-only near-dup not clustered"

@@ -484,3 +484,59 @@ def test_run_hashes_batch_bit_identical_to_per_text():
             assert np.array_equal(h[off:off + int(c)], ref)
             off += int(c)
         assert off == h.size
+
+
+# ---------------------------------------------------------------------------
+# winnowed fingerprints (the verify stage's pre-shuffle LCS screen)
+# ---------------------------------------------------------------------------
+
+def _winnow_naive(t: str, L: int) -> np.ndarray:
+    """Reference: the set of minima over every w-window of run_hashes(t, k)."""
+    k = max(1, L // 2)
+    w = L - k + 1
+    h = K.run_hashes(t, k)
+    mins = {int(h[i:i + w].min()) for i in range(h.size - w + 1)}
+    return np.array(sorted(mins), dtype=np.uint64)
+
+
+def test_winnow_fingerprints_matches_naive_reference():
+    rng = random.Random(29)
+    for L in (1, 2, 3, 8, 29, 30, 60):  # odd and even L
+        for n in (0, 1, L - 1, L, L + 1, 2 * L + 3, 400):
+            t = _rand_text(rng, n)
+            got = K.winnow_fingerprints(t, L)
+            assert got.dtype == np.uint64
+            assert np.array_equal(got, _winnow_naive(t, L)), (L, n)
+            if n < L:
+                assert got.size == 0, (L, n)
+            else:
+                assert got.size >= 1, (L, n)
+    assert K.winnow_fingerprints("", 30).size == 0
+
+
+_RUN_ALPHABET = "abx é漢"
+
+
+@given(
+    st.integers(min_value=1, max_value=40).flatmap(
+        lambda L: st.tuples(
+            st.just(L),
+            st.text(alphabet=_RUN_ALPHABET, min_size=L, max_size=L + 30),
+        )
+    ),
+    st.text(alphabet=_RUN_ALPHABET, max_size=120),
+    st.text(alphabet=_RUN_ALPHABET, max_size=120),
+    st.text(alphabet=_RUN_ALPHABET, max_size=120),
+    st.text(alphabet=_RUN_ALPHABET, max_size=120),
+)
+@settings(max_examples=200, deadline=None)
+def test_winnow_fingerprints_shared_run_always_intersects(
+    L_run, pre_a, post_a, pre_b, post_b
+):
+    """Two texts sharing a run of >= L chars, at any offsets, always share
+    a winnowed fingerprint: the screen built on them cannot miss a pair
+    whose LCS reaches L."""
+    L, run = L_run
+    fa = K.winnow_fingerprints(pre_a + run + post_a, L)
+    fb = K.winnow_fingerprints(pre_b + run + post_b, L)
+    assert np.intersect1d(fa, fb).size > 0

@@ -351,9 +351,12 @@ def test_fp_screen_keeps_lcs_pairs_drops_impossible(spark):
     """Pre-shuffle fingerprint screen (prepare_pairs): pairs whose only
     accept path is LCS survive when they share a long run; pairs whose LCS
     threshold exceeds the shorter doc are dropped JVM-side; dissimilar
-    same-length pairs are screened out before content would shuffle."""
+    same-length pairs are screened out before content would shuffle, short
+    docs included (the winnowed screen has no abstain band)."""
     import random
     import string
+
+    import numpy as np
 
     rng = random.Random(23)
 
@@ -373,15 +376,30 @@ def test_fp_screen_keeps_lcs_pairs_drops_impossible(spark):
     rows += [(2, rand_text(4000)), (3, rand_text(4000))]
     edges.append((2, 3))
     # (c) short docs (300 chars) with an 80-char shared block: est-J ~0.14
-    #     passes the prefilter but rules out the Jaccard branch; threshold
-    #     = max(60, 75) = 75, lambda = (75-60+1)/16 = 1 < 7 -> the screen
-    #     must ABSTAIN (too little detection mass) and keep the pair
+    #     passes the prefilter but rules out the Jaccard branch; the
+    #     80-char run clears the threshold max(60, 75) = 75 and so shares
+    #     a winnowed fingerprint -> the pair MUST survive
     short_block = rand_text(80)
     rows += [
         (4, short_block + rand_text(220)),
         (5, rand_text(220) + short_block),
     ]
     edges.append((4, 5))
+    # (d) short docs (300 chars) that are two shufflings of the same 25
+    #     12-char chunks: est-J sits between the prefilter and the Jaccard
+    #     gate, but no common run comes near 75 chars -> screened out
+    chunks = [
+        "".join(rng.choice(string.ascii_lowercase) for _ in range(12))
+        for _ in range(25)
+    ]
+    rows += [(6, "".join(rng.sample(chunks, 25))),
+             (7, "".join(rng.sample(chunks, 25)))]
+    edges.append((6, 7))
+    a, b = K.make_minhash_coeffs(cfg.num_perm, cfg.seed)
+    sig = K.minhash_batch([rows[-2][1], rows[-1][1]], cfg.shingle_k, a, b)
+    est = float(np.mean(sig[0] == sig[1]))
+    assert cfg.prefilter_min_est_jaccard <= est < cfg.jaccard_floor_gate()
+    assert K.longest_common_substring(rows[-2][1], rows[-1][1]) < 60
     reps = spark.createDataFrame(rows, "doc_id long, content string")
     sigs = SM.signatures(reps, cfg)
     edges_df = spark.createDataFrame(edges, "src long, dst long")
@@ -392,7 +410,8 @@ def test_fp_screen_keeps_lcs_pairs_drops_impossible(spark):
     }
     assert (0, 1) in kept, "shared-block pair was screened out"
     assert (2, 3) not in kept, "dissimilar pair not screened"
-    assert (4, 5) in kept, "low-lambda pair must not be screened"
+    assert (4, 5) in kept, "short pair sharing an 80-char run was screened out"
+    assert (6, 7) not in kept, "short dissimilar pair not screened"
     # and the verify stage accepts the planted pair via the LCS path
     out = {
         (r["src"], r["dst"]): r["accepted"]
