@@ -415,20 +415,22 @@ def ingest_batch(
             sigs_new.select("doc_id", "sig")
         )
         # fingerprints are persisted alongside the other indexes so each ingest
-        # fingerprints ONLY its new reps (ADVICE r2: the fps=None default ran
-        # the pandas UDF over the whole corpus per batch); a store without a
+        # fingerprints ONLY its new reps (ADVICE r2); a store without a
         # `winnow_fps` table (written before it existed, or with the older
         # sampled `fingerprints`, whose hashes never match winnowed ones) is
-        # backfilled once, then the table grows by appends. The new reps'
-        # fingerprints ride the fused signature pass (with_fp=True): no
-        # second content scan of the batch.
+        # backfilled once from the fused signature pass over the old reps,
+        # then the table grows by appends. The new reps' fingerprints ride
+        # the batch's own fused pass (with_fp=True): no second content scan
+        # of the batch. Docs with empty normalized text get no row either
+        # way: they have no signatures, so they are never a pair endpoint.
         fps_new = joint_new.select("doc_id", "fp", "nlen")
         if store.exists("winnow_fps"):
             fps_all = store.read(spark, "winnow_fps").unionByName(fps_new)
             fp_stage = ("append", fps_new)
         else:
             fps_all = _p(
-                stage_verify.doc_fingerprints(reps_old, config)
+                stage_minhash.joint_signatures(reps_old, config, with_fp=True)
+                .select("doc_id", "fp", "nlen")
                 .unionByName(fps_new)
             )
             fp_stage = ("replace", fps_all)

@@ -10,8 +10,8 @@ commits are ONE atomic catalog CAS, and previously-ingested vectors are
 never re-bucketed.
 
 The index key is the multi-probe hyperplane bucket of the ONE-SHOT
-embedding channel (ops.similarity._bucket_col/_probes_col) — not the IVF
-cell of the ANN query path. Deliberate: an LSH bucket is a SIMILARITY
+embedding channel (ops.similarity._np_bucket_norm_udf/_probes_col) — not
+the IVF cell of the ANN query path. Deliberate: an LSH bucket is a SIMILARITY
 statement (collision implies high cosine w.h.p.), so the shared cap/star
 skew machinery is sound there — a star edge to a mega-bucket's pivot
 survives the tau filter exactly when the members really are near-dups. An
@@ -62,7 +62,7 @@ from .incremental import _fold_log, _pair, _read_latest
 from .ledger import Ledger, Status
 from .ops.similarity import (
     _DIM,
-    _bucket_col,
+    _np_bucket_norm_udf,
     _probes_col,
     _sim4,
     ann_n_planes,
@@ -103,10 +103,16 @@ def _bucket_rows(base: DataFrame, n_planes: int) -> DataFrame:
     """(vec_id, bucket, pbucket): one row per multi-probe bucket of each
     vector — the symmetric probing of the one-shot channel, so two vectors
     meet whenever their sign buckets are within the probe radius."""
-    b = _bucket_col(F.col("v"), n_planes)
+    # the bucket is projected on its own first: _probes_col references it
+    # n_planes + 1 times, and a Python UDF must run once per vector
+    bucketed = base.select(
+        "vec_id",
+        _np_bucket_norm_udf(n_planes)(F.col("v"))["bucket"].alias("b"),
+    )
     return (
-        base.select(
-            "vec_id", F.explode(_probes_col(b, n_planes)).alias("bucket")
+        bucketed.select(
+            "vec_id",
+            F.explode(_probes_col(F.col("b"), n_planes)).alias("bucket"),
         )
         .withColumn(
             "pbucket",

@@ -14,10 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..stages import cluster as SC
+from ..pipeline import near_dup_labels
 from ..stages import minhash_lsh as SM
 from ..stages import simhash as SS
-from ..stages import verify as SV
 from . import load_table, oracle_u64
 
 # documents are short (50-550 chars) word-salad rows from a ~40-word vocab:
@@ -78,35 +77,24 @@ FROM documents
 
 
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    reps = _docs_as_reps(spark, sf_dir)
-    sigs = SM.signatures(reps, DOC_CFG)
+    sigs = SM.joint_signatures(_docs_as_reps(spark, sf_dir), DOC_CFG)
     return SM.candidate_pairs(SM.band_rows(sigs), DOC_CFG)
 
 
 def simhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    reps = _docs_as_reps(spark, sf_dir)
-    return SS.candidate_pairs(SS.simhashes(reps, DOC_CFG), DOC_CFG)
+    sigs = SM.joint_signatures(_docs_as_reps(spark, sf_dir), DOC_CFG)
+    return SS.candidate_pairs(
+        sigs.select("doc_id", "simhash", "blocks"), DOC_CFG
+    )
 
 
 def neardup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full near-dup flow on documents, composed as pure DataFrame ops
-    (no checkpoint store — the store-backed path is jobs/run_pipeline.py)."""
+    (no checkpoint store — the store-backed path is jobs/run_pipeline.py):
+    the pipeline's own composition (pipeline.near_dup_labels), with every
+    doc outside an accepted edge its own cluster."""
     reps = _docs_as_reps(spark, sf_dir)
-    # fused signature pass: both channels + verify fingerprints from ONE
-    # content scan/Arrow hop
-    sigs = SM.joint_signatures(reps, DOC_CFG, with_fp=True).persist()
-    # per-channel dedup deferred to the union's single (src, dst) pass
-    e_lsh = SM.candidate_pairs(SM.band_rows(sigs), DOC_CFG, dedup=False)
-    e_sim = SS.candidate_pairs(
-        sigs.select("doc_id", "simhash", "blocks"), DOC_CFG, dedup=False
-    )
-    edges = e_lsh.unionByName(e_sim).dropDuplicates(["src", "dst"])
-    verified = SV.verify_edges(
-        SV.prepare_pairs(edges, reps, sigs, DOC_CFG,
-                         fps=sigs.select("doc_id", "fp", "nlen")),
-        DOC_CFG,
-    ).where("accepted")
-    labels, _ = SC.connected_components(verified)
+    labels, _ = near_dup_labels(reps, DOC_CFG)
     docs = reps.select("doc_id")
     return (
         docs.join(labels, "doc_id", "left")

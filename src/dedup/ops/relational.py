@@ -218,16 +218,9 @@ SELECT c_custkey AS custkey FROM customer WHERE c_acctbal > 5000
 
 def events_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    # r6 (guide §2.5 input skew / §6): a single-row-group events file scans
-    # as ONE partition, serializing the heavy 3-key partial aggregation of
-    # the count-distinct rewrite on one core. ensure_parallelism round-robins
-    # only when the scan is under-split — a no-op on any well-partitioned
-    # input at scale.
-    from ..stages.minhash_lsh import ensure_parallelism
-
-    ev = ensure_parallelism(
-        ev, int(spark.conf.get("spark.sql.shuffle.partitions"))
-    )
+    # no ensure_parallelism round-robin here: r6 added one for the
+    # single-partition scan and it measured 0.76x under an interleaved A/B
+    # (the round-robin shuffle costs more than the serialized partial agg)
     return (
         ev.groupBy(
             F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"

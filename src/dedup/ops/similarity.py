@@ -190,24 +190,6 @@ def _sim4_pairs_udf():
 
 # --------------------------------------------------------- sign bucketing
 
-def _bucket_col(vcol, n_planes: int = _N_PLANES):
-    """n_planes-bit hyperplane sign bucket as a JVM expression: per plane, a
-    strict left-fold dot product (same accumulation order as DuckDB's
-    list_sum), bit j set iff dot_j >= 0. Literal coefficients round-trip
-    exactly through both engines' double parsing, so buckets are
-    bit-identical at the oracled default n_planes=_N_PLANES."""
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(float(c)) for c in _PLANE_POOL[:, j]])
-        dot = F.aggregate(
-            F.zip_with(vcol, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket.cast("int")
-
-
 def _probes_col(bucket, n_planes: int = _N_PLANES):
     """Multi-probe buckets: the bucket itself plus all Hamming-1 flips."""
     return F.array(
@@ -236,8 +218,9 @@ def _widened_probes_udf(n_planes: int):
     = n + 29 probes at any width: O(n) probe rows per query, Hamming-2
     recall where it matters. Returns array<int> of probe buckets; the
     bucket itself is recomputed from the same plane literals (float64
-    matmul — a borderline sign differing from the JVM fold is by definition
-    a ~zero-margin plane, i.e. already covered by its single-flip probe).
+    matmul — a borderline sign differing from _np_bucket_norm_udf's exact
+    fold is by definition a ~zero-margin plane, i.e. already covered by its
+    single-flip probe).
     Only used when n_planes > _N_PLANES, so the oracled literal-8 path is
     untouched."""
     from pyspark.sql.functions import pandas_udf
@@ -329,6 +312,15 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     can reach rank <= K under the total order (sim desc, vec_id asc).
     """
     emb = load_table(spark, sf_dir, "embeddings")
+    # the query set is collected to the driver: size it from the parquet
+    # footer (no Spark job) before collecting anything
+    n = _corpus_count(sf_dir, emb)
+    if n // _QUERY_MOD > _TOPK_MAX_QUERIES:
+        raise ValueError(
+            f"embedding_topk_cosine: ~{n // _QUERY_MOD} queries "
+            f"(1/{_QUERY_MOD} of {n} rows) exceed the driver-collect bound "
+            f"_TOPK_MAX_QUERIES={_TOPK_MAX_QUERIES}; use embedding_ann_ivf"
+        )
     qpd = (
         emb.where(F.col("vec_id") % _QUERY_MOD == 0)
         .select("vec_id", "embedding")
@@ -461,12 +453,14 @@ def _corpus_count(sf_dir: str, emb: DataFrame) -> int:
 
 
 def _np_bucket_norm_udf(n_planes: int):
-    """(bucket, nv) per vector in one vectorized pass — the numpy twin of
-    `_bucket_col` + `_norm_col` (r6, guide §4.2: n_planes JVM folds per row
-    -> one matmul per batch). Bit-identical: the norm is the exact fold;
-    the bucket bit is sign(dot >= 0) where any |dot| within _SIM_EPS of the
-    boundary is recomputed with the exact fold (reorder error bound
-    ~1e-12 << _SIM_EPS, same argument as _np_sim4_floor_matrix)."""
+    """(bucket, nv) per vector in one vectorized pass — the one hyperplane
+    bucketing path (r6, guide §4.2: one matmul per batch instead of
+    n_planes JVM folds per row). Bit-identical to the oracle's strict
+    left-fold (_bucket_sql) and to `_norm_col`: the norm is the exact
+    fold; the bucket bit is sign(dot >= 0) where any |dot| within
+    _SIM_EPS of the boundary is recomputed with the exact fold (reorder
+    error bound ~1e-12 << _SIM_EPS, same argument as
+    _np_sim4_floor_matrix)."""
     from pyspark.sql.functions import pandas_udf
 
     planes = _PLANE_POOL[:, :n_planes].copy()            # (dim, n)
@@ -614,6 +608,9 @@ _IVF_CENTROID_MOD = 61
 _IVF_NPROBE = 2       # query probes its nprobe nearest cells
 _IVF_CELL_CAP = 4096  # belt-and-braces cap on the index side per cell
 _IVF_MAX_CELLS = 1 << 17  # centroid set stays broadcastable (~64 MB at dim 64)
+# the brute-force top-k collects its query set to the driver and broadcasts
+# it: the same driver-size envelope as the IVF centroid set
+_TOPK_MAX_QUERIES = _IVF_MAX_CELLS
 
 
 def ivf_centroid_mod(corpus_size: int) -> int:
@@ -869,7 +866,8 @@ def _neardup_edges(
     vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = emb.select(
         F.col("vec_id").alias("doc_id"), vec.alias("v"),
-        _bucket_col(vec, n_planes).alias("bucket"),
+        _np_bucket_norm_udf(n_planes)(F.col("embedding"))["bucket"].alias(
+            "bucket"),
     ).withColumn("nv", _norm_col(F.col("v"))).persist()
     rows = base.select(
         "doc_id",

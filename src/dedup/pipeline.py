@@ -7,6 +7,18 @@ This is the batch realization of the reference's protect lifecycle
     -> atomic data commit (TableStore snapshot, R7 phase 1)
     -> completion record with metrics (ledger.mark_completed, R7 phase 2)
 
+Stages (STAGES): `sha256` (exact dedup, representatives), `signatures`
+(ONE fused pandas-UDF pass over the representatives: MinHash bands and LSH
+candidates, SimHash blocks and Hamming candidates, and the verify stage's
+winnowed fingerprints, committed as nine index/edge tables), `verify`
+(screens + pairwise verification against the stored fingerprints) and
+`cluster` (connected components). The store-free composition
+(`near_dup_labels`, `run_dataframe_pipeline`) runs the same signature pass.
+A work_dir written when the signature channels were separate stages has no
+`signatures` ledger row, so its first resumed run recomputes that stage
+once; `verify` recomputes with it, because its old ledger row lists the
+`winnow_fps` snapshot the new stage replaces.
+
 Resume: a COMPLETED stage whose output snapshot still exists is skipped
 (duplicate call replays the stored result — DeduplicationContext.scala:163-167);
 TIMEOUT/EXPIRED claims are taken over via CAS (attempt_replacing, R9) and
@@ -41,7 +53,7 @@ from .stages import minhash_lsh as stage_minhash
 from .stages import simhash as stage_simhash
 from .stages import verify as stage_verify
 
-STAGES = ["sha256", "minhash_lsh", "simhash", "verify", "cluster"]
+STAGES = ["sha256", "signatures", "verify", "cluster"]
 
 # tables written hive-partitioned so incremental probes can prune the scan
 _PARTITIONED: dict[str, list[str]] = {
@@ -52,24 +64,21 @@ _PARTITIONED: dict[str, list[str]] = {
 }
 
 
-def run_dataframe_pipeline(files: DataFrame, config: DedupConfig) -> DataFrame:
-    """The whole pipeline as one lazy DataFrame composition — no checkpoint
-    store (bench / ad-hoc use; the resumable path is `Pipeline.run`).
+def near_dup_labels(
+    reps: DataFrame, config: DedupConfig, num_partitions: int | None = None
+) -> tuple[DataFrame, int]:
+    """Near-duplicate components over `reps(doc_id, content)` as one lazy
+    composition: ((doc_id, cluster_id) for every doc on an accepted edge,
+    CC rounds). Shared by `run_dataframe_pipeline` and the
+    `neardup_clusters_documents` query; `num_partitions` is the verify
+    stage's Python task count (None keeps the input partitioning).
 
-    `reps` feeds three downstream consumers (MinHash, SimHash, verify), so it
-    is persisted once instead of recomputing the scan + shuffle per consumer
-    — the in-memory analogue of the store-backed pipeline materializing it.
-    """
-    hashed = stage_exact.hash_content(files)
-    reps = stage_exact.representatives(hashed).persist()
-    exact_cl = stage_exact.exact_clusters(hashed)
-    # one fused UDF pass computes both signature channels AND the verify
-    # stage's LCS fingerprints (content crosses Arrow once, shingle hashing
-    # + normalization shared) — bit-identical to the separate
-    # minhash/simhash/fingerprint stages of the checkpointed Pipeline
+    One fused UDF pass computes both signature channels AND the verify
+    fingerprints (content crosses Arrow once, normalization and shingle
+    hashing shared); per-channel dedup is deferred to the union's single
+    (src, dst) dropDuplicates, the only shuffle the candidate set pays
+    (see pairs_from_buckets)."""
     sigs = stage_minhash.joint_signatures(reps, config, with_fp=True).persist()
-    # per-channel dedup deferred: the union's single dropDuplicates is the
-    # only (src, dst) shuffle the candidate set pays (see pairs_from_buckets)
     e_lsh = stage_minhash.candidate_pairs(
         stage_minhash.band_rows(sigs), config, dedup=False
     )
@@ -81,10 +90,27 @@ def run_dataframe_pipeline(files: DataFrame, config: DedupConfig) -> DataFrame:
         stage_verify.prepare_pairs(edges, reps, sigs, config,
                                    fps=sigs.select("doc_id", "fp", "nlen")),
         config,
-        num_partitions=config.shuffle_partitions,
+        num_partitions=num_partitions,
     ).where("accepted").persist()
-    labels, _ = stage_cluster.connected_components(verified)
+    return stage_cluster.connected_components(verified)
+
+
+def run_dataframe_pipeline(files: DataFrame, config: DedupConfig) -> DataFrame:
+    """The whole pipeline as one lazy DataFrame composition — no checkpoint
+    store (bench / ad-hoc use; the resumable path is `Pipeline.run`).
+
+    `reps` feeds two consumers (the fused signature pass and the verify
+    content join), so it is persisted once instead of recomputing the
+    scan + shuffle per consumer — the in-memory analogue of the
+    store-backed pipeline materializing it.
+    """
+    hashed = stage_exact.hash_content(files)
+    reps = stage_exact.representatives(hashed).persist()
+    exact_cl = stage_exact.exact_clusters(hashed)
+    labels, _ = near_dup_labels(reps, config, config.shuffle_partitions)
     return stage_cluster.assign_clusters(exact_cl, labels)
+
+
 _STAGE_KEY = "__stage__"  # one work unit per stage at this scale; a sharded
 # deployment uses one ledger id per partition range under the same context_id
 
@@ -123,8 +149,7 @@ class Pipeline:
         if not resume or not self.store.exists("files"):
             self.store.write(files, "files")
         self._stage("sha256", self._stage_sha256, resume)
-        self._stage("minhash_lsh", self._stage_minhash_lsh, resume)
-        self._stage("simhash", self._stage_simhash, resume)
+        self._stage("signatures", self._stage_signatures, resume)
         self._stage("verify", self._stage_verify, resume)
         self._stage("cluster", self._stage_cluster, resume)
         from .incremental import read_clusters
@@ -218,8 +243,8 @@ class Pipeline:
     def _append_lineage(self, stage: str, snapshots: dict[str, str], wall: float) -> None:
         inputs = {
             t: self.store.current_snapshot(t)
-            for t in ["files", "hashed", "reps", "signatures", "edges_lsh",
-                      "edges_simhash", "edges_verified"]
+            for t in ["files", "hashed", "reps", "signatures", "winnow_fps",
+                      "edges_lsh", "edges_simhash", "edges_verified"]
             if self.store.exists(t) and t not in snapshots
         }
         pdf = pd.DataFrame([
@@ -263,18 +288,24 @@ class Pipeline:
             "exact_clusters": stage_exact.exact_clusters(hashed),
         }
 
-    def _stage_minhash_lsh(self) -> dict[str, DataFrame]:
+    def _stage_signatures(self) -> dict[str, DataFrame]:
         reps = self.store.read(self.spark, "reps")
-        sigs = stage_minhash.signatures(reps, self.config)
-        # one pandas-UDF pass; `signatures` feeds the verify prefilter and
-        # `bands` IS the persistent LSH index (incremental batches probe it):
-        # stored hive-partitioned on pbucket (one file per pbucket via the
-        # repartition) so probes prune, with per-bucket stats alongside so
-        # probes can star-link hot buckets instead of joining them in full
-        sigs = sigs.persist()
+        # ONE pandas-UDF pass: both signature channels and the verify
+        # fingerprints are pure functions of reps, so one fused pass does
+        # less work than one stage per channel, even on a resume
+        sigs = stage_minhash.joint_signatures(
+            reps, self.config, with_fp=True
+        ).persist()
         bands = stage_minhash.band_rows(sigs)
-        out = {
+        sh = sigs.select("doc_id", "simhash", "blocks")
+        return {
+            # `signatures` feeds the verify prefilter
             "signatures": sigs.select("doc_id", "sig"),
+            # `bands` IS the persistent LSH index (incremental batches probe
+            # it): hive-partitioned on pbucket (one file per pbucket via the
+            # repartition) so probes prune, with per-bucket stats alongside
+            # so probes can star-link hot buckets instead of joining them in
+            # full
             "bands": stage_minhash.with_pbucket(bands).repartition(
                 F.col("pbucket")
             ),
@@ -286,17 +317,9 @@ class Pipeline:
                 F.col("pbucket")
             ),
             "edges_lsh": stage_minhash.candidate_pairs(bands, self.config),
-        }
-        return out
-
-    def _stage_simhash(self) -> dict[str, DataFrame]:
-        reps = self.store.read(self.spark, "reps")
-        sh = stage_simhash.simhashes(reps, self.config).persist()
-        return {
             "simhashes": sh,  # per-doc signature record (lineage/time travel)
             # the probeable Hamming-block index: exploded rows, hive-
-            # partitioned on sbucket so incremental probes prune the scan
-            # (same layout as `bands`/pbucket)
+            # partitioned on sbucket (same layout as `bands`/pbucket)
             "sim_blocks": stage_simhash.with_sbucket(
                 stage_simhash.block_rows(sh)
             ).repartition(F.col("sbucket")),
@@ -306,6 +329,12 @@ class Pipeline:
                 F.col("sbucket")
             ),
             "edges_simhash": stage_simhash.candidate_pairs(sh, self.config),
+            # fingerprints persist as their own index table: incremental
+            # ingests then fingerprint only their new reps (ADVICE r2). The
+            # table name names the scheme (winnowed), so a store written
+            # with another fingerprint scheme has no `winnow_fps` and ingest
+            # backfills it.
+            "winnow_fps": sigs.select("doc_id", "fp", "nlen"),
         }
 
     def _stage_verify(self) -> dict[str, DataFrame]:
@@ -316,18 +345,14 @@ class Pipeline:
             .unionByName(self.store.read(self.spark, "edges_simhash"))
             .dropDuplicates(["src", "dst"])
         )
-        # fingerprints persist as their own index table: incremental ingests
-        # then fingerprint only their new reps (ADVICE r2). The table name
-        # names the scheme (winnowed), so a store written with another
-        # fingerprint scheme has no `winnow_fps` and ingest backfills it.
-        fps = stage_verify.doc_fingerprints(reps, self.config).persist()
-        pairs = stage_verify.prepare_pairs(edges, reps, sigs, self.config,
-                                           fps=fps)
+        pairs = stage_verify.prepare_pairs(
+            edges, reps, sigs, self.config,
+            fps=self.store.read(self.spark, "winnow_fps"),
+        )
         verified = stage_verify.verify_edges(
             pairs, self.config, num_partitions=self.config.shuffle_partitions
         )
-        return {"edges_verified": verified.where("accepted"),
-                "winnow_fps": fps}
+        return {"edges_verified": verified.where("accepted")}
 
     def _stage_cluster(self) -> dict[str, DataFrame]:
         edges = self.store.read(self.spark, "edges_verified")

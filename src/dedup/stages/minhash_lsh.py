@@ -54,60 +54,29 @@ def drop_empty_normalized(reps: DataFrame, text_col: str = "content") -> DataFra
     return reps.where(F.trim(collapsed) != "")
 
 
-def signatures(reps: DataFrame, config: DedupConfig) -> DataFrame:
-    """(doc_id, sig: array<long>, bands: array<long>).
-
-    The UDF computes MinHash signatures for a whole Arrow batch at once
-    (matrix (num_perm, n_shingles) per doc, loop only over docs in the batch)
-    and folds each band's rows into a single 64-bit key kernel-side. The full
-    signature is kept alongside the band keys: the verify stage uses it for a
-    JVM-side estimated-Jaccard prefilter, so candidate pairs that are noise
-    never reach Python or drag content through a shuffle.
-    """
-    k = config.shingle_k
-    bands, rows = config.bands, config.rows_per_band
-    norm = config.normalize
-    a, b = K.make_minhash_coeffs(config.num_perm, config.seed)
-
-    @F.pandas_udf(T.StructType([
-        T.StructField("sig", T.ArrayType(T.LongType())),
-        T.StructField("bands", T.ArrayType(T.LongType())),
-    ]))
-    def sig_udf(texts: pd.Series) -> pd.DataFrame:
-        sigs = K.minhash_batch(texts.tolist(), k, a, b, normalize=norm)
-        bh = K.band_hashes(sigs, bands, rows)
-        return pd.DataFrame(
-            {"sig": list(sigs.view(np.int64)), "bands": list(bh)}
-        )
-
-    reps = ensure_parallelism(drop_empty_normalized(reps),
-                              config.shuffle_partitions)
-    return reps.select("doc_id", sig_udf("content").alias("s")).select(
-        "doc_id", F.col("s.sig").alias("sig"), F.col("s.bands").alias("bands")
-    )
-
-
 def joint_signatures(
     reps: DataFrame, config: DedupConfig, with_fp: bool = False
 ) -> DataFrame:
-    """(doc_id, sig, bands, simhash, blocks[, fp, nlen]) — BOTH signature
-    channels in a single pandas-UDF pass (kernels.minhash_simhash_batch):
-    content crosses Arrow once and the shared shingle hashing runs once,
-    bit-identical to running signatures() and simhash.simhashes()
-    separately.
+    """(doc_id, sig, bands, simhash, blocks[, fp, nlen]) — the ONE pandas
+    UDF that hashes content: both signature channels from a single pass
+    (kernels.minhash_simhash_batch, shared shingle hashing), and with
+    `with_fp=True` also the verify stage's winnowed LCS fingerprints
+    (kernels.winnow_fingerprints at L = lcs_min_chars) and normalized
+    lengths, sharing the normalization and the Arrow content hop.
 
-    `with_fp=True` additionally folds the verify stage's winnowed LCS
-    fingerprints (verify.doc_fingerprints) into the SAME pass: the
-    normalization and the Arrow content hop are shared, so the one-shot
-    composition paths read the corpus ONCE where they previously read it
-    twice (a full extra corpus scan at 100 TB). Both passes call the one
-    kernel, kernels.winnow_fingerprints; the outputs' equality is pinned
-    by test.
+    `sig` is the full MinHash signature (the verify stage's JVM-side
+    estimated-Jaccard prefilter folds over it, so noise pairs never reach
+    Python or drag content through a shuffle); `bands` folds each band's
+    rows into one 64-bit key kernel-side; `blocks` are the SimHash's
+    pigeonhole blocks. Docs whose normalized text is empty are dropped
+    (drop_empty_normalized): they have no shingles and can never be a
+    candidate endpoint.
 
-    Used by the one-shot composition paths (bench pipeline, incremental
-    ingest, query channels); the resumable Pipeline keeps minhash_lsh,
-    simhash and fingerprints as separate checkpointed stages for per-stage
-    resume granularity, at the cost of the extra content passes."""
+    Every caller projects the columns it needs: the checkpointed
+    Pipeline's `signatures` stage and the one-shot compositions pass
+    `with_fp=True` (all three parts are pure functions of the reps, so one
+    fused pass does less work than one per part, even on a resume); the
+    candidate-only queries pass False."""
     k = config.shingle_k
     bands, rows = config.bands, config.rows_per_band
     norm = config.normalize

@@ -2,7 +2,9 @@
 
 A second, independent near-dup channel (union'd with LSH candidates before
 verification — SURVEY.md section 2.2 set-ops row): 64-bit SimHash per content,
-candidates = pairs within Hamming distance <= config.hamming_radius.
+candidates = pairs within Hamming distance <= config.hamming_radius. The
+per-doc SimHash and its blocks come from the fused signature pass
+(minhash_lsh.joint_signatures); this module indexes and pairs them.
 
 Candidate generation is the pigeonhole construction: split 64 bits into
 (radius+1) blocks; any two hashes within the radius agree exactly on at least
@@ -19,37 +21,10 @@ near-identical, so pivot edges pass).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import DedupConfig
-from .. import kernels as K
-
-
-def simhashes(reps: DataFrame, config: DedupConfig) -> DataFrame:
-    """(doc_id, simhash: long, blocks: array<long>)."""
-    k = config.shingle_k
-    norm = config.normalize
-    n_blocks = config.hamming_radius + 1
-
-    @F.pandas_udf(T.StructType([
-        T.StructField("simhash", T.LongType()),
-        T.StructField("blocks", T.ArrayType(T.LongType())),
-    ]))
-    def simhash_udf(texts: pd.Series) -> pd.DataFrame:
-        sh = K.simhash_batch(texts.tolist(), k, normalize=norm)
-        blocks = K.hamming_blocks(sh, n_blocks)
-        return pd.DataFrame({"simhash": sh, "blocks": list(blocks)})
-
-    from .minhash_lsh import drop_empty_normalized, ensure_parallelism
-
-    reps = ensure_parallelism(drop_empty_normalized(reps),
-                              config.shuffle_partitions)
-    return reps.select("doc_id", simhash_udf("content").alias("s")).select(
-        "doc_id", F.col("s.simhash").alias("simhash"), F.col("s.blocks").alias("blocks")
-    )
 
 
 def block_rows(simhash_df: DataFrame) -> DataFrame:

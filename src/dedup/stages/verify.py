@@ -37,7 +37,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import DedupConfig
 from .. import kernels as K
@@ -47,40 +46,12 @@ _OUT_SCHEMA = (
 )
 
 
-def doc_fingerprints(reps: DataFrame, config: DedupConfig) -> DataFrame:
-    """(doc_id, fp: array<long>, nlen: int) — winnowed fingerprints of the
-    NORMALIZED text (kernels.winnow_fingerprints at L = lcs_min_chars) for
-    the pre-shuffle LCS screen. Two docs sharing a run of >= lcs_min_chars
-    chars always share a fingerprint. One O(n)-per-doc pandas pass — per
-    DOC, never per pair."""
-    width = config.lcs_min_chars
-    norm = config.normalize
-
-    @F.pandas_udf(T.StructType([
-        T.StructField("fp", T.ArrayType(T.LongType())),
-        T.StructField("nlen", T.IntegerType()),
-    ]))
-    def fp_udf(texts: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        ts = [K.normalize_text(t) for t in texts] if norm else texts.tolist()
-        return pd.DataFrame({
-            "fp": [K.winnow_fingerprints(t, width).view(np.int64).tolist()
-                   for t in ts],
-            "nlen": [len(t) for t in ts],
-        })
-
-    return reps.select("doc_id", fp_udf("content").alias("f")).select(
-        "doc_id", F.col("f.fp").alias("fp"), F.col("f.nlen").alias("nlen")
-    )
-
-
 def prepare_pairs(
     edges: DataFrame,
     reps: DataFrame,
     sig_df: DataFrame,
     config: DedupConfig,
-    fps: DataFrame | None = None,
+    fps: DataFrame,
 ) -> DataFrame:
     """Candidate pairs with contents attached, triply pruned BEFORE any
     content bytes move — (src, dst, est_jaccard, content_src, content_dst):
@@ -91,11 +62,16 @@ def prepare_pairs(
        branch (< jaccard_floor_gate), a pair whose LCS threshold exceeds
        the shorter doc's length is dropped outright;
     3. fingerprint screen: for the same Jaccard-impossible band, the
-       winnowed fingerprints (doc_fingerprints) must overlap. The LCS
-       threshold is never below lcs_min_chars, and a common run of that
-       length always yields a shared winnowed fingerprint, so the screen
-       never drops a pair the LCS branch would accept; hash collisions
-       only keep extra pairs.
+       winnowed fingerprints must overlap. The LCS threshold is never
+       below lcs_min_chars, and a common run of that length always yields
+       a shared winnowed fingerprint, so the screen never drops a pair the
+       LCS branch would accept; hash collisions only keep extra pairs.
+
+    `fps(doc_id, fp, nlen)` holds the winnowed fingerprints and normalized
+    lengths: the fused signature pass's columns
+    (minhash_lsh.joint_signatures(with_fp=True)) or the persisted
+    `winnow_fps` index the checkpointed and incremental paths read, so no
+    doc is fingerprinted twice.
 
     Only SURVIVORS join against the content table. The screen's own
     exchange carries each side's signature plus its fingerprints, about
@@ -103,11 +79,6 @@ def prepare_pairs(
     lcs_min_chars // 2 + 1): ~0.5 B per char at lcs_min_chars=60, ~110
     fingerprints for a 1.8 KB code file. Rejected pairs never move content.
     """
-    if fps is None:
-        # one pandas pass over the docs; persistent-index callers (the
-        # store-backed pipeline, incremental ingest) pass precomputed fps
-        # so previously-fingerprinted docs are never re-read
-        fps = doc_fingerprints(reps, config)
     light = sig_df.select("doc_id", "sig").join(fps, "doc_id")
     n = float(config.num_perm)
     est = (

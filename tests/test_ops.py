@@ -262,6 +262,19 @@ def test_topk_cosine_rejects_unpackable_vec_id(spark, tmp_path):
         embedding_topk_cosine(spark, d).collect()
 
 
+def test_topk_cosine_bounds_the_query_collect(spark, tmp_path, monkeypatch):
+    """The query set is sized from the parquet footer before it is collected
+    to the driver; a set past _TOPK_MAX_QUERIES raises ValueError."""
+    from dedup.ops import similarity
+
+    d = _embeddings_dir(tmp_path, list(range(200)))  # 200 // 50 = 4 queries
+    monkeypatch.setattr(similarity, "_TOPK_MAX_QUERIES", 3)
+    with pytest.raises(ValueError, match="_TOPK_MAX_QUERIES=3"):
+        similarity.embedding_topk_cosine(spark, d)
+    monkeypatch.setattr(similarity, "_TOPK_MAX_QUERIES", 4)
+    assert similarity.embedding_topk_cosine(spark, d).count() > 0
+
+
 def test_ivf_rejects_unpackable_centroid_id(spark, tmp_path):
     """A centroid id past the key packing raises ValueError on the driver,
     before the probe packs it."""

@@ -118,6 +118,14 @@ def test_all_stages_completed(clusters):
     for s in STAGES:
         assert pipe.ledger.status("__stage__", s, CFG.max_processing_time_s,
                                   __import__("time").time()) is Status.COMPLETED
+    # one fused stage commits both signature channels' indexes and edges
+    # and the verify fingerprints
+    by_name = {r.name: r for r in pipe.results}
+    assert [r.name for r in pipe.results] == STAGES
+    assert set(by_name["signatures"].snapshots) == {
+        "signatures", "bands", "bands_stats", "edges_lsh", "simhashes",
+        "sim_blocks", "sim_stats", "edges_simhash", "winnow_fps",
+    }
 
 
 def test_rerun_is_noop(spark, corpus, run_dir, clusters):
@@ -140,10 +148,10 @@ def test_rerun_is_noop(spark, corpus, run_dir, clusters):
 
 
 def test_resume_after_simulated_failure(spark, corpus, run_dir, clusters):
-    """Kill after stage 3 (simulated: delete ledger rows for later stages),
+    """Kill after stage 2 (simulated: delete ledger rows for later stages),
     re-run, final clusters byte-identical; earlier stages untouched."""
     cl_before, first = clusters
-    early = ["sha256", "minhash_lsh", "simhash"]
+    early = ["sha256", "signatures"]
     snaps_early = {t: first.store.current_snapshot(t)
                    for t in ["hashed", "reps", "exact_clusters",
                              "edges_lsh", "edges_simhash"]}
@@ -232,9 +240,9 @@ def test_metrics_ride_the_write_no_rescan(spark, corpus, tmp_path):
 
 
 def test_one_shot_pipeline_matches_checkpointed(spark, tmp_path):
-    """run_dataframe_pipeline (fused signature pass, no store) and
-    Pipeline.run (separate checkpointed minhash/simhash stages) must assign
-    IDENTICAL clusters — the fused kernel is a physical optimization only."""
+    """run_dataframe_pipeline (no store) and Pipeline.run (checkpointed
+    stages, verify fingerprints read back from the store) must assign
+    IDENTICAL clusters — the store is a checkpoint only."""
     corpus = generate_corpus(400, seed=5)
     files = spark.createDataFrame(corpus.files)
     from dedup.pipeline import Pipeline, run_dataframe_pipeline

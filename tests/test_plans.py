@@ -59,7 +59,7 @@ def test_bucket_pairs_use_partial_aggregation(spark, files):
     exchange — the shuffle carries one row per distinct bucket."""
     hashed = SE.hash_content(files)
     reps = SE.representatives(hashed)
-    sigs = SM.signatures(reps, CFG)
+    sigs = SM.joint_signatures(reps, CFG).select("doc_id", "sig", "bands")
     plan = _plan(SM.candidate_pairs(SM.band_rows(sigs), CFG))
     assert "partial_count" in plan or "partial count" in plan.lower()
 

@@ -74,7 +74,7 @@ def test_spark_submit_pyfiles_resume_byte_identical(tmp_path):
     s1 = _submit(zpath, work)
     assert s1["files"] == 300
     assert [st["name"] for st in s1["stages"]] == [
-        "sha256", "minhash_lsh", "simhash", "verify", "cluster"
+        "sha256", "signatures", "verify", "cluster"
     ]
     assert all(not st["skipped"] for st in s1["stages"])
     assert s1["duplicates"] > 0  # the planted clones were found

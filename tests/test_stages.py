@@ -89,7 +89,7 @@ def reps(hashed):
 
 
 def test_signature_udf_matches_kernel(spark, reps):
-    sig_df = SM.signatures(reps, CFG)
+    sig_df = SM.joint_signatures(reps, CFG).select("doc_id", "sig", "bands")
     got = {r["doc_id"]: r["bands"] for r in sig_df.collect()}
     sample = reps.limit(10).select("doc_id", "content").collect()
     a, b = K.make_minhash_coeffs(CFG.num_perm, CFG.seed)
@@ -101,7 +101,7 @@ def test_signature_udf_matches_kernel(spark, reps):
 
 def test_lsh_candidates_cover_high_jaccard_pairs(spark, reps, corpus):
     """Every type2 rep pair (J >= ~0.8) must appear as an LSH candidate."""
-    sig_df = SM.signatures(reps, CFG)
+    sig_df = SM.joint_signatures(reps, CFG).select("doc_id", "sig", "bands")
     edges = SM.candidate_pairs(SM.band_rows(sig_df), CFG).toPandas()
     edge_set = {(min(s, d), max(s, d)) for s, d in zip(edges.src, edges.dst)}
 
@@ -199,7 +199,7 @@ def test_deferred_dedup_edge_set_identical(spark, reps):
 def test_mega_bucket_star_capped(spark, reps):
     """Boilerplate family must produce linear (not quadratic) edges."""
     cfg = DedupConfig(bucket_cap=8, shuffle_partitions=8)
-    sig_df = SM.signatures(reps, cfg)
+    sig_df = SM.joint_signatures(reps, cfg).select("doc_id", "sig", "bands")
     edges = SM.candidate_pairs(SM.band_rows(sig_df), cfg)
     n_reps = reps.count()
     # with cap 8, total edges must stay far below quadratic in family size
@@ -211,7 +211,7 @@ def test_mega_bucket_star_capped(spark, reps):
 # ---------------------------------------------------------------------------
 
 def test_simhash_candidates_within_radius(spark, reps):
-    sh = SS.simhashes(reps, CFG)
+    sh = SM.joint_signatures(reps, CFG).select("doc_id", "simhash", "blocks")
     sh.cache().count()
     edges = SS.candidate_pairs(sh, CFG)
     hm = {r["doc_id"]: r["simhash"] for r in sh.collect()}
@@ -335,8 +335,9 @@ def test_lcs_band_pairs_survive_prefilter(spark):
     edges = spark.createDataFrame(
         [(r[0], r[1]) for r in rows], "src long, dst long"
     )
-    sig_df = SM.signatures(reps, cfg)
-    pairs = SV.prepare_pairs(edges, reps, sig_df, cfg)
+    sig_df = SM.joint_signatures(reps, cfg, with_fp=True)
+    pairs = SV.prepare_pairs(edges, reps, sig_df, cfg,
+                             fps=sig_df.select("doc_id", "fp", "nlen"))
     kept = {(r["src"], r["dst"]) for r in pairs.select("src", "dst").collect()}
     assert kept == {(r[0], r[1]) for r in rows}, "prefilter dropped LCS-band pairs"
 
@@ -401,11 +402,12 @@ def test_fp_screen_keeps_lcs_pairs_drops_impossible(spark):
     assert cfg.prefilter_min_est_jaccard <= est < cfg.jaccard_floor_gate()
     assert K.longest_common_substring(rows[-2][1], rows[-1][1]) < 60
     reps = spark.createDataFrame(rows, "doc_id long, content string")
-    sigs = SM.signatures(reps, cfg)
+    sigs = SM.joint_signatures(reps, cfg, with_fp=True)
+    fps = sigs.select("doc_id", "fp", "nlen")
     edges_df = spark.createDataFrame(edges, "src long, dst long")
     kept = {
         (r["src"], r["dst"])
-        for r in SV.prepare_pairs(edges_df, reps, sigs, cfg)
+        for r in SV.prepare_pairs(edges_df, reps, sigs, cfg, fps=fps)
         .select("src", "dst").collect()
     }
     assert (0, 1) in kept, "shared-block pair was screened out"
@@ -416,7 +418,7 @@ def test_fp_screen_keeps_lcs_pairs_drops_impossible(spark):
     out = {
         (r["src"], r["dst"]): r["accepted"]
         for r in SV.verify_edges(
-            SV.prepare_pairs(edges_df, reps, sigs, cfg), cfg
+            SV.prepare_pairs(edges_df, reps, sigs, cfg, fps=fps), cfg
         ).collect()
     }
     assert out[(0, 1)] is True
@@ -458,11 +460,10 @@ def test_cc_mega_star_and_broom_skew(spark):
 
 
 def test_joint_signatures_with_fp_bit_identical(spark):
-    """joint_signatures(with_fp=True) is a physical fusion only: every
-    signature column equals the with_fp=False pass, and (fp, nlen) equal
-    verify.doc_fingerprints row-for-row — the fused pass must never drift
-    from the canonical per-stage outputs it replaces (it exists purely so
-    the one-shot paths read the corpus ONCE instead of twice)."""
+    """joint_signatures(with_fp=True) adds the verify fingerprints without
+    touching the signature columns: every signature column equals the
+    with_fp=False pass, and (fp, nlen) equal the winnowing kernel on the
+    normalized text, row for row."""
     cfg = DedupConfig(shuffle_partitions=4)
     c = generate_corpus(120, seed=31)
     files = spark.createDataFrame(c.files)
@@ -480,11 +481,14 @@ def test_joint_signatures_with_fp_bit_identical(spark):
             f["sig"], f["bands"], f["simhash"], f["blocks"]
         ), did
 
-    fps = {
-        r["doc_id"]: r for r in SV.doc_fingerprints(reps, cfg).collect()
-        if r["nlen"] > 0  # fused pass runs after drop_empty_normalized
+    contents = {
+        r["doc_id"]: r["content"]
+        for r in reps.select("doc_id", "content").collect()
     }
-    assert set(fps) == set(fused)
-    for did, p in fps.items():
-        f = fused[did]
-        assert (p["fp"], p["nlen"]) == (f["fp"], f["nlen"]), did
+    # the pass runs after drop_empty_normalized
+    nonempty = {d for d, t in contents.items() if K.normalize_text(t)}
+    assert set(fused) == nonempty
+    for did, f in fused.items():
+        t = K.normalize_text(contents[did])
+        fp = K.winnow_fingerprints(t, cfg.lcs_min_chars).view("int64")
+        assert (f["fp"], f["nlen"]) == (fp.tolist(), len(t)), did
