@@ -14,6 +14,16 @@ from pyspark.sql import SparkSession
 from .config import DedupConfig, DEFAULT_CONFIG
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory, at most 48g. In local mode the
+    driver JVM hosts every executor, and the JVM grows its heap toward the
+    cap rather than collecting: a cap above physical memory (48g on a 16 GB
+    host) let a long test session reach ~15 GB resident and be killed by
+    the host's OOM killer."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(48, phys // 2**31))}g"
+
+
 def build_session(
     app_name: str = "dedup",
     master: str | None = None,
@@ -41,7 +51,8 @@ def build_session(
         )
 
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[32]")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                _default_driver_mem())
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
