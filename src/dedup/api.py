@@ -94,7 +94,7 @@ class DeduplicationContext:
         spark = self.engine.spark
         if self.engine.store.exists(self._table):
             df = self.engine.store.read(spark, self._table)
-            if kbuckets is not None and "kbucket" in df.columns:
+            if kbuckets is not None:
                 # partition-pruned scan: latest-wins per id is closed under
                 # kbucket (all rows of one id share one bucket), so pruning
                 # before the window is semantics-preserving
@@ -148,10 +148,9 @@ class DeduplicationContext:
             if not store.exists(self._table):
                 return
             snap = store.current_snapshot(self._table)
-            folded = self._latest_rows()
-            if "kbucket" not in folded.columns:  # pre-partitioning ledger
-                folded = _with_kbucket(folded)
-            update = store.stage(folded, self._table, "replace", ["kbucket"])
+            update = store.stage(
+                self._latest_rows(), self._table, "replace", ["kbucket"]
+            )
             try:
                 store.commit_many(
                     {self._table: update}, expected={self._table: snap}
@@ -229,19 +228,7 @@ class DeduplicationContext:
             ).alias("expires_on"),
             "result",
         ))
-        if self.engine.store.exists(self._table):
-            # one-time migration (ADVICE r3): a ledger created before kbucket
-            # partitioning has segments without the column; appending a
-            # partitioned segment would poison every later unionByName read.
-            # compact()'s legacy branch folds + rewrites WITH kbucket first.
-            legacy = "kbucket" not in self.engine.store.read(
-                self.engine.spark, self._table
-            ).columns
-            if legacy:
-                self.compact()
-            self.engine.store.append(new_rows, self._table, ["kbucket"])
-        else:
-            self.engine.store.write(new_rows, self._table, ["kbucket"])
+        self.engine.store.append(new_rows, self._table, ["kbucket"])
         out = computed.withColumn("is_duplicate", F.lit(False)).unionByName(
             replayed
         )

@@ -32,11 +32,11 @@ Crash safety (ADVICE r1, high): every table change of an ingest — index
 appends, stats, clusters — publishes in ONE atomic catalog CAS
 (TableStore.commit_many), so the re-ingest guard (left_anti on `hashed`)
 can never observe a half-committed batch. Concurrency (ADVICE r2): the
-replace-mode payloads (merged stats, recomputed clusters) are guarded by
-the snapshots they were derived from — a racing ingest that commits first
-makes this one fail with StaleReplaceError rather than silently discarding
-the winner's merge; re-running the loser re-reads current state under its
-ledger protection. The only crash window left is
+derived payloads (merged stats deltas, recomputed cluster deltas) are
+guarded by the snapshots they were derived from — a racing ingest that
+commits first makes this one fail with StaleReplaceError rather than
+silently discarding the winner's merge; re-running the loser re-reads
+current state under its ledger protection. The only crash window left is
 between the catalog commit and the ledger completion record; a retry then
 recomputes against an index that already contains the batch, which is a
 pure no-op (the guard empties the batch, appends are empty, clusters
@@ -87,8 +87,7 @@ def _read_latest(
 ) -> DataFrame:
     """Resolved view of a log-structured table: latest `_v` wins per key
     tuple (a delta segment supersedes earlier rows for the keys it
-    rewrote). Pre-log tables (no `_v` column) read through unchanged.
-    `prune` (a DataFrame->DataFrame filter) is applied BEFORE the
+    rewrote). `prune` (a DataFrame->DataFrame filter) is applied BEFORE the
     resolution window — safe whenever the predicate is a function of the
     key (every version of a key shares it, e.g. a bucket partition
     column), and it is what keeps the window shuffle bounded to the
@@ -98,8 +97,6 @@ def _read_latest(
     df = store.read(spark, table)
     if prune is not None:
         df = prune(df)
-    if "_v" not in df.columns:
-        return df
     w = Window.partitionBy(*keys).orderBy(F.desc("_v"))
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -170,34 +167,20 @@ def _merge_sim_stats(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def _stats_stage(
-    is_log: bool,
+def _stats_delta(
     old_touched: DataFrame,
-    raw: DataFrame,
     new: DataFrame,
     merge_fn,
     bucket_fn,
+    bucket_col: str,
     v_next: int,
-    table: str,
-):
-    """(df, table, mode) for staging a stats upsert: log layout appends a
-    touched-buckets-only delta at `_v`=v_next; a legacy full-table layout
-    (no _v) migrates once via a full rewrite at the partitioned layout."""
-    if is_log:
-        delta = bucket_fn(merge_fn(old_touched, new)).withColumn(
-            "_v", F.lit(v_next).cast("int")
-        )
-        return _bucket_partitioned(delta), table, "append"
-    legacy_cols = [c for c in raw.columns if c not in ("pbucket", "sbucket")]
-    full = bucket_fn(merge_fn(raw.select(*legacy_cols), new)).withColumn(
-        "_v", F.lit(0).cast("int")
+) -> DataFrame:
+    """The touched-buckets-only upsert delta of a stats log, stamped
+    `_v`=v_next and laid out one file per bucket partition."""
+    delta = bucket_fn(merge_fn(old_touched, new)).withColumn(
+        "_v", F.lit(v_next).cast("int")
     )
-    return _bucket_partitioned(full), table, "replace"
-
-
-def _bucket_partitioned(df: DataFrame) -> DataFrame:
-    bucket_col = "pbucket" if "pbucket" in df.columns else "sbucket"
-    return df.repartition(F.col(bucket_col))
+    return delta.repartition(F.col(bucket_col))
 
 
 def probe_band_index(
@@ -296,7 +279,6 @@ def ingest_batch(
         hashed_old = store.read(spark, "hashed")
         reps_old = store.read(spark, "reps")
         sigs_old = store.read(spark, "signatures")
-        clusters_raw = store.read(spark, "clusters")
         clusters_old = read_clusters(spark, store)
 
         # -- 1. hash; drop re-ingested natural keys ----------------------------
@@ -341,12 +323,9 @@ def ingest_batch(
         # only those partitions, then keep just the buckets this batch hits —
         # the probe input AND the merge's old side are both O(batch x bands)
         new_band_stats = _p(stage_minhash.band_stats(bands_new))
-        band_stats_raw = store.read(spark, "bands_stats")
-        bs_is_log = "_v" in band_stats_raw.columns
         band_stats_res = _read_latest(
             spark, store, "bands_stats", ["band_id", "band_hash"],
-            prune=(lambda df: df.where(F.col("pbucket").isin(touched)))
-            if bs_is_log else None,
+            prune=lambda df: df.where(F.col("pbucket").isin(touched)),
         )
         band_stats_old = _p(
             band_stats_res.join(
@@ -360,38 +339,20 @@ def ingest_batch(
         nn_sim = stage_simhash.candidate_pairs(sims_new, config, dedup=False)
 
         # partition-pruned read, mirroring the bands probe above: only the
-        # sbuckets the batch touches reach the sim_blocks scan (the round-2
-        # probe read the whole simhashes table per ingest — O(index) per batch)
+        # sbuckets the batch touches reach the sim_blocks scan
         blocks_new = _p(stage_simhash.with_sbucket(
             stage_simhash.block_rows(sims_new)
         ))
         touched_s = [
             int(r[0]) for r in blocks_new.select("sbucket").distinct().collect()
         ]
-        if store.exists("sim_blocks"):
-            sim_blocks_old = store.read(spark, "sim_blocks").where(
-                F.col("sbucket").isin(touched_s)
-            )
-            sb_stage = ("append", blocks_new.repartition(F.col("sbucket")))
-        else:
-            # backfill (ADVICE r3): a work dir whose simhash stage completed
-            # before the sim_blocks index existed derives it ONCE from the
-            # committed simhashes table, mirroring the winnow_fps backfill
-            sb_all = _p(stage_simhash.with_sbucket(
-                stage_simhash.block_rows(store.read(spark, "simhashes"))
-            ))
-            sim_blocks_old = sb_all.where(F.col("sbucket").isin(touched_s))
-            sb_stage = (
-                "replace",
-                sb_all.unionByName(blocks_new).repartition(F.col("sbucket")),
-            )
+        sim_blocks_old = store.read(spark, "sim_blocks").where(
+            F.col("sbucket").isin(touched_s)
+        )
         new_sim_stats = _p(stage_simhash.block_stats(sims_new))
-        sim_stats_raw = store.read(spark, "sim_stats")
-        ss_is_log = "_v" in sim_stats_raw.columns
         sim_stats_res = _read_latest(
             spark, store, "sim_stats", ["block_id", "block_val"],
-            prune=(lambda df: df.where(F.col("sbucket").isin(touched_s)))
-            if ss_is_log else None,
+            prune=lambda df: df.where(F.col("sbucket").isin(touched_s)),
         )
         sim_stats_old = _p(
             sim_stats_res.join(
@@ -414,26 +375,13 @@ def ingest_batch(
         sigs_all = sigs_old.select("doc_id", "sig").unionByName(
             sigs_new.select("doc_id", "sig")
         )
-        # fingerprints are persisted alongside the other indexes so each ingest
-        # fingerprints ONLY its new reps (ADVICE r2); a store without a
-        # `winnow_fps` table (written before it existed, or with the older
-        # sampled `fingerprints`, whose hashes never match winnowed ones) is
-        # backfilled once from the fused signature pass over the old reps,
-        # then the table grows by appends. The new reps' fingerprints ride
-        # the batch's own fused pass (with_fp=True): no second content scan
-        # of the batch. Docs with empty normalized text get no row either
-        # way: they have no signatures, so they are never a pair endpoint.
+        # fingerprints are persisted alongside the other indexes, so each
+        # ingest fingerprints ONLY its new reps (ADVICE r2), inside the
+        # batch's own fused pass (with_fp=True). Docs with empty normalized
+        # text get no row: they have no signatures, so they are never a pair
+        # endpoint.
         fps_new = joint_new.select("doc_id", "fp", "nlen")
-        if store.exists("winnow_fps"):
-            fps_all = store.read(spark, "winnow_fps").unionByName(fps_new)
-            fp_stage = ("append", fps_new)
-        else:
-            fps_all = _p(
-                stage_minhash.joint_signatures(reps_old, config, with_fp=True)
-                .select("doc_id", "fp", "nlen")
-                .unionByName(fps_new)
-            )
-            fp_stage = ("replace", fps_all)
+        fps_all = store.read(spark, "winnow_fps").unionByName(fps_new)
         verified = _p(stage_verify.verify_edges(
             stage_verify.prepare_pairs(cand, reps_all, sigs_all, config,
                                        fps=fps_all),
@@ -514,19 +462,11 @@ def ingest_batch(
                 F.when(F.col("n_shas") >= 2, "near").otherwise("exact").alias("method"),
             )
         )
-        # delta stamped one version above every committed segment; pre-log
-        # stores (no _v) migrate once via a full rewrite at _v=0 + this delta
+        # delta stamped one version above every committed segment
         v_next = len(store.paths("clusters"))
         clusters_delta = clusters_delta.withColumn(
             "_v", F.lit(v_next).cast("int")
         )
-        if "_v" in clusters_raw.columns:
-            cl_stage = ("append", clusters_delta)
-        else:
-            unchanged = clusters_old.join(
-                clusters_delta.select("doc_id"), "doc_id", "left_anti"
-            ).withColumn("_v", F.lit(0).cast("int"))
-            cl_stage = ("replace", unchanged.unionByName(clusters_delta))
 
         # -- 8. stage everything, publish in ONE atomic catalog CAS ------------
         updates = {
@@ -543,36 +483,31 @@ def ingest_batch(
                 bands_new_pb.repartition(F.col("pbucket")), "bands", "append",
                 ["pbucket"],
             ),
-            "simhashes": store.stage(
-                sims_new.select("doc_id", "simhash", "blocks"), "simhashes",
-                "append",
-            ),
             "sim_blocks": store.stage(
-                sb_stage[1], "sim_blocks", sb_stage[0], ["sbucket"],
+                blocks_new.repartition(F.col("sbucket")), "sim_blocks",
+                "append", ["sbucket"],
             ),
             # stats are log-structured upserts (same treatment as clusters):
             # the delta holds ONLY the buckets this batch touched, appended at
-            # the next _v; latest-wins reads supersede the old rows. A legacy
-            # full-table layout (no _v) migrates once via a full rewrite —
-            # appending a partitioned segment to it would poison unionByName.
+            # the next _v; latest-wins reads supersede the old rows
             "bands_stats": store.stage(
-                *_stats_stage(
-                    bs_is_log, band_stats_old, band_stats_raw, new_band_stats,
-                    _merge_band_stats, stage_minhash.with_pbucket,
-                    len(store.paths("bands_stats")), "bands_stats",
+                _stats_delta(
+                    band_stats_old, new_band_stats, _merge_band_stats,
+                    stage_minhash.with_pbucket, "pbucket",
+                    len(store.paths("bands_stats")),
                 ),
-                ["pbucket"],
+                "bands_stats", "append", ["pbucket"],
             ),
             "sim_stats": store.stage(
-                *_stats_stage(
-                    ss_is_log, sim_stats_old, sim_stats_raw, new_sim_stats,
-                    _merge_sim_stats, stage_simhash.with_sbucket,
-                    len(store.paths("sim_stats")), "sim_stats",
+                _stats_delta(
+                    sim_stats_old, new_sim_stats, _merge_sim_stats,
+                    stage_simhash.with_sbucket, "sbucket",
+                    len(store.paths("sim_stats")),
                 ),
-                ["sbucket"],
+                "sim_stats", "append", ["sbucket"],
             ),
-            "clusters": store.stage(cl_stage[1], "clusters", cl_stage[0]),
-            "winnow_fps": store.stage(fp_stage[1], "winnow_fps", fp_stage[0]),
+            "clusters": store.stage(clusters_delta, "clusters", "append"),
+            "winnow_fps": store.stage(fps_new, "winnow_fps", "append"),
         }
         store.commit_many(updates, expected=replace_base)
         snapshots = {t: store.current_snapshot(t) for t in updates}

@@ -158,7 +158,11 @@ def minhash_band_ctes(num_perm: int, bands: int, rows_per_band: int,
         for p in range(num_perm)
     )
     f3, f2, f1 = (pow(_FNV, e, _MOD) for e in (3, 2, 1))
-    assert rows_per_band == 4, "band fold below is unrolled for rows_per_band=4"
+    if rows_per_band != 4:
+        raise ValueError(
+            f"rows_per_band={rows_per_band}: the band fold below is unrolled "
+            "for rows_per_band=4"
+        )
     # limbs of each shingle hash precomputed ONCE, before the perm fan-out —
     # the cross join below is |shingles| x num_perm rows, the hot loop here.
     # min(prod) // 2^32 == min(prod // 2^32): floor division is monotone, so

@@ -10,14 +10,16 @@ This is the batch realization of the reference's protect lifecycle
 Stages (STAGES): `sha256` (exact dedup, representatives), `signatures`
 (ONE fused pandas-UDF pass over the representatives: MinHash bands and LSH
 candidates, SimHash blocks and Hamming candidates, and the verify stage's
-winnowed fingerprints, committed as nine index/edge tables), `verify`
+winnowed fingerprints, committed as eight index/edge tables), `verify`
 (screens + pairwise verification against the stored fingerprints) and
 `cluster` (connected components). The store-free composition
 (`near_dup_labels`, `run_dataframe_pipeline`) runs the same signature pass.
-A work_dir written when the signature channels were separate stages has no
-`signatures` ledger row, so its first resumed run recomputes that stage
-once; `verify` recomputes with it, because its old ledger row lists the
-`winnow_fps` snapshot the new stage replaces.
+
+Store format: the work_dir's TableStore stamps `storage.STORE_FORMAT` into
+every catalog version, and any change to a table's layout increments it.
+A work_dir written at another format is refused with StoreFormatError when
+it is opened; rebuild it with `jobs/run_pipeline.py --input <files>
+--work-dir <fresh dir>`. No stage migrates an older layout.
 
 Resume: a COMPLETED stage whose output snapshot still exists is skipped
 (duplicate call replays the stored result — DeduplicationContext.scala:163-167);
@@ -77,7 +79,8 @@ def near_dup_labels(
     fingerprints (content crosses Arrow once, normalization and shingle
     hashing shared); per-channel dedup is deferred to the union's single
     (src, dst) dropDuplicates, the only shuffle the candidate set pays
-    (see pairs_from_buckets)."""
+    (see pairs_from_buckets). Both persisted inputs of CC are released
+    once it returns: its eager checkpoint has cut their lineage."""
     sigs = stage_minhash.joint_signatures(reps, config, with_fp=True).persist()
     e_lsh = stage_minhash.candidate_pairs(
         stage_minhash.band_rows(sigs), config, dedup=False
@@ -92,7 +95,10 @@ def near_dup_labels(
         config,
         num_partitions=num_partitions,
     ).where("accepted").persist()
-    return stage_cluster.connected_components(verified)
+    labels, rounds = stage_cluster.connected_components(verified)
+    sigs.unpersist()
+    verified.unpersist()
+    return labels, rounds
 
 
 def run_dataframe_pipeline(files: DataFrame, config: DedupConfig) -> DataFrame:
@@ -102,12 +108,14 @@ def run_dataframe_pipeline(files: DataFrame, config: DedupConfig) -> DataFrame:
     `reps` feeds two consumers (the fused signature pass and the verify
     content join), so it is persisted once instead of recomputing the
     scan + shuffle per consumer — the in-memory analogue of the
-    store-backed pipeline materializing it.
+    store-backed pipeline materializing it; it is released once
+    `near_dup_labels` has run connected components.
     """
     hashed = stage_exact.hash_content(files)
     reps = stage_exact.representatives(hashed).persist()
     exact_cl = stage_exact.exact_clusters(hashed)
     labels, _ = near_dup_labels(reps, config, config.shuffle_partitions)
+    reps.unpersist()
     return stage_cluster.assign_clusters(exact_cl, labels)
 
 
@@ -136,6 +144,8 @@ class Pipeline:
         self.store = TableStore(self.work_dir / "tables")
         self.ledger = Ledger(self.work_dir / "ledger")
         self.results: list[StageResult] = []
+        # DataFrames the running stage persisted; released once its commit ran
+        self._cached: list[DataFrame] = []
 
     # ------------------------------------------------------------------ API
 
@@ -196,21 +206,26 @@ class Pipeline:
         # attempt died without commit -> recompute is safe (at-least-once,
         # reference README.md:211-219); the claim is ours now.
         t0 = time.time()
-        outputs = fn()
-        # stage all data first, then ONE atomic catalog CAS for the whole
-        # stage — a crash mid-stage leaves no partially visible table set.
-        # Row counts ride the write job as observed metrics: one aggregate
-        # row per table reaches the driver, no post-commit re-scan.
-        observations: dict[str, Observation] = {}
-        updates = {}
-        for t, df in outputs.items():
-            obs = Observation()
-            observations[t] = obs
-            updates[t] = self.store.stage(
-                df.observe(obs, F.count(F.lit(1)).alias("n_rows")),
-                t, "replace", _PARTITIONED.get(t),
-            )
-        self.store.commit_many(updates)
+        try:
+            outputs = fn()
+            # stage all data first, then ONE atomic catalog CAS for the whole
+            # stage — a crash mid-stage leaves no partially visible table set.
+            # Row counts ride the write job as observed metrics: one aggregate
+            # row per table reaches the driver, no post-commit re-scan.
+            observations: dict[str, Observation] = {}
+            updates = {}
+            for t, df in outputs.items():
+                obs = Observation()
+                observations[t] = obs
+                updates[t] = self.store.stage(
+                    df.observe(obs, F.count(F.lit(1)).alias("n_rows")),
+                    t, "replace", _PARTITIONED.get(t),
+                )
+            self.store.commit_many(updates)
+        finally:
+            for df in self._cached:
+                df.unpersist()
+            self._cached.clear()
         snapshots = {t: self.store.current_snapshot(t) for t in outputs}
         wall = time.time() - t0
         self._append_metrics(name, observations, wall)
@@ -293,9 +308,8 @@ class Pipeline:
         # ONE pandas-UDF pass: both signature channels and the verify
         # fingerprints are pure functions of reps, so one fused pass does
         # less work than one stage per channel, even on a resume
-        sigs = stage_minhash.joint_signatures(
-            reps, self.config, with_fp=True
-        ).persist()
+        sigs = stage_minhash.joint_signatures(reps, self.config, with_fp=True)
+        self._cached.append(sigs.persist())
         bands = stage_minhash.band_rows(sigs)
         sh = sigs.select("doc_id", "simhash", "blocks")
         return {
@@ -317,7 +331,6 @@ class Pipeline:
                 F.col("pbucket")
             ),
             "edges_lsh": stage_minhash.candidate_pairs(bands, self.config),
-            "simhashes": sh,  # per-doc signature record (lineage/time travel)
             # the probeable Hamming-block index: exploded rows, hive-
             # partitioned on sbucket (same layout as `bands`/pbucket)
             "sim_blocks": stage_simhash.with_sbucket(
@@ -330,10 +343,7 @@ class Pipeline:
             ),
             "edges_simhash": stage_simhash.candidate_pairs(sh, self.config),
             # fingerprints persist as their own index table: incremental
-            # ingests then fingerprint only their new reps (ADVICE r2). The
-            # table name names the scheme (winnowed), so a store written
-            # with another fingerprint scheme has no `winnow_fps` and ingest
-            # backfills it.
+            # ingests then fingerprint only their new reps (ADVICE r2)
             "winnow_fps": sigs.select("doc_id", "fp", "nlen"),
         }
 

@@ -20,7 +20,10 @@ Iceberg catalog with multi-table transactions:
   overwrite), `append` extends it (incremental index growth without
   rewriting the corpus-sized table);
 - readers resolve the latest catalog version first — snapshot isolation;
-  old catalog files and segments are kept (time travel).
+  old catalog files and segments are kept (time travel);
+- every catalog version records the store's `format` (Iceberg's
+  `format-version`); a store whose latest catalog holds tables at another
+  format is refused with StoreFormatError, never read or migrated.
 """
 
 from __future__ import annotations
@@ -36,6 +39,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import col as F_col
 
 from .retry import BACKOFF, CommitConflict, RetryStrategy, attempt_with_backoff
+
+# Any change to the layout of a table written through TableStore increments this.
+STORE_FORMAT = 1
+
+
+class StoreFormatError(RuntimeError):
+    """The store was written at a format this code does not read. There is
+    no migration: rebuild the store from its input files."""
 
 
 class StaleReplaceError(RuntimeError):
@@ -64,6 +75,14 @@ class TableStore:
         self.root = Path(root)
         self.retry = retry
         (self.root / "_catalog").mkdir(parents=True, exist_ok=True)
+        _, cat = self._latest()
+        found = cat.get("format", 0)  # a catalog written before the stamp has none
+        if cat.get("tables") and found != STORE_FORMAT:
+            raise StoreFormatError(
+                f"store {self.root} is at format {found}, this code reads "
+                f"format {STORE_FORMAT}; rebuild it with jobs/run_pipeline.py "
+                "--input <files> --work-dir <fresh dir>"
+            )
 
     def _table_dir(self, name: str) -> Path:
         return self.root / name
@@ -73,18 +92,24 @@ class TableStore:
     def _catalog_dir(self) -> Path:
         return self.root / "_catalog"
 
-    def _load_catalog(self) -> tuple[int, dict]:
+    def _latest(self) -> tuple[int, dict]:
+        """(version, parsed catalog) of the newest catalog file, (0, {}) if none."""
         files = sorted(self._catalog_dir().glob("v*.json"))
         if not files:
             return 0, {}
-        latest = files[-1]
-        return int(latest.stem[1:]), json.loads(latest.read_text())["tables"]
+        return int(files[-1].stem[1:]), json.loads(files[-1].read_text())
+
+    def _load_catalog(self) -> tuple[int, dict]:
+        version, cat = self._latest()
+        return version, cat.get("tables", {})
 
     def _try_commit(self, version: int, tables: dict) -> bool:
         """CAS: os.link fails with EEXIST if `version` was already taken."""
         target = self._catalog_dir() / f"v{version:012d}.json"
         tmp = self._catalog_dir() / f".tmp-{uuid.uuid4().hex[:8]}"
-        tmp.write_text(json.dumps({"tables": tables, "ts": time.time()}))
+        tmp.write_text(json.dumps(
+            {"format": STORE_FORMAT, "tables": tables, "ts": time.time()}
+        ))
         try:
             os.link(tmp, target)
             return True
@@ -308,16 +333,3 @@ class TableStore:
         for p in self.paths(name):
             files.extend(sorted(Path(p).rglob("*.parquet")))
         return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
-
-    def drop(self, name: str) -> None:
-        """Remove the table from the catalog (segments kept — time travel)."""
-
-        def attempt():
-            version, tables = self._load_catalog()
-            if name not in tables:
-                return
-            merged = {k: v for k, v in tables.items() if k != name}
-            if not self._try_commit(version + 1, merged):
-                raise CommitConflict(f"catalog v{version + 1} already exists")
-
-        attempt_with_backoff(attempt, self.retry)

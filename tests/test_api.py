@@ -240,33 +240,3 @@ def _kb_of(spark, id_str):
         spark.createDataFrame([(id_str,)], "id string")
     ).collect()[0]
     return [int(row["kbucket"])]
-
-
-def test_legacy_unpartitioned_ledger_migrates_on_append(spark, engine):
-    """ADVICE r3: a _protect_* table created before kbucket partitioning
-    (segments without the column) must be migrated ONCE before the first
-    partitioned append — otherwise the mixed-schema unionByName read fails
-    on every later call. Simulated by hand-writing a legacy segment, then
-    protecting twice through the normal path."""
-    from pyspark.sql import functions as F
-
-    legacy = spark.createDataFrame(
-        [("a", "mig", None, None, "r-a")],
-        "id string, context_id string, started_at timestamp, "
-        "expires_on timestamp, result string",
-    ).withColumn("started_at", F.timestamp_seconds(F.lit(1000.0)))
-    engine.store.write(legacy, "_protect_mig")  # NO kbucket column
-
-    ctx = engine.context("mig")
-    c = CountingCompute()
-    out = ctx.protect_detailed(_ids(spark, "a", "b"), c).toPandas()
-    # legacy row replayed, new key computed, append landed partitioned
-    assert dict(zip(out.id, out.result)) == {"a": "r-a", "b": "r-b"}
-    assert sorted(c.ids_seen) == ["b"]
-    migrated = engine.store.read(spark, "_protect_mig")
-    assert "kbucket" in migrated.columns
-    # and a THIRD call reads the mixed history fine (the poisoned-read bug)
-    out2 = ctx.protect_detailed(_ids(spark, "a", "b", "c"), CountingCompute()).toPandas()
-    assert dict(zip(out2.id, out2.is_duplicate)) == {
-        "a": True, "b": True, "c": False
-    }

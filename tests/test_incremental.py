@@ -284,8 +284,8 @@ def test_ingest_auto_compacts_appended_indexes(spark, tmp_path):
     pipe.run(spark.createDataFrame(batches[0]))
     for b in batches[1:]:
         out = pipe.ingest(spark.createDataFrame(b)).toPandas()
-    for t in ("hashed", "reps", "signatures", "bands", "simhashes",
-              "sim_blocks", "winnow_fps"):
+    for t in ("hashed", "reps", "signatures", "bands", "sim_blocks",
+              "winnow_fps"):
         assert len(pipe.store.paths(t)) <= cfg.compact_segments, t
     # compaction changed layout only: every doc still assigned, minima canon
     assert len(out) == 200
@@ -323,15 +323,13 @@ def _lcs_only_pair(cfg: DedupConfig) -> tuple[str, str]:
     return old_doc, new_doc
 
 
-def test_ingest_backfills_missing_sim_blocks(spark, tmp_path):
-    """ADVICE r3: a work dir whose simhash stage committed before the
-    sim_blocks index existed must not crash the first ingest — the index is
-    derived once from the committed simhashes table and committed with the
-    batch. Likewise for `winnow_fps`: a store without it (written before it
-    existed, or holding the older sampled `fingerprints`, whose hashes
-    never match winnowed ones) backfills it once from the old reps, so an
-    LCS-only near-dup of an old doc still passes the fingerprint screen and
-    is clustered."""
+def test_ingest_clusters_lcs_only_pair_split_across_run_and_ingest(
+    spark, tmp_path
+):
+    """An LCS-only near-dup whose old half was committed by `run` and whose
+    new half arrives in an ingest is clustered: the ingest probes the
+    persisted indexes and screens the pair against the committed
+    `winnow_fps` of the old doc."""
     # 64x2 bands make the planted Jaccard-0.2 pair an LSH candidate
     cfg = DedupConfig(shuffle_partitions=8, bands=64, rows_per_band=2)
     c = generate_corpus(160, seed=11)
@@ -344,12 +342,10 @@ def test_ingest_backfills_missing_sim_blocks(spark, tmp_path):
     fb = pd.concat([c.files.iloc[120:], planted.iloc[1:]], ignore_index=True)
     pipe = Pipeline(spark, cfg, tmp_path / "w")
     pipe.run(spark.createDataFrame(fa))
-    pipe.store.drop("sim_blocks")  # simulate the pre-format store
-    pipe.store.drop("winnow_fps")
 
     out = pipe.ingest(spark.createDataFrame(fb)).toPandas()
     assert len(out) == 162 and out.doc_id.is_unique
-    # backfilled indexes cover old AND new docs, sim_blocks partitioned
+    # the appended indexes cover old AND new docs, sim_blocks partitioned
     # for pruning
     reps = pipe.store.read(spark, "reps")
     for t in ("sim_blocks", "winnow_fps"):

@@ -161,3 +161,8 @@ def test_runwin_sampling_matches_low_bit_mask(con):
         for pos in np.nonzero((h & np.uint64(p - 1)) == np.uint64(0))[0]:
             expect.append((doc_id, int(pos)))
     assert list(map(tuple, got.values)) == sorted(expect)
+
+
+def test_band_ctes_reject_other_rows_per_band():
+    with pytest.raises(ValueError, match="rows_per_band"):
+        O.minhash_band_ctes(128, 64, 2, 1)

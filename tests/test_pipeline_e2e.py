@@ -123,8 +123,8 @@ def test_all_stages_completed(clusters):
     by_name = {r.name: r for r in pipe.results}
     assert [r.name for r in pipe.results] == STAGES
     assert set(by_name["signatures"].snapshots) == {
-        "signatures", "bands", "bands_stats", "edges_lsh", "simhashes",
-        "sim_blocks", "sim_stats", "edges_simhash", "winnow_fps",
+        "signatures", "bands", "bands_stats", "edges_lsh", "sim_blocks",
+        "sim_stats", "edges_simhash", "winnow_fps",
     }
 
 
@@ -252,3 +252,24 @@ def test_one_shot_pipeline_matches_checkpointed(spark, tmp_path):
     a = one_shot.sort_values("doc_id").reset_index(drop=True)
     b = staged.sort_values("doc_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b[a.columns])
+
+
+def test_compositions_release_what_they_persist(spark, tmp_path):
+    """Each composition unpersists the DataFrames it persisted once they
+    are no longer needed, so nothing stays cached for the rest of the
+    session: the store-free compositions after connected components, the
+    signatures stage after its commit."""
+    from dedup.pipeline import near_dup_labels, run_dataframe_pipeline
+    from dedup.stages import exact as stage_exact
+
+    files = spark.createDataFrame(generate_corpus(80, seed=3).files)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    reps = stage_exact.representatives(stage_exact.hash_content(files))
+    for compose in (
+        lambda: near_dup_labels(reps, CFG),
+        lambda: run_dataframe_pipeline(files, CFG),
+        lambda: Pipeline(spark, CFG, tmp_path / "w").run(files),
+    ):
+        spark.catalog.clearCache()
+        compose()
+        assert cache.isEmpty()

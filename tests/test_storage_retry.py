@@ -13,7 +13,9 @@ from hypothesis import strategies as st
 from dedup.retry import (
     BACKOFF, LINEAR, CommitConflict, RetryStrategy, attempt_with_backoff,
 )
-from dedup.storage import TableStore, TableUpdate
+from dedup.storage import (
+    STORE_FORMAT, StoreFormatError, TableStore, TableUpdate,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -102,10 +104,41 @@ def test_commit_many_is_one_catalog_version(spark, tmp_path):
     })
     versions = sorted((tmp_path / "t" / "_catalog").glob("v*.json"))
     assert len(versions) == 1  # both tables in ONE commit
+    assert json.loads(versions[-1].read_text())["format"] == STORE_FORMAT
     cat = json.loads(versions[-1].read_text())["tables"]
     assert set(cat) == {"ta", "tb"}
     assert store.read(spark, "ta").count() == 5
     assert store.read(spark, "tb").count() == 3
+
+
+def test_unstamped_store_is_refused_by_every_opener(spark, tmp_path):
+    """A catalog written before the format stamp counts as format 0: once
+    it holds tables, the store, the pipeline and the protect engine all
+    refuse it, naming the rebuild command, instead of reading or migrating
+    its tables."""
+    from dedup.api import Deduplication
+    from dedup.config import DedupConfig
+    from dedup.pipeline import Pipeline
+
+    cat = tmp_path / "w" / "tables" / "_catalog"
+    cat.mkdir(parents=True)
+    (cat / "v000000000001.json").write_text(json.dumps({"tables": {}}))
+    TableStore(tmp_path / "w" / "tables")  # no tables, no layout to refuse
+    (cat / "v000000000002.json").write_text(json.dumps(
+        {"tables": {"reps": {"segments": ["seg-0"]}}, "ts": 0.0}
+    ))
+    openers = [
+        lambda: TableStore(tmp_path / "w" / "tables"),
+        lambda: Pipeline(spark, DedupConfig(), tmp_path / "w"),
+        lambda: Deduplication(spark, tmp_path / "w" / "tables"),
+    ]
+    for open_store in openers:
+        with pytest.raises(StoreFormatError) as err:
+            open_store()
+        msg = str(err.value)
+        assert "format 0" in msg and f"format {STORE_FORMAT}" in msg
+        assert str(tmp_path / "w" / "tables") in msg
+        assert "jobs/run_pipeline.py --input <files> --work-dir" in msg
 
 
 def test_cas_conflict_retries_and_preserves_other_writers(spark, tmp_path):
