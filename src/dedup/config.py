@@ -31,20 +31,6 @@ class DedupConfig:
     lcs_min_chars: int = 60         # absolute LCS floor
     lcs_min_ratio: float = 0.25     # LCS >= ratio * min(len_a, len_b)
     jaccard_floor: float = 0.50     # exact-Jaccard fast-accept threshold
-    # ANALYSIS anchor (not an execution gate since round 2): the lowest
-    # exact Jaccard at which LCS-acceptable pairs (type-3 clones: one large
-    # moved block) are expected. The verify stage applies the PURE rule
-    # (jaccard OR lcs, no gate); this constant only pins how far below it
-    # the est-Jaccard prefilter must sit (validated in __post_init__).
-    lcs_gate_jaccard: float = 0.10
-    # JVM-side MinHash-estimate prefilter: pairs with est J below this never
-    # reach Python verification. MUST sit below lcs_gate_jaccard by the
-    # estimator noise margin (validated in __post_init__): a pair whose TRUE
-    # Jaccard is at the LCS gate could still be accepted via LCS, so the
-    # prefilter may only shave pairs that are >=1.5 sigma below the gate.
-    # With num_perm=128, sd(J=0.10) = sqrt(0.1*0.9/128) = 0.0265 ->
-    # gate - 1.5*sd = 0.060.
-    prefilter_min_est_jaccard: float = 0.06
     # --- skew handling ---
     bucket_cap: int = 64            # LSH bucket size above which we star-link
     # hard cap on per-bucket pair emission for sub-cap buckets (C(64,2)=2016
@@ -81,16 +67,6 @@ class DedupConfig:
             raise ValueError(
                 f"hamming_radius+1 ({blocks}) must divide 64 for block keying"
             )
-        sd_at_gate = (
-            self.lcs_gate_jaccard * (1 - self.lcs_gate_jaccard) / self.num_perm
-        ) ** 0.5
-        if self.prefilter_min_est_jaccard > self.lcs_gate_jaccard - 1.5 * sd_at_gate:
-            raise ValueError(
-                f"prefilter_min_est_jaccard ({self.prefilter_min_est_jaccard})"
-                f" must be <= lcs_gate_jaccard - 1.5*sd"
-                f" ({self.lcs_gate_jaccard - 1.5 * sd_at_gate:.4f}), else pairs"
-                " the LCS path would accept get pruned before verification"
-            )
         if self.max_bucket_pairs < self.bucket_cap - 1:
             raise ValueError(
                 f"max_bucket_pairs ({self.max_bucket_pairs}) must be >= "
@@ -104,9 +80,9 @@ class DedupConfig:
         (P < 4e-5 for a true at-floor pair). Shared by the verify stage
         (skip exact Jaccard) and prepare_pairs, whose winnowed-fingerprint
         screen applies only to pairs whose sole possible accept path is LCS.
-        The MinHash-estimate cuts (this gate and prefilter_min_est_jaccard)
-        are the only probabilistic screens before verify: the fingerprint
-        screen never drops a pair the LCS branch would accept."""
+        This gate on the Jaccard branch is the only probabilistic cut
+        before verify: the fingerprint screen never drops a pair the LCS
+        branch would accept."""
         sd = (
             self.jaccard_floor * (1.0 - self.jaccard_floor) / self.num_perm
         ) ** 0.5

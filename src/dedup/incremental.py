@@ -19,21 +19,22 @@ never re-shingled):
      pbucket = band_hash % N_PBUCKETS and the sim_blocks index on
      sbucket = block_val % N_SBUCKETS; each probe reads only the
      buckets the batch touches (plan-level PartitionFilters);
-   - SKEW CAP: per-bucket (size, pivot) stats ride with each index; a probe
-     against a bucket larger than bucket_cap emits ONE star edge to the
-     bucket pivot instead of bsz pairs — the same cap/star treatment the
-     batch channels apply (ADVICE r1);
-4. candidates pass the same est-Jaccard prefilter + content verification;
+   - SKEW CAP: each bucket's (size, pivot) is a groupBy over that pruned
+     slice (probe_index) — exact, because a bucket's rows all sit in one
+     partition; a probe against a bucket larger than bucket_cap emits ONE
+     star edge to the bucket pivot instead of bsz pairs — the same
+     cap/star treatment the batch channels apply (ADVICE r1);
+4. candidates pass the same pre-verify screens + content verification;
 5. connected components run over (old assignments as edges) ∪ (exact
    inheritance edges) ∪ (new verified edges), so new evidence can merge
    existing clusters, and cluster_id stays min(doc_id) of the component.
 
 Crash safety (ADVICE r1, high): every table change of an ingest — index
-appends, stats, clusters — publishes in ONE atomic catalog CAS
+appends and the clusters delta — publishes in ONE atomic catalog CAS
 (TableStore.commit_many), so the re-ingest guard (left_anti on `hashed`)
 can never observe a half-committed batch. Concurrency (ADVICE r2): the
-derived payloads (merged stats deltas, recomputed cluster deltas) are
-guarded by the snapshots they were derived from — a racing ingest that
+derived payload (the recomputed clusters delta) is guarded by the
+snapshot it was derived from — a racing ingest that
 commits first makes this one fail with StaleReplaceError rather than
 silently discarding the winner's merge; re-running the loser re-reads
 current state under its ledger protection. The only crash window left is
@@ -52,10 +53,8 @@ increasing `_v`; readers resolve latest-wins per doc_id via
 segment once it crosses config.compact_segments. Connected components run
 over the touched SUBGRAPH only (new edges + star edges of touched old
 clusters), so both the CC input and the write are O(batch + touched), not
-O(corpus). The per-bucket stats tables remain full-rewrite merges — one
-row per distinct bucket, exactly the upsert an Iceberg MERGE INTO
-(bands_stats/sim_stats ON band/block key) performs; the merge DELTA the
-ingest computes is O(touched buckets) and is what MERGE would write.
+O(corpus). No per-bucket stats are persisted: the probe derives them from
+the index rows it reads for its cold join anyway.
 """
 
 from __future__ import annotations
@@ -79,27 +78,17 @@ _CTX = "ingest"
 
 
 def _read_latest(
-    spark: SparkSession,
-    store: TableStore,
-    table: str,
-    keys: list[str],
-    prune=None,
+    spark: SparkSession, store: TableStore, table: str, keys: list[str]
 ) -> DataFrame:
     """Resolved view of a log-structured table: latest `_v` wins per key
     tuple (a delta segment supersedes earlier rows for the keys it
-    rewrote). `prune` (a DataFrame->DataFrame filter) is applied BEFORE the
-    resolution window — safe whenever the predicate is a function of the
-    key (every version of a key shares it, e.g. a bucket partition
-    column), and it is what keeps the window shuffle bounded to the
-    pruned partitions instead of O(table)."""
+    rewrote)."""
     from pyspark.sql import Window
 
-    df = store.read(spark, table)
-    if prune is not None:
-        df = prune(df)
     w = Window.partitionBy(*keys).orderBy(F.desc("_v"))
     return (
-        df.withColumn("_rn", F.row_number().over(w))
+        store.read(spark, table)
+        .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn", "_v")
     )
@@ -119,118 +108,73 @@ def _batch_fingerprint(files: DataFrame) -> str:
     return f"batch-{row['n']}-{row['h'] & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
-def _pair(src_col, dst_col) -> list:
-    return [
-        F.least(src_col, dst_col).alias("src"),
-        F.greatest(src_col, dst_col).alias("dst"),
+def touched_slice(
+    spark: SparkSession,
+    store: TableStore,
+    table: str,
+    part_col: str,
+    rows_new: DataFrame,
+    keys: list[str],
+) -> DataFrame:
+    """The rows of a bucket index that share a bucket key with `rows_new`.
+    The scan reads only the `part_col` partitions the batch touches
+    (plan-level PartitionFilters) and the semi-join keeps only the batch's
+    buckets, so a probe costs O(touched buckets), never O(index)."""
+    touched = [
+        int(r[0]) for r in rows_new.select(part_col).distinct().collect()
     ]
-
-
-def _merge_band_stats(old: DataFrame, new: DataFrame) -> DataFrame:
-    o = old.select(
-        "band_id", "band_hash",
-        F.col("bsz").alias("o_bsz"), F.col("pivot").alias("o_pivot"),
-    )
-    n = new.select(
-        "band_id", "band_hash",
-        F.col("bsz").alias("n_bsz"), F.col("pivot").alias("n_pivot"),
-    )
-    return o.join(n, ["band_id", "band_hash"], "full").select(
-        "band_id", "band_hash",
-        (F.coalesce("o_bsz", F.lit(0)) + F.coalesce("n_bsz", F.lit(0)))
-        .alias("bsz"),
-        F.least("o_pivot", "n_pivot").alias("pivot"),  # least skips nulls
+    return (
+        store.read(spark, table)
+        .where(F.col(part_col).isin(touched))
+        .join(rows_new.select(*keys).distinct(), keys, "left_semi")
     )
 
 
-def _merge_sim_stats(old: DataFrame, new: DataFrame) -> DataFrame:
-    o = old.select(
-        "block_id", "block_val",
-        F.col("bsz").alias("o_bsz"), F.col("pivot").alias("o_pivot"),
-        F.col("pivot_simhash").alias("o_ps"),
-    )
-    n = new.select(
-        "block_id", "block_val",
-        F.col("bsz").alias("n_bsz"), F.col("pivot").alias("n_pivot"),
-        F.col("pivot_simhash").alias("n_ps"),
-    )
-    new_wins = F.col("n_pivot").isNotNull() & (
-        F.col("o_pivot").isNull() | (F.col("n_pivot") < F.col("o_pivot"))
-    )
-    return o.join(n, ["block_id", "block_val"], "full").select(
-        "block_id", "block_val",
-        (F.coalesce("o_bsz", F.lit(0)) + F.coalesce("n_bsz", F.lit(0)))
-        .alias("bsz"),
-        F.least("o_pivot", "n_pivot").alias("pivot"),
-        F.when(new_wins, F.col("n_ps")).otherwise(F.col("o_ps"))
-        .alias("pivot_simhash"),
-    )
-
-
-def _stats_delta(
-    old_touched: DataFrame,
-    new: DataFrame,
-    merge_fn,
-    bucket_fn,
-    bucket_col: str,
-    v_next: int,
-) -> DataFrame:
-    """The touched-buckets-only upsert delta of a stats log, stamped
-    `_v`=v_next and laid out one file per bucket partition."""
-    delta = bucket_fn(merge_fn(old_touched, new)).withColumn(
-        "_v", F.lit(v_next).cast("int")
-    )
-    return delta.repartition(F.col(bucket_col))
-
-
-def probe_band_index(
-    bands_new: DataFrame,
-    bands_old: DataFrame,
-    stats_old: DataFrame,
+def probe_index(
+    rows_new: DataFrame,
+    rows_old: DataFrame,
+    keys: list[str],
     config: DedupConfig,
+    payload: str | None = None,
 ) -> DataFrame:
-    """New-vs-old LSH candidates, skew-capped via the persisted bucket stats:
-    buckets at/below bucket_cap join in full (<= cap old rows per new row),
-    hotter buckets contribute ONE star edge to their pivot."""
-    probe = bands_new.join(stats_old, ["band_id", "band_hash"])
+    """New-vs-old candidates (src, dst, payload_src, payload_dst), src < dst,
+    skew-capped like pairs_from_buckets; payload defaults to 0L.
+
+    Each bucket's (size, pivot) is a groupBy over `rows_old`, the
+    touched-key slice of the index (touched_slice) that the cold join reads
+    anyway. Every row of a bucket sits in the bucket's index partition, so
+    the sizes are exact. Buckets at/below bucket_cap join in full (<= cap
+    old rows per new row); hotter buckets contribute ONE star edge to their
+    pivot. The pivot is min(struct(doc_id, payload)), the pairs_from_buckets
+    trick, so a payload filter (the SimHash popcount) applies to star and
+    cold edges alike."""
+    p = F.col(payload) if payload else F.lit(0).cast("long")
+
+    def members(rows: DataFrame, name: str) -> DataFrame:
+        return rows.select(
+            *keys, F.struct(F.col("doc_id").alias("d"), p.alias("p")).alias(name)
+        )
+
+    old = members(rows_old, "o")
+    stats = old.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("bsz"), F.min("o").alias("pivot")
+    )
+    probe = members(rows_new, "n").join(stats, keys)
     hot = probe.where(F.col("bsz") > config.bucket_cap).select(
-        *_pair(F.col("doc_id"), F.col("pivot"))
-    )
-    cold_keys = probe.where(F.col("bsz") <= config.bucket_cap).select(
-        "band_id", "band_hash", F.col("doc_id").alias("new_id")
-    )
-    cold = cold_keys.join(bands_old, ["band_id", "band_hash"]).select(
-        *_pair(F.col("new_id"), F.col("doc_id"))
-    )
-    return hot.unionByName(cold).where(F.col("src") != F.col("dst"))
-
-
-def probe_block_index(
-    blocks_new: DataFrame,
-    blocks_old: DataFrame,
-    stats_old: DataFrame,
-    config: DedupConfig,
-) -> DataFrame:
-    """New-vs-old SimHash candidates with the same stats-based cap; the JVM
-    popcount filter applies to star edges too (pivot_simhash rides in the
-    stats), mirroring the batch channel's semantics."""
-    radius = config.hamming_radius
-    probe = blocks_new.join(stats_old, ["block_id", "block_val"])
-    hot = (
-        probe.where(F.col("bsz") > config.bucket_cap)
-        .where(F.expr(f"bit_count(simhash ^ pivot_simhash) <= {radius}"))
-        .select(*_pair(F.col("doc_id"), F.col("pivot")))
-    )
-    cold_keys = probe.where(F.col("bsz") <= config.bucket_cap).select(
-        "block_id", "block_val",
-        F.col("doc_id").alias("new_id"), F.col("simhash").alias("new_sh"),
+        "n", F.col("pivot").alias("o")
     )
     cold = (
-        cold_keys.join(blocks_old, ["block_id", "block_val"])
-        .where(F.expr(f"bit_count(new_sh ^ simhash) <= {radius}"))
-        .select(*_pair(F.col("new_id"), F.col("doc_id")))
+        probe.where(F.col("bsz") <= config.bucket_cap)
+        .select(*keys, "n").join(old, keys).select("n", "o")
     )
-    return hot.unionByName(cold).where(F.col("src") != F.col("dst"))
+    return (
+        hot.unionByName(cold).where(F.col("n.d") != F.col("o.d"))
+        .select(F.least("n", "o").alias("a"), F.greatest("n", "o").alias("b"))
+        .select(
+            F.col("a.d").alias("src"), F.col("b.d").alias("dst"),
+            F.col("a.p").alias("payload_src"), F.col("b.p").alias("payload_dst"),
+        )
+    )
 
 
 def ingest_batch(
@@ -265,17 +209,14 @@ def ingest_batch(
         return df
 
     try:
-        # snapshots the guarded payloads below are DERIVED from. Captured BEFORE
+        # snapshot the guarded clusters delta below is DERIVED from. Captured BEFORE
         # the reads (ADVICE r3): reads pin each table's segment list at
         # DataFrame-construction time, so snapshotting first means a racing
         # commit landing in between makes `expected` look OLDER than current
         # and the CAS fails safe (StaleReplaceError) — snapshotting after the
         # reads could make `expected` match the newer state while the payloads
         # were derived from the older one, silently installing a stale merge.
-        replace_base = {
-            t: store.current_snapshot(t)
-            for t in ("bands_stats", "sim_stats", "clusters")
-        }
+        replace_base = {"clusters": store.current_snapshot("clusters")}
         hashed_old = store.read(spark, "hashed")
         reps_old = store.read(spark, "reps")
         sigs_old = store.read(spark, "signatures")
@@ -308,63 +249,34 @@ def ingest_batch(
         bands_new = _p(stage_minhash.band_rows(joint_new))
         sims_new = joint_new.select("doc_id", "simhash", "blocks")
 
-        # -- 5. candidates: new-new (capped) + new-old (guarded index probe) ----
-        # dedup=False: step 5's four channels union into ONE global
-        # (src, dst) dropDuplicates below (see pairs_from_buckets)
-        nn_lsh = stage_minhash.candidate_pairs(bands_new, config, dedup=False)
-
-        # partition-pruned read: only pbuckets the batch touches reach the scan
+        # -- 5. candidates: new-new (capped) + new-old (index probe) --------
+        # dedup=False: the four channels union into ONE global (src, dst)
+        # dropDuplicates below (see pairs_from_buckets)
+        lsh_keys, sim_keys = ["band_id", "band_hash"], ["block_id", "block_val"]
         bands_new_pb = _p(stage_minhash.with_pbucket(bands_new))
-        touched = [
-            int(r[0]) for r in bands_new_pb.select("pbucket").distinct().collect()
-        ]
-        bands_old = store.read(spark, "bands").where(F.col("pbucket").isin(touched))
-        # stats: prune to touched pbuckets at the SCAN, resolve latest-wins over
-        # only those partitions, then keep just the buckets this batch hits —
-        # the probe input AND the merge's old side are both O(batch x bands)
-        new_band_stats = _p(stage_minhash.band_stats(bands_new))
-        band_stats_res = _read_latest(
-            spark, store, "bands_stats", ["band_id", "band_hash"],
-            prune=lambda df: df.where(F.col("pbucket").isin(touched)),
-        )
-        band_stats_old = _p(
-            band_stats_res.join(
-                new_band_stats.select("band_id", "band_hash"),
-                ["band_id", "band_hash"], "left_semi",
-            )
-            .select("band_id", "band_hash", "bsz", "pivot")
-        )
-        no_lsh = probe_band_index(bands_new_pb, bands_old, band_stats_old, config)
-
-        nn_sim = stage_simhash.candidate_pairs(sims_new, config, dedup=False)
-
-        # partition-pruned read, mirroring the bands probe above: only the
-        # sbuckets the batch touches reach the sim_blocks scan
         blocks_new = _p(stage_simhash.with_sbucket(
             stage_simhash.block_rows(sims_new)
         ))
-        touched_s = [
-            int(r[0]) for r in blocks_new.select("sbucket").distinct().collect()
-        ]
-        sim_blocks_old = store.read(spark, "sim_blocks").where(
-            F.col("sbucket").isin(touched_s)
-        )
-        new_sim_stats = _p(stage_simhash.block_stats(sims_new))
-        sim_stats_res = _read_latest(
-            spark, store, "sim_stats", ["block_id", "block_val"],
-            prune=lambda df: df.where(F.col("sbucket").isin(touched_s)),
-        )
-        sim_stats_old = _p(
-            sim_stats_res.join(
-                new_sim_stats.select("block_id", "block_val"),
-                ["block_id", "block_val"], "left_semi",
-            )
-            .select("block_id", "block_val", "bsz", "pivot", "pivot_simhash")
-        )
-        no_sim = probe_block_index(blocks_new, sim_blocks_old, sim_stats_old, config)
-
+        bands_old = _p(touched_slice(
+            spark, store, "bands", "pbucket", bands_new_pb, lsh_keys
+        ))
+        blocks_old = _p(touched_slice(
+            spark, store, "sim_blocks", "sbucket", blocks_new, sim_keys
+        ))
         cand = (
-            nn_lsh.unionByName(no_lsh).unionByName(nn_sim).unionByName(no_sim)
+            stage_minhash.candidate_pairs(bands_new, config, dedup=False)
+            .unionByName(
+                probe_index(bands_new_pb, bands_old, lsh_keys, config)
+                .select("src", "dst")
+            )
+            .unionByName(
+                stage_simhash.candidate_pairs(sims_new, config, dedup=False)
+            )
+            .unionByName(stage_simhash.within_radius(
+                probe_index(blocks_new, blocks_old, sim_keys, config,
+                            payload="simhash"),
+                config,
+            ))
             .dropDuplicates(["src", "dst"])
         )
 
@@ -487,25 +399,6 @@ def ingest_batch(
                 blocks_new.repartition(F.col("sbucket")), "sim_blocks",
                 "append", ["sbucket"],
             ),
-            # stats are log-structured upserts (same treatment as clusters):
-            # the delta holds ONLY the buckets this batch touched, appended at
-            # the next _v; latest-wins reads supersede the old rows
-            "bands_stats": store.stage(
-                _stats_delta(
-                    band_stats_old, new_band_stats, _merge_band_stats,
-                    stage_minhash.with_pbucket, "pbucket",
-                    len(store.paths("bands_stats")),
-                ),
-                "bands_stats", "append", ["pbucket"],
-            ),
-            "sim_stats": store.stage(
-                _stats_delta(
-                    sim_stats_old, new_sim_stats, _merge_sim_stats,
-                    stage_simhash.with_sbucket, "sbucket",
-                    len(store.paths("sim_stats")),
-                ),
-                "sim_stats", "append", ["sbucket"],
-            ),
             "clusters": store.stage(clusters_delta, "clusters", "append"),
             "winnow_fps": store.stage(fps_new, "winnow_fps", "append"),
         }
@@ -518,20 +411,14 @@ def ingest_batch(
         )
         # maintenance: fold any appended index past the segment threshold back
         # to one segment (post-completion, so a crash here costs nothing; a
-        # concurrent append makes compact a guarded no-op). The upsert LOGS
-        # (clusters, both stats tables) get a SEMANTIC fold instead:
-        # superseded rows are dropped, the survivors restamped _v=0 — the
-        # Iceberg rewrite_data_files analogue for a MERGE INTO target.
-        logs = {
-            "clusters": (["doc_id"], None),
-            "bands_stats": (["band_id", "band_hash"], ["pbucket"]),
-            "sim_stats": (["block_id", "block_val"], ["sbucket"]),
-        }
+        # concurrent append makes compact a guarded no-op). The clusters
+        # upsert LOG gets a SEMANTIC fold instead: superseded rows are
+        # dropped, the survivors restamped _v=0 — the Iceberg
+        # rewrite_data_files analogue for a MERGE INTO target.
         for t, u in updates.items():
-            if u.mode == "append" and t not in logs:
+            if u.mode == "append" and t != "clusters":
                 store.compact(spark, t, min_segments=config.compact_segments)
-        for t, (keys, part) in logs.items():
-            _fold_log(spark, store, t, keys, config.compact_segments, part)
+        _fold_log(spark, store, "clusters", ["doc_id"], config.compact_segments)
         return read_clusters(spark, store)
     finally:
         for df in cached:
@@ -544,7 +431,6 @@ def _fold_log(
     table: str,
     keys: list[str],
     min_segments: int,
-    partition_by: list[str] | None = None,
 ) -> bool:
     """Fold a log-structured table to ONE `_v`=0 segment holding only the
     latest-wins rows (superseded versions dropped — the Iceberg
@@ -560,11 +446,9 @@ def _fold_log(
     folded = _read_latest(spark, store, table, keys).withColumn(
         "_v", F.lit(0).cast("int")
     )
-    if partition_by:
-        folded = folded.repartition(*[F.col(c) for c in partition_by])
     try:
         store.commit_many(
-            {table: store.stage(folded, table, "replace", partition_by)},
+            {table: store.stage(folded, table, "replace")},
             expected={table: snap},
         )
     except StaleReplaceError:

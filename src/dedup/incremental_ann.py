@@ -41,11 +41,14 @@ Tables (TableStore):
   incremental._read_latest, folded to one segment past compact_segments.
 
 new-new candidates run through the SAME skew-capped generator as every
-other channel (stages/minhash_lsh.pairs_from_buckets); new-old probes are
-capped by per-bucket (size, pivot) stats computed over the PRUNED
-partitions only — hot buckets contribute ONE star edge to their pivot,
-probe_band_index's exact treatment. Every candidate then passes the exact
-rounded-cosine >= tau filter, and connected components run over the
+other channel (stages/minhash_lsh.pairs_from_buckets); new-old candidates
+come from the SAME probe as the MinHash/SimHash ingest
+(incremental.probe_index over incremental.touched_slice): per-bucket
+(size, pivot) is derived from the pruned partitions only — exact, since a
+bucket's rows all sit in its pbucket — and hot buckets contribute ONE star
+edge to their pivot (sound here: an LSH bucket is a similarity bucket, and
+the tau filter validates every edge). Every candidate then passes the
+exact rounded-cosine >= tau filter, and connected components run over the
 touched subgraph only.
 """
 
@@ -58,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .incremental import _fold_log, _pair, _read_latest
+from .incremental import _fold_log, _read_latest, probe_index, touched_slice
 from .ledger import Ledger, Status
 from .ops.similarity import (
     _DIM,
@@ -207,34 +210,6 @@ def build_embedding_index(
         base.unpersist()
 
 
-def probe_bucket_index(
-    rows_new: DataFrame,
-    buckets_old_pruned: DataFrame,
-    config: DedupConfig,
-) -> DataFrame:
-    """New-vs-old candidates with probe_band_index's stats-based cap:
-    buckets at/below bucket_cap join in full (<= cap old rows per new row);
-    hotter buckets contribute ONE star edge to their pivot (sound here: an
-    LSH bucket is a similarity bucket, and the tau filter validates every
-    edge). Sizes come from the PRUNED partitions only — every row of a
-    bucket lives in its pbucket partition, so these are exact bucket sizes
-    at O(touched partitions) cost, never O(index)."""
-    stats = buckets_old_pruned.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("bsz"), F.min("vec_id").alias("pivot")
-    )
-    probe = rows_new.select("vec_id", "bucket").join(stats, "bucket")
-    hot = probe.where(F.col("bsz") > config.bucket_cap).select(
-        *_pair(F.col("vec_id"), F.col("pivot"))
-    )
-    cold_keys = probe.where(F.col("bsz") <= config.bucket_cap).select(
-        "bucket", F.col("vec_id").alias("new_id")
-    )
-    cold = cold_keys.join(
-        buckets_old_pruned.select("bucket", "vec_id"), "bucket"
-    ).select(*_pair(F.col("new_id"), F.col("vec_id")))
-    return hot.unionByName(cold).where(F.col("src") != F.col("dst"))
-
-
 def ingest_embeddings(
     spark: SparkSession,
     config: DedupConfig,
@@ -299,20 +274,14 @@ def ingest_embeddings(
         rows_new = _p(_bucket_rows(fresh, n_planes))
 
         # -- 3. candidates: new-new (capped) + new-old (pruned probe) -------
-        touched = [
-            int(r[0]) for r in rows_new.select("pbucket").distinct().collect()
-        ]
-        buckets_old = _p(
-            store.read(spark, "emb_buckets")
-            .where(F.col("pbucket").isin(touched))
-            .join(rows_new.select("bucket").distinct(), "bucket", "left_semi")
-        )
-        nn = pairs_from_buckets(
-            rows_new.withColumnRenamed("vec_id", "doc_id"), ["bucket"],
-            config, dedup=False,
-        ).select("src", "dst")
+        new_docs = rows_new.withColumnRenamed("vec_id", "doc_id")
+        buckets_old = _p(touched_slice(
+            spark, store, "emb_buckets", "pbucket", rows_new, ["bucket"]
+        ).withColumnRenamed("vec_id", "doc_id"))
         cand = (
-            nn.unionByName(probe_bucket_index(rows_new, buckets_old, config))
+            pairs_from_buckets(new_docs, ["bucket"], config, dedup=False)
+            .unionByName(probe_index(new_docs, buckets_old, ["bucket"], config))
+            .select("src", "dst")
             .dropDuplicates(["src", "dst"])
         )
 

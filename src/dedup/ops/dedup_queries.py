@@ -111,8 +111,8 @@ def neardup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generation mirrored closed-form, clustering via a recursive CTE. The
 # clusters oracle applies the PURE verify rule (jaccard OR common-run).
 # The Spark path's winnowed-fingerprint screen never drops a pair the
-# common-run branch accepts; its only probabilistic screens are the
-# est-Jaccard cuts (prefilter_min_est_jaccard, jaccard_floor_gate), whose
+# common-run branch accepts; its only probabilistic cut is the 4-sigma
+# est-Jaccard gate on the Jaccard branch (config.jaccard_floor_gate), whose
 # miss probability is small enough that both sides agree on the test
 # corpora — asserted by the driver gate per round.
 MINHASH_LSH_CANDIDATES_SQL = oracle_u64.minhash_lsh_candidates_sql(DOC_CFG)

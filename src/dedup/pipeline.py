@@ -10,7 +10,7 @@ This is the batch realization of the reference's protect lifecycle
 Stages (STAGES): `sha256` (exact dedup, representatives), `signatures`
 (ONE fused pandas-UDF pass over the representatives: MinHash bands and LSH
 candidates, SimHash blocks and Hamming candidates, and the verify stage's
-winnowed fingerprints, committed as eight index/edge tables), `verify`
+winnowed fingerprints, committed as six index/edge tables), `verify`
 (screens + pairwise verification against the stored fingerprints) and
 `cluster` (connected components). The store-free composition
 (`near_dup_labels`, `run_dataframe_pipeline`) runs the same signature pass.
@@ -61,8 +61,6 @@ STAGES = ["sha256", "signatures", "verify", "cluster"]
 _PARTITIONED: dict[str, list[str]] = {
     "bands": ["pbucket"],
     "sim_blocks": ["sbucket"],
-    "bands_stats": ["pbucket"],
-    "sim_stats": ["sbucket"],
 }
 
 
@@ -313,21 +311,13 @@ class Pipeline:
         bands = stage_minhash.band_rows(sigs)
         sh = sigs.select("doc_id", "simhash", "blocks")
         return {
-            # `signatures` feeds the verify prefilter
+            # `signatures` feeds the verify stage's est-Jaccard gate
             "signatures": sigs.select("doc_id", "sig"),
             # `bands` IS the persistent LSH index (incremental batches probe
             # it): hive-partitioned on pbucket (one file per pbucket via the
-            # repartition) so probes prune, with per-bucket stats alongside
-            # so probes can star-link hot buckets instead of joining them in
-            # full
+            # repartition) so probes prune; a probe derives the per-bucket
+            # (size, pivot) it caps hot buckets with from the pruned rows
             "bands": stage_minhash.with_pbucket(bands).repartition(
-                F.col("pbucket")
-            ),
-            # stats are a log-structured upsert target for ingests: bucket-
-            # partitioned (probe prune) + versioned (latest-wins per bucket)
-            "bands_stats": stage_minhash.with_pbucket(
-                stage_minhash.band_stats(bands)
-            ).withColumn("_v", F.lit(0).cast("int")).repartition(
                 F.col("pbucket")
             ),
             "edges_lsh": stage_minhash.candidate_pairs(bands, self.config),
@@ -336,11 +326,6 @@ class Pipeline:
             "sim_blocks": stage_simhash.with_sbucket(
                 stage_simhash.block_rows(sh)
             ).repartition(F.col("sbucket")),
-            "sim_stats": stage_simhash.with_sbucket(
-                stage_simhash.block_stats(sh)
-            ).withColumn("_v", F.lit(0).cast("int")).repartition(
-                F.col("sbucket")
-            ),
             "edges_simhash": stage_simhash.candidate_pairs(sh, self.config),
             # fingerprints persist as their own index table: incremental
             # ingests then fingerprint only their new reps (ADVICE r2)

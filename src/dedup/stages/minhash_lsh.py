@@ -65,7 +65,7 @@ def joint_signatures(
     lengths, sharing the normalization and the Arrow content hop.
 
     `sig` is the full MinHash signature (the verify stage's JVM-side
-    estimated-Jaccard prefilter folds over it, so noise pairs never reach
+    estimated-Jaccard gate folds over it, so noise pairs never reach
     Python or drag content through a shuffle); `bands` folds each band's
     rows into one 64-bit key kernel-side; `blocks` are the SimHash's
     pigeonhole blocks. Docs whose normalized text is empty are dropped
@@ -146,16 +146,6 @@ N_PBUCKETS = 256
 def with_pbucket(bands_df: DataFrame) -> DataFrame:
     return bands_df.withColumn(
         "pbucket", F.pmod(F.col("band_hash"), F.lit(N_PBUCKETS)).cast("int")
-    )
-
-
-def band_stats(bands_df: DataFrame) -> DataFrame:
-    """Per-bucket (size, pivot) of the persistent LSH index. Incremental
-    probes consult this to star-link against hot buckets instead of joining
-    them in full (ADVICE r1: the new-vs-old probe needs the same skew cap as
-    the batch channels)."""
-    return bands_df.groupBy("band_id", "band_hash").agg(
-        F.count(F.lit(1)).alias("bsz"), F.min("doc_id").alias("pivot")
     )
 
 

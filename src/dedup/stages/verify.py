@@ -53,18 +53,17 @@ def prepare_pairs(
     config: DedupConfig,
     fps: DataFrame,
 ) -> DataFrame:
-    """Candidate pairs with contents attached, triply pruned BEFORE any
-    content bytes move — (src, dst, est_jaccard, content_src, content_dst):
+    """Candidate pairs with contents attached, pruned BEFORE any content
+    bytes move — (src, dst, est_jaccard, content_src, content_dst). A pair
+    survives when either accept branch is still possible:
 
-    1. est-Jaccard prefilter (JVM fold over the signatures): pairs whose
-       estimate sits below prefilter_min_est_jaccard never go further;
-    2. LCS-impossibility: when the estimate also rules out the Jaccard
-       branch (< jaccard_floor_gate), a pair whose LCS threshold exceeds
-       the shorter doc's length is dropped outright;
-    3. fingerprint screen: for the same Jaccard-impossible band, the
-       winnowed fingerprints must overlap. The LCS threshold is never
-       below lcs_min_chars, and a common run of that length always yields
-       a shared winnowed fingerprint, so the screen never drops a pair the
+    1. Jaccard-possible: its MinHash estimate (a JVM fold over the
+       signatures) is at least config.jaccard_floor_gate(), 4 sigma under
+       jaccard_floor. This is the only probabilistic cut before verify;
+    2. LCS-possible: its LCS threshold fits in the shorter doc AND the
+       winnowed fingerprints overlap. The LCS threshold is never below
+       lcs_min_chars, and a common run of that length always yields a
+       shared winnowed fingerprint, so this screen never drops a pair the
        LCS branch would accept; hash collisions only keep extra pairs.
 
     `fps(doc_id, fp, nlen)` holds the winnowed fingerprints and normalized
@@ -114,7 +113,6 @@ def prepare_pairs(
         edges.join(src_side, "src")
         .join(dst_side, "dst")
         .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= config.prefilter_min_est_jaccard)
         .where(keep)
         .select("src", "dst", "est_jaccard")
     )
@@ -199,10 +197,8 @@ def make_verifier(config: DedupConfig):
     floor = config.jaccard_floor
     lcs_min = config.lcs_min_chars
     lcs_ratio = config.lcs_min_ratio
-    # below this estimate the Jaccard branch cannot realistically accept:
-    # 4 sigma under the floor at the configured signature length
-    est_sd = (floor * (1.0 - floor) / config.num_perm) ** 0.5
-    floor_gate = max(0.0, floor - 4.0 * est_sd)
+    # below this estimate the Jaccard branch cannot realistically accept
+    floor_gate = config.jaccard_floor_gate()
 
     def _verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

@@ -112,9 +112,9 @@ def test_index_grew(incremental_clusters):
 
 def test_probe_band_index_caps_hot_buckets(spark):
     """ADVICE r1: a boilerplate band bucket with B old members probed by b
-    new rows must emit b star edges, not B*b pairs."""
-    from dedup.incremental import probe_band_index
-    from dedup.stages.minhash_lsh import band_stats
+    new rows must emit b star edges, not B*b pairs. The bucket sizes and
+    pivots come from the old rows the probe is handed."""
+    from dedup.incremental import probe_index
 
     cfg = DedupConfig(bucket_cap=8, shuffle_partitions=8)
     # old index: hot bucket (0, 111) with 50 members, cold bucket (1, 222)
@@ -125,14 +125,15 @@ def test_probe_band_index_caps_hot_buckets(spark):
     bands_old = spark.createDataFrame(
         old_rows, "doc_id long, band_id int, band_hash long"
     )
-    stats_old = band_stats(bands_old)
     new_rows = [(900, 0, 111), (901, 0, 111), (902, 1, 222), (903, 5, 999)]
     bands_new = spark.createDataFrame(
         new_rows, "doc_id long, band_id int, band_hash long"
     )
     got = {
         (r["src"], r["dst"])
-        for r in probe_band_index(bands_new, bands_old, stats_old, cfg).collect()
+        for r in probe_index(
+            bands_new, bands_old, ["band_id", "band_hash"], cfg
+        ).collect()
     }
     # hot bucket: one star edge per new row, to pivot 100
     # cold bucket: full join (3 old members); unknown bucket 999: nothing
@@ -143,8 +144,10 @@ def test_probe_band_index_caps_hot_buckets(spark):
 
 
 def test_probe_block_index_caps_and_filters(spark):
-    from dedup.incremental import probe_block_index
-    from dedup.stages.simhash import block_rows, block_stats
+    """The SimHash probe: probe_index carries the simhash as the member
+    payload, so the popcount filter applies to the hot bucket's star edge."""
+    from dedup.incremental import probe_index
+    from dedup.stages.simhash import block_rows, within_radius
 
     cfg = DedupConfig(bucket_cap=2, hamming_radius=3, shuffle_partitions=8)
     # old hot bucket (block 0, val 7): members 10..14 (bsz=5 > cap 2),
@@ -153,7 +156,6 @@ def test_probe_block_index_caps_and_filters(spark):
         [(d, 0, [7]) for d in range(10, 15)],
         "doc_id long, simhash long, blocks array<long>",
     )
-    stats = block_stats(sims_old)
     # new rows: 900 within radius of pivot (popcount(7^0)=3), 901 too far
     new = spark.createDataFrame(
         [(900, 7, 0, 7), (901, 255, 0, 7)],
@@ -161,9 +163,10 @@ def test_probe_block_index_caps_and_filters(spark):
     )
     got = {
         (r["src"], r["dst"])
-        for r in probe_block_index(
-            new, block_rows(sims_old), stats, cfg
-        ).collect()
+        for r in within_radius(probe_index(
+            new, block_rows(sims_old), ["block_id", "block_val"], cfg,
+            payload="simhash",
+        ), cfg).collect()
     }
     assert got == {(10, 900)}  # star edge passes popcount, 901 filtered
 
@@ -240,13 +243,6 @@ def test_ingest_writes_o_touched_clusters_delta(incremental_clusters):
     assert n_batch <= delta_rows < N_TOTAL, delta_rows
     # resolved view stays exactly one row per doc
     assert len(incr) == N_TOTAL and incr.doc_id.is_unique
-    # stats logs: the appended delta holds ONLY buckets the batch touched
-    # (an upsert, not a full-index rewrite)
-    for table in ("bands_stats", "sim_stats"):
-        ssegs = pipe.store.paths(table)
-        assert len(ssegs) == 2, table
-        base_n, delta_n = seg_rows(ssegs[0]), seg_rows(ssegs[1])
-        assert 0 < delta_n < base_n, (table, base_n, delta_n)
 
 
 def test_clusters_log_folds_past_threshold(spark, tmp_path):

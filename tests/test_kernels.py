@@ -208,13 +208,12 @@ def test_lcs_matches_naive_unicode(a, b):
 
 
 def test_prefilter_threshold_recall_safe():
-    """The verify stage drops pairs with MinHash-estimated J below
-    config.prefilter_min_est_jaccard (0.06, keyed 1.5 sigma under the LCS
-    gate) before content verification. Property: for pairs at true J >= 0.45
-    (the weakest planted type-3 grade), the estimate at num_perm=128
-    essentially never falls below the OLD aggressive 0.20 threshold — so it
-    certainly clears the current 0.06 one. (The [gate, 0.20) band is covered
-    by tests/test_stages.py::test_lcs_band_pairs_survive_prefilter.)"""
+    """MinHash-estimate concentration at num_perm=128: for pairs at true
+    J >= 0.45 (the weakest planted type-3 grade), the estimate essentially
+    never falls below 0.20. The verify screens cut on the estimate only at
+    config.jaccard_floor_gate() (4 sigma under jaccard_floor, Jaccard
+    branch only); LCS-possible pairs are kept whatever their estimate
+    (tests/test_stages.py::test_prepare_pairs_keeps_short_long_lcs_pair)."""
     rng = random.Random(99)
     a, b = K.make_minhash_coeffs(128, 42)
     worst = 1.0

@@ -123,8 +123,8 @@ def test_all_stages_completed(clusters):
     by_name = {r.name: r for r in pipe.results}
     assert [r.name for r in pipe.results] == STAGES
     assert set(by_name["signatures"].snapshots) == {
-        "signatures", "bands", "bands_stats", "edges_lsh", "sim_blocks",
-        "sim_stats", "edges_simhash", "winnow_fps",
+        "signatures", "bands", "edges_lsh", "sim_blocks", "edges_simhash",
+        "winnow_fps",
     }
 
 

@@ -325,7 +325,7 @@ def test_lcs_band_pairs_survive_prefilter(spark):
         a = rand_text(550) + common
         b = common + rand_text(550)
         tj = K.jaccard_shingles(a, b, cfg.shingle_k, normalize=False)
-        assert cfg.lcs_gate_jaccard <= tj < 0.20, f"pair {i}: J={tj:.3f}"
+        assert 0.10 <= tj < 0.20, f"pair {i}: J={tj:.3f}"
         rows.append((2 * i, 2 * i + 1, a, b))
 
     reps = spark.createDataFrame(
@@ -399,7 +399,7 @@ def test_fp_screen_keeps_lcs_pairs_drops_impossible(spark):
     a, b = K.make_minhash_coeffs(cfg.num_perm, cfg.seed)
     sig = K.minhash_batch([rows[-2][1], rows[-1][1]], cfg.shingle_k, a, b)
     est = float(np.mean(sig[0] == sig[1]))
-    assert cfg.prefilter_min_est_jaccard <= est < cfg.jaccard_floor_gate()
+    assert 0.06 <= est < cfg.jaccard_floor_gate()
     assert K.longest_common_substring(rows[-2][1], rows[-1][1]) < 60
     reps = spark.createDataFrame(rows, "doc_id long, content string")
     sigs = SM.joint_signatures(reps, cfg, with_fp=True)
@@ -422,6 +422,45 @@ def test_fp_screen_keeps_lcs_pairs_drops_impossible(spark):
         ).collect()
     }
     assert out[(0, 1)] is True
+
+
+def test_prepare_pairs_keeps_short_long_lcs_pair(spark):
+    """A short doc sharing its threshold run with a long doc: the LCS
+    branch accepts (threshold max(60, 0.25*292) = 73 <= 92-char run) while
+    exact Jaccard is ~0.01 and the MinHash estimate ~0. No estimate cut may
+    drop it before verify: the fingerprint screen keeps it by construction.
+    (Such pairs reach prepare_pairs as star edges of a capped bucket, which
+    link every member to the pivot whatever its size.)"""
+    import random
+    import string
+
+    import numpy as np
+
+    rng = random.Random(31)
+
+    def rand_text(n):
+        return "".join(rng.choice(string.ascii_lowercase) for _ in range(n))
+
+    cfg = DedupConfig(shuffle_partitions=8)
+    run = rand_text(92)
+    short = rand_text(100) + run + rand_text(100)
+    long = rand_text(3000) + run + rand_text(3000)
+    assert (len(short), len(long)) == (292, 6092)
+    assert K.jaccard_shingles(short, long, cfg.shingle_k) < 0.02
+    a, b = K.make_minhash_coeffs(cfg.num_perm, cfg.seed)
+    sig = K.minhash_batch([short, long], cfg.shingle_k, a, b)
+    assert float(np.mean(sig[0] == sig[1])) < 0.06
+
+    reps = spark.createDataFrame([(0, short), (1, long)],
+                                 "doc_id long, content string")
+    sigs = SM.joint_signatures(reps, cfg, with_fp=True)
+    pairs = SV.prepare_pairs(
+        spark.createDataFrame([(0, 1)], "src long, dst long"), reps, sigs,
+        cfg, fps=sigs.select("doc_id", "fp", "nlen"),
+    )
+    assert [(r["src"], r["dst"]) for r in pairs.collect()] == [(0, 1)]
+    out = SV.verify_edges(pairs, cfg).collect()
+    assert out[0]["accepted"] and out[0]["lcs"] >= 92
 
 
 def test_cc_mega_star_and_broom_skew(spark):

@@ -112,33 +112,39 @@ def test_commit_many_is_one_catalog_version(spark, tmp_path):
 
 
 def test_unstamped_store_is_refused_by_every_opener(spark, tmp_path):
-    """A catalog written before the format stamp counts as format 0: once
-    it holds tables, the store, the pipeline and the protect engine all
-    refuse it, naming the rebuild command, instead of reading or migrating
-    its tables."""
+    """A catalog written before the format stamp counts as format 0, and a
+    format-1 catalog still holds the per-bucket stats logs this code no
+    longer keeps: once either holds tables, the store, the pipeline and the
+    protect engine all refuse it, naming the rebuild command, instead of
+    reading or migrating its tables."""
     from dedup.api import Deduplication
     from dedup.config import DedupConfig
     from dedup.pipeline import Pipeline
 
-    cat = tmp_path / "w" / "tables" / "_catalog"
-    cat.mkdir(parents=True)
-    (cat / "v000000000001.json").write_text(json.dumps({"tables": {}}))
-    TableStore(tmp_path / "w" / "tables")  # no tables, no layout to refuse
-    (cat / "v000000000002.json").write_text(json.dumps(
-        {"tables": {"reps": {"segments": ["seg-0"]}}, "ts": 0.0}
-    ))
-    openers = [
-        lambda: TableStore(tmp_path / "w" / "tables"),
-        lambda: Pipeline(spark, DedupConfig(), tmp_path / "w"),
-        lambda: Deduplication(spark, tmp_path / "w" / "tables"),
-    ]
-    for open_store in openers:
-        with pytest.raises(StoreFormatError) as err:
-            open_store()
-        msg = str(err.value)
-        assert "format 0" in msg and f"format {STORE_FORMAT}" in msg
-        assert str(tmp_path / "w" / "tables") in msg
-        assert "jobs/run_pipeline.py --input <files> --work-dir" in msg
+    for found, stamp in [(0, {}), (1, {"format": 1})]:
+        work = tmp_path / f"w{found}"
+        cat = work / "tables" / "_catalog"
+        cat.mkdir(parents=True)
+        (cat / "v000000000001.json").write_text(
+            json.dumps({**stamp, "tables": {}})
+        )
+        TableStore(work / "tables")  # no tables, no layout to refuse
+        (cat / "v000000000002.json").write_text(json.dumps(
+            {**stamp, "tables": {"reps": {"segments": ["seg-0"]}}, "ts": 0.0}
+        ))
+        openers = [
+            lambda: TableStore(work / "tables"),
+            lambda: Pipeline(spark, DedupConfig(), work),
+            lambda: Deduplication(spark, work / "tables"),
+        ]
+        for open_store in openers:
+            with pytest.raises(StoreFormatError) as err:
+                open_store()
+            msg = str(err.value)
+            assert f"format {found}," in msg
+            assert f"format {STORE_FORMAT};" in msg
+            assert str(work / "tables") in msg
+            assert "jobs/run_pipeline.py --input <files> --work-dir" in msg
 
 
 def test_cas_conflict_retries_and_preserves_other_writers(spark, tmp_path):
