@@ -142,7 +142,7 @@ class DeduplicationContext:
         segment a concurrent protect_detailed appended between our fold
         read and the commit — losing completed results and re-running
         their effects. On StaleReplaceError we re-derive from the current
-        state and retry (the TableStore._fold_log pattern)."""
+        state and retry (the incremental._fold_log pattern)."""
         store = self.engine.store
         for _ in range(max_attempts):
             if not store.exists(self._table):

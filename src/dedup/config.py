@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -24,8 +24,8 @@ class DedupConfig:
     num_perm: int = 128             # MinHash signature length
     bands: int = 32                 # LSH bands
     rows_per_band: int = 4          # bands * rows_per_band == num_perm
-    # --- SimHash ---
-    simhash_bits: int = 64
+    # --- SimHash (64-bit; text is always normalized before shingling:
+    # lowercase + collapsed whitespace, as the DuckDB oracle does) ---
     hamming_radius: int = 3         # Hamming-ball radius for near-dup candidates
     # --- verification ---
     lcs_min_chars: int = 60         # absolute LCS floor
@@ -51,8 +51,6 @@ class DedupConfig:
     # O(threshold) regardless of ingest count). Iceberg analogue:
     # rewrite_data_files on a cadence.
     compact_segments: int = 16
-    # --- text normalization before shingling ---
-    normalize: bool = True          # lowercase + collapse whitespace
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
@@ -60,8 +58,6 @@ class DedupConfig:
                 f"bands*rows_per_band ({self.bands}x{self.rows_per_band}) "
                 f"must equal num_perm ({self.num_perm})"
             )
-        if self.simhash_bits != 64:
-            raise ValueError("only 64-bit SimHash is supported")
         blocks = self.hamming_radius + 1
         if 64 % blocks != 0:
             raise ValueError(

@@ -1,14 +1,12 @@
 """Incremental ingest — assign clusters to a NEW batch against the existing
 index without recomputing the corpus.
 
-This is the engine's protect semantics applied at batch granularity (the
-reference runs one effect per key and replays stored results; here the
-"effect" is clustering one ingest batch, and previously-clustered docs are
-never re-shingled):
+Every ingest channel (this one, incremental_ann, incremental_spans) runs
+under ONE protocol, `run_ingest`: ledger claim/replay, snapshot-guarded
+atomic commit, completion record, compaction. This module's batch steps —
+previously-clustered docs are never re-shingled:
 
-1. the batch is fingerprinted; a ledger row under context `ingest` makes the
-   whole ingest idempotent — re-submitting the same batch replays the stored
-   snapshots (reference protect, DeduplicationContext.scala:95-111);
+1. the batch's docs that are already in `hashed` are dropped (a re-ingest);
 2. new docs whose sha256 already exists inherit the existing representative
    (point lookup against the hashed table — the R6 peek);
 3. genuinely new contents are shingled/signed ONCE and probed against the
@@ -26,22 +24,9 @@ never re-shingled):
      cap/star treatment the batch channels apply (ADVICE r1);
 4. candidates pass the same pre-verify screens + content verification;
 5. connected components run over (old assignments as edges) ∪ (exact
-   inheritance edges) ∪ (new verified edges), so new evidence can merge
-   existing clusters, and cluster_id stays min(doc_id) of the component.
-
-Crash safety (ADVICE r1, high): every table change of an ingest — index
-appends and the clusters delta — publishes in ONE atomic catalog CAS
-(TableStore.commit_many), so the re-ingest guard (left_anti on `hashed`)
-can never observe a half-committed batch. Concurrency (ADVICE r2): the
-derived payload (the recomputed clusters delta) is guarded by the
-snapshot it was derived from — a racing ingest that
-commits first makes this one fail with StaleReplaceError rather than
-silently discarding the winner's merge; re-running the loser re-reads
-current state under its ledger protection. The only crash window left is
-between the catalog commit and the ledger completion record; a retry then
-recomputes against an index that already contains the batch, which is a
-pure no-op (the guard empties the batch, appends are empty, clusters
-recompute to the identical assignment from the committed edges).
+   inheritance edges) ∪ (new verified edges) — stage_cluster's
+   touched_components — so new evidence can merge existing clusters, and
+   cluster_id stays min(doc_id) of the component.
 
 Scale note: per-batch probe cost is O(batch x bucket hit rate) with both
 guards above; the index tables grow by APPEND segments (no corpus-sized
@@ -59,14 +44,14 @@ the index rows it reads for its cold join anyway.
 
 from __future__ import annotations
 
-import json
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .ledger import Ledger, Status
+from .ledger import Ledger
 from .storage import TableStore
 from .stages import cluster as stage_cluster
 from .stages import exact as stage_exact
@@ -98,14 +83,89 @@ def read_clusters(spark: SparkSession, store: TableStore) -> DataFrame:
     return _read_latest(spark, store, "clusters", ["doc_id"])
 
 
-def _batch_fingerprint(files: DataFrame) -> str:
-    row = files.agg(
+def batch_fingerprint(df: DataFrame, prefix: str, key_sql: str) -> str:
+    """Ledger id of an ingest batch: `{prefix}-{rows}-{xor of row hashes}`,
+    order-independent, so re-submitting the same rows replays."""
+    row = df.agg(
         F.coalesce(
-            F.expr("bit_xor(xxhash64(repo, path, commit))"), F.lit(0)
+            F.expr(f"bit_xor(xxhash64({key_sql}))"), F.lit(0)
         ).alias("h"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    return f"batch-{row['n']}-{row['h'] & 0xFFFFFFFFFFFFFFFF:016x}"
+    return f"{prefix}-{row['n']}-{row['h'] & 0xFFFFFFFFFFFFFFFF:016x}"
+
+
+def run_ingest(
+    spark: SparkSession,
+    config: DedupConfig,
+    store: TableStore,
+    ledger: Ledger,
+    batch_id: str,
+    context_id: str,
+    log: str,
+    keys: list[str],
+    body: Callable,
+) -> None:
+    """The one ingest protocol — the reference's protect lifecycle
+    (DeduplicationContext.scala:95-111) at batch granularity, shared by the
+    text, embedding and span channels.
+
+    1. `Ledger.claim` the batch under `context_id`: a completed batch
+       returns at once (replay; the caller reads the log), a stale claim is
+       taken over or raises ClaimLost.
+    2. Snapshot `log` BEFORE `body` reads anything (ADVICE r3): reads pin a
+       table's segment list when the DataFrame is built, so a commit racing
+       in between makes the snapshot look older than current and the
+       guarded commit fails safe, instead of installing a delta derived from
+       older state than the snapshot claims.
+    3. `body(persist)` returns `(appends, delta)`: rows to append per table
+       and the log's delta (latest-wins rows keyed on `keys`). Every frame
+       it passes to `persist` is released when the ingest ends.
+    4. Stamp the delta `_v` one above every committed log segment, stage all
+       appends (storage.PARTITIONED lays out the bucket indexes), and
+       publish them in ONE catalog CAS guarded by the log snapshot: the
+       batch lands whole or not at all (ADVICE r1), and a racing ingest
+       that committed first makes this one raise StaleReplaceError rather
+       than discard the winner's merge (ADVICE r2); re-running the loser
+       re-reads current state under its claim.
+    5. Record the completion, then fold the log and compact the appended
+       tables past config.compact_segments (maintenance; a crash here costs
+       nothing).
+
+    The one crash window is between the commit and the completion record;
+    the retry then drops every doc as already ingested, appends nothing
+    and re-derives the same assignment — a no-op."""
+    if ledger.claim(batch_id, context_id, config, time.time()) is not None:
+        return
+    cached: list[DataFrame] = []
+
+    def persist(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return df
+
+    try:
+        expected = {log: store.current_snapshot(log)}
+        v_next = len(store.paths(log))
+        appends, delta = body(persist)
+        appends[log] = delta.withColumn("_v", F.lit(v_next).cast("int"))
+        updates = {t: store.stage(df, t, "append") for t, df in appends.items()}
+        store.commit_many(updates, expected=expected)
+        ledger.mark_completed(
+            batch_id, context_id,
+            {"snapshots": {t: store.current_snapshot(t) for t in updates},
+             "config_hash": config.config_hash()},
+            time.time(), config.ttl_s,
+        )
+        # the log gets a SEMANTIC fold (superseded rows dropped, survivors
+        # restamped _v=0 — the Iceberg rewrite_data_files analogue for a
+        # MERGE INTO target); the other tables a plain compaction
+        _fold_log(spark, store, log, keys, config.compact_segments)
+        for t in appends:
+            if t != log:
+                store.compact(spark, t, min_segments=config.compact_segments)
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def touched_slice(
@@ -185,38 +245,9 @@ def ingest_batch(
     new_files: DataFrame,
 ) -> DataFrame:
     """Cluster `new_files` against the existing store; returns the updated
-    clusters DataFrame. Idempotent per batch (ledger-protected)."""
-    batch_id = _batch_fingerprint(new_files)
-    now = time.time()
-    status = ledger.status(batch_id, _CTX, config.max_processing_time_s, now)
-    if status is Status.COMPLETED:
-        payload = json.loads(ledger.get(batch_id, _CTX).result)
-        if payload.get("config_hash") == config.config_hash():
-            return read_clusters(spark, store)  # replay stored result
-        ledger.delete(batch_id, _CTX)
-    elif status in (Status.TIMEOUT, Status.EXPIRED):
-        ledger.attempt_replacing(batch_id, _CTX, ledger.get(batch_id, _CTX).started_at, now)
-    else:
-        ledger.create(batch_id, _CTX, now)
+    clusters DataFrame. Idempotent per batch (run_ingest)."""
 
-    # every per-ingest cache is tracked and released in the finally
-    # below (ADVICE r4: repeated ingests in a long-lived driver accumulated
-    # cached blocks until executor storage evicted under pressure)
-    cached: list[DataFrame] = []
-
-    def _p(df: DataFrame) -> DataFrame:
-        cached.append(df.persist())
-        return df
-
-    try:
-        # snapshot the guarded clusters delta below is DERIVED from. Captured BEFORE
-        # the reads (ADVICE r3): reads pin each table's segment list at
-        # DataFrame-construction time, so snapshotting first means a racing
-        # commit landing in between makes `expected` look OLDER than current
-        # and the CAS fails safe (StaleReplaceError) — snapshotting after the
-        # reads could make `expected` match the newer state while the payloads
-        # were derived from the older one, silently installing a stale merge.
-        replace_base = {"clusters": store.current_snapshot("clusters")}
+    def body(persist):
         hashed_old = store.read(spark, "hashed")
         reps_old = store.read(spark, "reps")
         sigs_old = store.read(spark, "signatures")
@@ -225,42 +256,42 @@ def ingest_batch(
         # -- 1. hash; drop re-ingested natural keys ----------------------------
         # (safe as a re-ingest guard because ingest commits are all-or-nothing:
         # a doc_id present in `hashed` implies its index/cluster rows landed too)
-        hashed_new = _p(stage_exact.hash_content(new_files).join(
+        hashed_new = persist(stage_exact.hash_content(new_files).join(
             hashed_old.select("doc_id"), "doc_id", "left_anti"
         ))
 
         # -- 2. exact inheritance against existing contents --------------------
         sha_owner_old = hashed_old.groupBy("sha").agg(F.min("doc_id").alias("rep_id"))
-        matched = _p(hashed_new.join(sha_owner_old, "sha", "left"))
+        matched = persist(hashed_new.join(sha_owner_old, "sha", "left"))
         known = matched.where(F.col("rep_id").isNotNull())
         fresh = matched.where(F.col("rep_id").isNull()).drop("rep_id")
 
         # -- 3. within-batch exact dedup + new representatives -----------------
         fresh_owner = fresh.groupBy("sha").agg(F.min("doc_id").alias("rep_id"))
-        fresh = _p(fresh.join(fresh_owner, "sha"))
+        fresh = persist(fresh.join(fresh_owner, "sha"))
         reps_new = fresh.where(F.col("doc_id") == F.col("rep_id")).drop("rep_id")
 
         # -- 4. signatures for new reps only (one fused UDF pass computes both
         # channels — content crosses Arrow once; bit-identical outputs) ---------
-        joint_new = _p(
+        joint_new = persist(
             stage_minhash.joint_signatures(reps_new, config, with_fp=True)
         )
         sigs_new = joint_new.select("doc_id", "sig")
-        bands_new = _p(stage_minhash.band_rows(joint_new))
+        bands_new = persist(stage_minhash.band_rows(joint_new))
         sims_new = joint_new.select("doc_id", "simhash", "blocks")
 
         # -- 5. candidates: new-new (capped) + new-old (index probe) --------
         # dedup=False: the four channels union into ONE global (src, dst)
         # dropDuplicates below (see pairs_from_buckets)
         lsh_keys, sim_keys = ["band_id", "band_hash"], ["block_id", "block_val"]
-        bands_new_pb = _p(stage_minhash.with_pbucket(bands_new))
-        blocks_new = _p(stage_simhash.with_sbucket(
+        bands_new_pb = persist(stage_minhash.with_pbucket(bands_new))
+        blocks_new = persist(stage_simhash.with_sbucket(
             stage_simhash.block_rows(sims_new)
         ))
-        bands_old = _p(touched_slice(
+        bands_old = persist(touched_slice(
             spark, store, "bands", "pbucket", bands_new_pb, lsh_keys
         ))
-        blocks_old = _p(touched_slice(
+        blocks_old = persist(touched_slice(
             spark, store, "sim_blocks", "sbucket", blocks_new, sim_keys
         ))
         cand = (
@@ -284,9 +315,7 @@ def ingest_batch(
         reps_all = reps_old.select("doc_id", "content").unionByName(
             reps_new.select("doc_id", "content")
         )
-        sigs_all = sigs_old.select("doc_id", "sig").unionByName(
-            sigs_new.select("doc_id", "sig")
-        )
+        sigs_all = sigs_old.select("doc_id", "sig").unionByName(sigs_new)
         # fingerprints are persisted alongside the other indexes, so each
         # ingest fingerprints ONLY its new reps (ADVICE r2), inside the
         # batch's own fused pass (with_fp=True). Docs with empty normalized
@@ -294,7 +323,7 @@ def ingest_batch(
         # endpoint.
         fps_new = joint_new.select("doc_id", "fp", "nlen")
         fps_all = store.read(spark, "winnow_fps").unionByName(fps_new)
-        verified = _p(stage_verify.verify_edges(
+        verified = persist(stage_verify.verify_edges(
             stage_verify.prepare_pairs(cand, reps_all, sigs_all, config,
                                        fps=fps_all),
             config,
@@ -302,11 +331,8 @@ def ingest_batch(
         ).where("accepted"))
 
         # -- 7. clustering over the TOUCHED subgraph only (VERDICT r3 #6) ------
-        # Only components connected to this batch can change: new edges always
-        # have >= 1 new endpoint, and old components are stars onto cluster_id.
-        # So CC runs over (new edges + the star edges of old clusters any new
-        # edge touches) — O(batch + touched members) — and the output delta
-        # rewrites exactly (batch docs + touched members), never the corpus.
+        # new edges = exact inheritance + verified; the delta rewrites exactly
+        # (batch docs + touched members), never the corpus
         exact_edges = (
             known.select(F.col("doc_id").alias("src"), F.col("rep_id").alias("dst"))
             .unionByName(
@@ -315,34 +341,9 @@ def ingest_batch(
                 )
             )
         )
-        # O(batch) rows, referenced by three consumers (endpoints, CC input,
-        # membership); eager checkpoint both avoids re-deriving the verify
-        # chain per consumer and cuts the union-of-self-referencing-branches
-        # plan shape that trips Catalyst's rewriteConstraints
-        new_edges = exact_edges.unionByName(
-            verified.select("src", "dst")
-        ).localCheckpoint()
-        endpoints = (
-            new_edges.select(F.col("src").alias("doc_id"))
-            .unionByName(new_edges.select(F.col("dst").alias("doc_id")))
-            .distinct()
-        )
-        touched_cids = (
-            clusters_old.join(endpoints, "doc_id")
-            .select("cluster_id").distinct()
-        )
-        # O(touched) rows; eagerly checkpointed, NOT persisted: the self-join of
-        # clusters_old (touched_cids is itself derived from it) inside a later
-        # Union trips Catalyst's union constraint rewriting (key-not-found in
-        # rewriteConstraints) — cutting the lineage here removes the self-join
-        # from every downstream plan and stops CC re-deriving the probe chain
-        # per iteration ([[spark-lazy-dag-recompute]])
-        members_old = clusters_old.join(touched_cids, "cluster_id").localCheckpoint()
-        sub_old_edges = members_old.where(
-            F.col("doc_id") != F.col("cluster_id")
-        ).select(F.col("doc_id").alias("src"), F.col("cluster_id").alias("dst"))
-        labels, _ = stage_cluster.connected_components(
-            new_edges.unionByName(sub_old_edges)
+        labels, members_old = stage_cluster.touched_components(
+            exact_edges.unionByName(verified.select("src", "dst")),
+            clusters_old.select("doc_id", "cluster_id"),
         )
         delta_docs = hashed_new.select("doc_id", "sha").unionByName(
             hashed_old.select("doc_id", "sha").join(
@@ -374,55 +375,22 @@ def ingest_batch(
                 F.when(F.col("n_shas") >= 2, "near").otherwise("exact").alias("method"),
             )
         )
-        # delta stamped one version above every committed segment
-        v_next = len(store.paths("clusters"))
-        clusters_delta = clusters_delta.withColumn(
-            "_v", F.lit(v_next).cast("int")
-        )
-
-        # -- 8. stage everything, publish in ONE atomic catalog CAS ------------
-        updates = {
-            "hashed": store.stage(
-                hashed_new.select(*hashed_old.columns), "hashed", "append"
-            ),
-            "reps": store.stage(
-                reps_new.select(*reps_old.columns), "reps", "append"
-            ),
-            "signatures": store.stage(
-                sigs_new.select("doc_id", "sig"), "signatures", "append"
-            ),
-            "bands": store.stage(
-                bands_new_pb.repartition(F.col("pbucket")), "bands", "append",
-                ["pbucket"],
-            ),
-            "sim_blocks": store.stage(
-                blocks_new.repartition(F.col("sbucket")), "sim_blocks",
-                "append", ["sbucket"],
-            ),
-            "clusters": store.stage(clusters_delta, "clusters", "append"),
-            "winnow_fps": store.stage(fps_new, "winnow_fps", "append"),
+        appends = {
+            "hashed": hashed_new.select(*hashed_old.columns),
+            "reps": reps_new.select(*reps_old.columns),
+            "signatures": sigs_new,
+            "bands": bands_new_pb,
+            "sim_blocks": blocks_new,
+            "winnow_fps": fps_new,
         }
-        store.commit_many(updates, expected=replace_base)
-        snapshots = {t: store.current_snapshot(t) for t in updates}
-        ledger.mark_completed(
-            batch_id, _CTX,
-            {"snapshots": snapshots, "config_hash": config.config_hash()},
-            time.time(), config.ttl_s,
-        )
-        # maintenance: fold any appended index past the segment threshold back
-        # to one segment (post-completion, so a crash here costs nothing; a
-        # concurrent append makes compact a guarded no-op). The clusters
-        # upsert LOG gets a SEMANTIC fold instead: superseded rows are
-        # dropped, the survivors restamped _v=0 — the Iceberg
-        # rewrite_data_files analogue for a MERGE INTO target.
-        for t, u in updates.items():
-            if u.mode == "append" and t != "clusters":
-                store.compact(spark, t, min_segments=config.compact_segments)
-        _fold_log(spark, store, "clusters", ["doc_id"], config.compact_segments)
-        return read_clusters(spark, store)
-    finally:
-        for df in cached:
-            df.unpersist()
+        return appends, clusters_delta
+
+    run_ingest(
+        spark, config, store, ledger,
+        batch_fingerprint(new_files, "batch", "repo, path, commit"),
+        _CTX, "clusters", ["doc_id"], body,
+    )
+    return read_clusters(spark, store)
 
 
 def _fold_log(

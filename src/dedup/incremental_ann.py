@@ -4,10 +4,9 @@ hyperplane-LSH bucket index without re-scoring the corpus.
 The minhash/simhash channels already honor the O(batch + touched) ingest
 contract (incremental.py); this module extends it to the embedding-cosine
 near-dup channel, the third signal a training-data pipeline dedupes on.
-Same reference semantics grafted at batch granularity: a ledger row makes
-each ingest idempotent (protect/replay, DeduplicationContext.scala:95-111),
-commits are ONE atomic catalog CAS, and previously-ingested vectors are
-never re-bucketed.
+Each ingest runs under the one ingest protocol, incremental.run_ingest
+(ledger claim/replay, one guarded commit, log fold); previously-ingested
+vectors are never re-bucketed.
 
 The index key is the multi-probe hyperplane bucket of the ONE-SHOT
 embedding channel (ops.similarity._np_bucket_norm_udf/_probes_col) — not
@@ -31,10 +30,10 @@ Tables (TableStore):
 - ``emb_vectors`` (vec_id, v, nv): vectors + norms, joined by vec_id to
   score candidate pairs; grows by appends, plain compaction.
 - ``emb_buckets`` (vec_id, bucket, pbucket): the exploded multi-probe
-  rows, hive-partitioned on pbucket = pmod(bucket, N_PBUCKETS_EMB) so a
-  batch probe reads only the partitions its buckets land in
-  (PartitionFilters at the scan — mirroring bands/pbucket and
-  sim_blocks/sbucket).
+  rows, hive-partitioned (storage.PARTITIONED) on pbucket =
+  pmod(bucket, N_PBUCKETS_EMB) so a batch probe reads only the partitions
+  its buckets land in (PartitionFilters at the scan — mirroring
+  bands/pbucket and sim_blocks/sbucket).
 - ``emb_clusters`` (vec_id, cluster_id, _v): log-structured assignment;
   each ingest appends a delta holding ONLY the batch plus the members of
   old clusters its edges touched, latest-wins reads via
@@ -49,20 +48,23 @@ bucket's rows all sit in its pbucket — and hot buckets contribute ONE star
 edge to their pivot (sound here: an LSH bucket is a similarity bucket, and
 the tau filter validates every edge). Every candidate then passes the
 exact rounded-cosine >= tau filter, and connected components run over the
-touched subgraph only.
+touched subgraph only (stages.cluster.touched_components).
 """
 
 from __future__ import annotations
-
-import json
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .incremental import _fold_log, _read_latest, probe_index, touched_slice
-from .ledger import Ledger, Status
+from .incremental import (
+    _read_latest,
+    batch_fingerprint,
+    probe_index,
+    run_ingest,
+    touched_slice,
+)
+from .ledger import Ledger
 from .ops.similarity import (
     _DIM,
     _np_bucket_norm_udf,
@@ -87,19 +89,6 @@ def read_emb_clusters(spark: SparkSession, store: TableStore) -> DataFrame:
     return _read_latest(spark, store, "emb_clusters", ["vec_id"]).select(
         "vec_id", "cluster_id"
     )
-
-
-def _batch_fingerprint(emb: DataFrame) -> str:
-    # ADVICE r5: fold the embedding VALUES in, not just vec_id — a
-    # re-submitted batch with the same ids but different vectors must not
-    # replay the stored result (mirrors incremental_spans' sha2(text) fold)
-    row = emb.agg(
-        F.coalesce(
-            F.expr("bit_xor(xxhash64(vec_id, embedding))"), F.lit(0)
-        ).alias("h"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return f"embbatch-{row['n']}-{row['h'] & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
 def _bucket_rows(base: DataFrame, n_planes: int) -> DataFrame:
@@ -199,10 +188,7 @@ def build_embedding_index(
             "emb_vectors": store.stage(
                 base.select("vec_id", "v", "nv"), "emb_vectors", "replace"
             ),
-            "emb_buckets": store.stage(
-                rows.repartition(F.col("pbucket")), "emb_buckets",
-                "replace", ["pbucket"],
-            ),
+            "emb_buckets": store.stage(rows, "emb_buckets", "replace"),
             "emb_clusters": store.stage(clusters, "emb_clusters", "replace"),
         })
         return read_emb_clusters(spark, store)
@@ -219,34 +205,9 @@ def ingest_embeddings(
     tau: float,
 ) -> DataFrame:
     """Cluster `new_emb` against the existing index; returns the updated
-    clusters DataFrame. Idempotent per batch (ledger-protected); commits in
-    ONE atomic catalog CAS guarded by the emb_clusters snapshot."""
-    batch_id = _batch_fingerprint(new_emb)
-    now = time.time()
-    status = ledger.status(batch_id, _CTX, config.max_processing_time_s, now)
-    if status is Status.COMPLETED:
-        payload = json.loads(ledger.get(batch_id, _CTX).result)
-        if payload.get("config_hash") == config.config_hash():
-            return read_emb_clusters(spark, store)  # replay stored result
-        ledger.delete(batch_id, _CTX)
-    elif status in (Status.TIMEOUT, Status.EXPIRED):
-        ledger.attempt_replacing(
-            batch_id, _CTX, ledger.get(batch_id, _CTX).started_at, now
-        )
-    else:
-        ledger.create(batch_id, _CTX, now)
+    clusters DataFrame. Idempotent per batch (incremental.run_ingest)."""
 
-    cached: list[DataFrame] = []
-
-    def _p(df: DataFrame) -> DataFrame:
-        cached.append(df.persist())
-        return df
-
-    try:
-        # snapshot BEFORE the reads: a racing commit landing in between makes
-        # `expected` look older than current and the CAS fails safe
-        # (StaleReplaceError), never silently installing a stale merge
-        replace_base = {"emb_clusters": store.current_snapshot("emb_clusters")}
+    def body(persist):
         vectors_old = store.read(spark, "emb_vectors")
         n_planes = int(store.read_pandas("emb_meta")["n_planes"].iloc[0])
         clusters_old = read_emb_clusters(spark, store)
@@ -264,18 +225,18 @@ def ingest_embeddings(
 
         # -- 1. drop re-ingested vec_ids (commits are all-or-nothing, so a
         # vec_id in emb_vectors implies its bucket/cluster rows landed too)
-        fresh = _p(
+        fresh = persist(
             prep_vectors(new_emb).join(
                 vectors_old.select("vec_id"), "vec_id", "left_anti"
             )
         )
 
         # -- 2. bucket under the FROZEN plane count --------------------------
-        rows_new = _p(_bucket_rows(fresh, n_planes))
+        rows_new = persist(_bucket_rows(fresh, n_planes))
 
         # -- 3. candidates: new-new (capped) + new-old (pruned probe) -------
         new_docs = rows_new.withColumnRenamed("vec_id", "doc_id")
-        buckets_old = _p(touched_slice(
+        buckets_old = persist(touched_slice(
             spark, store, "emb_buckets", "pbucket", rows_new, ["bucket"]
         ).withColumnRenamed("vec_id", "doc_id"))
         cand = (
@@ -285,84 +246,36 @@ def ingest_embeddings(
             .dropDuplicates(["src", "dst"])
         )
 
-        # -- 4. exact cosine >= tau ----------------------------------------
+        # -- 4. exact cosine >= tau, then CC over the touched subgraph ------
         vecs = vectors_old.select("vec_id", "v", "nv").unionByName(
             fresh.select("vec_id", "v", "nv")
         )
-        new_edges = _tau_edges(cand, vecs, tau).localCheckpoint()
-
-        # -- 5. CC over the touched subgraph only ---------------------------
-        # only components connected to this batch can change: new edges have
-        # >= 1 new endpoint, old components collapse to stars on cluster_id
-        endpoints = (
-            new_edges.select(F.col("src").alias("vec_id"))
-            .unionByName(new_edges.select(F.col("dst").alias("vec_id")))
-            .distinct()
-        )
-        touched_cids = (
-            clusters_old.join(endpoints, "vec_id")
-            .select("cluster_id").distinct()
-        )
-        members_old = clusters_old.join(
-            touched_cids, "cluster_id"
-        ).localCheckpoint()
-        sub_old_edges = members_old.where(
-            F.col("vec_id") != F.col("cluster_id")
-        ).select(
-            F.col("vec_id").alias("src"), F.col("cluster_id").alias("dst")
-        )
-        labels, _ = stage_cluster.connected_components(
-            new_edges.unionByName(sub_old_edges)
+        labels, members_old = stage_cluster.touched_components(
+            _tau_edges(cand, vecs, tau),
+            clusters_old.withColumnRenamed("vec_id", "doc_id"),
         )
 
-        # -- 6. delta = batch + touched members, stamped at the next _v -----
+        # -- 5. delta = batch + touched members -----------------------------
         delta_ids = fresh.select("vec_id").unionByName(
-            members_old.select("vec_id")
+            members_old.select(F.col("doc_id").alias("vec_id"))
         )
-        v_next = len(store.paths("emb_clusters"))
-        clusters_delta = (
-            delta_ids.join(
-                labels.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left"
-            )
-            .select(
-                "vec_id",
-                F.coalesce("cluster_id", "vec_id").alias("cluster_id"),
-            )
-            .withColumn("_v", F.lit(v_next).cast("int"))
+        clusters_delta = delta_ids.join(
+            labels.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left"
+        ).select(
+            "vec_id", F.coalesce("cluster_id", "vec_id").alias("cluster_id")
         )
-
-        # -- 7. ONE atomic catalog CAS --------------------------------------
-        updates = {
-            "emb_vectors": store.stage(
-                fresh.select("vec_id", "v", "nv"), "emb_vectors", "append"
-            ),
-            "emb_buckets": store.stage(
-                rows_new.repartition(F.col("pbucket")), "emb_buckets",
-                "append", ["pbucket"],
-            ),
-            "emb_clusters": store.stage(
-                clusters_delta, "emb_clusters", "append"
-            ),
+        appends = {
+            "emb_vectors": fresh.select("vec_id", "v", "nv"),
+            "emb_buckets": rows_new,
         }
-        store.commit_many(updates, expected=replace_base)
-        snapshots = {t: store.current_snapshot(t) for t in updates}
-        ledger.mark_completed(
-            batch_id, _CTX,
-            {"snapshots": snapshots, "config_hash": config.config_hash()},
-            time.time(), config.ttl_s,
-        )
-        # maintenance: semantic fold of the assignment log past the segment
-        # threshold; the vector/bucket indexes get plain compactions
-        _fold_log(
-            spark, store, "emb_clusters", ["vec_id"], config.compact_segments
-        )
-        store.compact(
-            spark, "emb_vectors", min_segments=config.compact_segments
-        )
-        store.compact(
-            spark, "emb_buckets", min_segments=config.compact_segments
-        )
-        return read_emb_clusters(spark, store)
-    finally:
-        for df in cached:
-            df.unpersist()
+        return appends, clusters_delta
+
+    # ADVICE r5: the batch id folds the embedding VALUES in, not just vec_id
+    # — a re-submitted batch with the same ids but different vectors must
+    # not replay the stored result
+    run_ingest(
+        spark, config, store, ledger,
+        batch_fingerprint(new_emb, "embbatch", "vec_id, embedding"),
+        _CTX, "emb_clusters", ["vec_id"], body,
+    )
+    return read_emb_clusters(spark, store)

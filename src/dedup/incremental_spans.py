@@ -5,18 +5,17 @@ old content.
 Completes the O(batch + touched) ingest contract across ALL four dedup
 channels: minhash/simhash (incremental.py), embedding-cosine
 (incremental_ann.py), and now the duplicated-span channel (ops/spans.py —
-Lee-et-al exact substring dedup via mod-p winnowed rolling hashes). Same
-reference semantics grafted at batch granularity: a ledger row makes each
-ingest idempotent (protect/replay, DeduplicationContext.scala:95-111),
-commits are ONE atomic catalog CAS, and previously-ingested documents are
-never re-hashed.
+Lee-et-al exact substring dedup via mod-p winnowed rolling hashes). Each
+ingest runs under the one ingest protocol, incremental.run_ingest (ledger
+claim/replay, one guarded commit, log fold); previously-ingested documents
+are never re-hashed.
 
 Why this is O(batch + touched): a batch can change an OLD document's stats
 in exactly one way — a window hash that previously lived in ONE document
 gains a second document, flipping that document's positions for that hash
 from clean to duplicated. Every such hash is in the batch, so the update
 reads only the index partitions the batch's hashes land in
-(hive-partitioned pbucket pruning, the bands/pbucket idiom) and rewrites
+(incremental.touched_slice, the bands/pbucket idiom) and rewrites
 stats rows only for the batch docs plus the flipped old docs, appended as
 a log-structured delta (latest-wins reads, semantic fold past
 compact_segments). Old content is NEVER re-read: the index stores per
@@ -28,8 +27,9 @@ Tables (TableStore):
   Changing either is a rebuild (the hashes are incomparable), exactly like
   re-banding MinHash.
 - ``span_index`` (pbucket, h, doc_id, cnt): distinct sampled (hash, doc)
-  pairs with their position counts, hive-partitioned on
-  pbucket = pmod(h, N_PBUCKETS_SPANS); grows by appends, plain compaction.
+  pairs with their position counts, hive-partitioned (storage.PARTITIONED)
+  on pbucket = pmod(h, N_PBUCKETS_SPANS); grows by appends, plain
+  compaction.
 - ``span_stats`` (doc_id, n_spans, n_dup_spans, _v): log-structured
   per-doc stats deltas; `read_span_stats` folds latest-wins and derives
   dup_ratio with ops.spans' exact rounding, so an ingest sequence is
@@ -39,15 +39,17 @@ Tables (TableStore):
 
 from __future__ import annotations
 
-import json
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .incremental import _fold_log, _read_latest
-from .ledger import Ledger, Status
+from .incremental import (
+    _read_latest,
+    batch_fingerprint,
+    run_ingest,
+    touched_slice,
+)
+from .ledger import Ledger
 from .ops.spans import SPAN_L, SPAN_P, sampled_span_hashes
 from .storage import TableStore
 
@@ -69,16 +71,6 @@ def read_span_stats(spark: SparkSession, store: TableStore) -> DataFrame:
         (F.floor(F.col("n_dup_spans") / F.col("n_spans") * 10000
                  + F.lit(0.5)) / 10000).alias("dup_ratio"),
     )
-
-
-def _batch_fingerprint(docs: DataFrame) -> str:
-    row = docs.agg(
-        F.coalesce(
-            F.expr("bit_xor(xxhash64(doc_id, sha2(text, 256)))"), F.lit(0)
-        ).alias("h"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    return f"spanbatch-{row['n']}-{row['h'] & 0xFFFFFFFFFFFFFFFF:016x}"
 
 
 def _per_doc_hash_counts(docs: DataFrame, L: int, p: int) -> DataFrame:
@@ -134,10 +126,7 @@ def build_span_index(
         meta = spark.createDataFrame([(int(L), int(p))], "L int, p int")
         store.commit_many({
             "span_meta": store.stage(meta, "span_meta", "replace"),
-            "span_index": store.stage(
-                per_doc.repartition(F.col("pbucket")), "span_index",
-                "replace", ["pbucket"],
-            ),
+            "span_index": store.stage(per_doc, "span_index", "replace"),
             "span_stats": store.stage(stats, "span_stats", "replace"),
         })
         return read_span_stats(spark, store)
@@ -154,32 +143,10 @@ def ingest_spans(
 ) -> DataFrame:
     """Fold `new_docs` (doc_id, text) into the span index and stats;
     returns the updated stats DataFrame. Idempotent per batch
-    (ledger-protected); commits in ONE atomic catalog CAS guarded by the
-    span_stats snapshot."""
-    batch_id = _batch_fingerprint(new_docs.select("doc_id", "text"))
-    now = time.time()
-    status = ledger.status(batch_id, _CTX, config.max_processing_time_s, now)
-    if status is Status.COMPLETED:
-        payload = json.loads(ledger.get(batch_id, _CTX).result)
-        if payload.get("config_hash") == config.config_hash():
-            return read_span_stats(spark, store)  # replay stored result
-        ledger.delete(batch_id, _CTX)
-    elif status in (Status.TIMEOUT, Status.EXPIRED):
-        ledger.attempt_replacing(
-            batch_id, _CTX, ledger.get(batch_id, _CTX).started_at, now
-        )
-    else:
-        ledger.create(batch_id, _CTX, now)
+    (incremental.run_ingest)."""
+    new_docs = new_docs.select("doc_id", "text")
 
-    cached: list[DataFrame] = []
-
-    def _p(df: DataFrame) -> DataFrame:
-        cached.append(df.persist())
-        return df
-
-    try:
-        # snapshot BEFORE the reads (fail-safe CAS; see incremental_ann)
-        replace_base = {"span_stats": store.current_snapshot("span_stats")}
+    def body(persist):
         meta = store.read_pandas("span_meta")
         L, p = int(meta["L"].iloc[0]), int(meta["p"].iloc[0])
         stats_old = _read_latest(spark, store, "span_stats", ["doc_id"])
@@ -187,23 +154,16 @@ def ingest_spans(
         # -- 1. drop re-ingested doc_ids (commits are all-or-nothing, so a
         # doc_id in span_stats implies its index rows landed too; docs with
         # zero sampled windows re-hash to nothing — harmless)
-        fresh = new_docs.select("doc_id", "text").join(
-            stats_old.select("doc_id"), "doc_id", "left_anti"
-        )
+        fresh = new_docs.join(stats_old.select("doc_id"), "doc_id", "left_anti")
 
         # -- 2. sample under the FROZEN (L, p) -------------------------------
-        per_new = _p(_per_doc_hash_counts(fresh, L, p))
+        per_new = persist(_per_doc_hash_counts(fresh, L, p))
 
         # -- 3. pruned probe: old index rows in the batch's pbuckets, for
         # the batch's hashes only ------------------------------------------
-        touched = [
-            int(r[0]) for r in per_new.select("pbucket").distinct().collect()
-        ]
-        index_matched = _p(
-            store.read(spark, "span_index")
-            .where(F.col("pbucket").isin(touched))
-            .join(per_new.select("h").distinct(), "h", "left_semi")
-        )
+        index_matched = persist(touched_slice(
+            spark, store, "span_index", "pbucket", per_new, ["h"]
+        ))
 
         # -- 4. per-hash doc counts on both sides ----------------------------
         old_h = index_matched.groupBy("h").agg(
@@ -251,37 +211,12 @@ def ingest_spans(
             )
         )
 
-        # -- 7. delta = batch docs + flipped old docs, next _v ---------------
-        v_next = len(store.paths("span_stats"))
-        delta = (
-            stats_new.unionByName(stats_flipped)
-            .withColumn("_v", F.lit(v_next).cast("int"))
-        )
+        # -- 7. delta = batch docs + flipped old docs ------------------------
+        return {"span_index": per_new}, stats_new.unionByName(stats_flipped)
 
-        # -- 8. ONE atomic catalog CAS ----------------------------------------
-        updates = {
-            "span_index": store.stage(
-                per_new.repartition(F.col("pbucket")), "span_index",
-                "append", ["pbucket"],
-            ),
-            "span_stats": store.stage(delta, "span_stats", "append"),
-        }
-        store.commit_many(updates, expected=replace_base)
-        snapshots = {t: store.current_snapshot(t) for t in updates}
-        ledger.mark_completed(
-            batch_id, _CTX,
-            {"snapshots": snapshots, "config_hash": config.config_hash()},
-            time.time(), config.ttl_s,
-        )
-        # maintenance: semantic fold of the stats log past the segment
-        # threshold; the index gets plain compaction
-        _fold_log(
-            spark, store, "span_stats", ["doc_id"], config.compact_segments
-        )
-        store.compact(
-            spark, "span_index", min_segments=config.compact_segments
-        )
-        return read_span_stats(spark, store)
-    finally:
-        for df in cached:
-            df.unpersist()
+    run_ingest(
+        spark, config, store, ledger,
+        batch_fingerprint(new_docs, "spanbatch", "doc_id, sha2(text, 256)"),
+        _CTX, "span_stats", ["doc_id"], body,
+    )
+    return read_span_stats(spark, store)

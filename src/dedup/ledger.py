@@ -14,6 +14,10 @@ pipeline stage and the store is a directory of atomic JSON records:
 - `process_status` = the pure 5-state classifier with the exact precedence of
                    DeduplicationContext.scala:188-216 (property-tested against
                    the ProcessStatusSuite truth table)
+- `claim`        = the protect lifecycle's entry (DeduplicationContext.scala:95-111):
+                   replay a matching completion, else claim or take over the
+                   key. The ONLY copy of this state machine: the pipeline
+                   stages and every incremental ingest call it.
 
 Keys: `id` is the stage-scoped unit of work, `context_id` is the stage name —
 the same namespacing the reference uses (README.md:16-20); identical ids under
@@ -25,8 +29,8 @@ from __future__ import annotations
 import fcntl
 import json
 import os
-import time
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 from enum import Enum
@@ -34,6 +38,11 @@ from pathlib import Path
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+class ClaimLost(RuntimeError):
+    """A rival run took over the same stale claim first (its CAS won); this
+    run must not compute the unit of work beside it."""
 
 
 class Status(str, Enum):
@@ -218,6 +227,45 @@ class Ledger:
             )
             self._atomic_write(path, row)
             return True
+
+    # -- R11: the protect entry (DeduplicationContext.scala:95-111) ----------
+
+    def claim(
+        self,
+        id: str,
+        context_id: str,
+        config,
+        now: float,
+        replayable: Callable[[dict], bool] = lambda payload: True,
+    ) -> dict | None:
+        """Replay or claim one unit of work under `config` (a DedupConfig).
+
+        Returns the stored payload when the key COMPLETED under the same
+        `config_hash` and `replayable(payload)` holds (the duplicate call
+        replays, DeduplicationContext.scala:163-167). Otherwise the key is
+        ours and None is returned: a stale completion is deleted and claimed
+        afresh, a TIMEOUT/EXPIRED claim is taken over by CAS (R9; losing it
+        raises ClaimLost), and a RUNNING claim proceeds — in a single-driver
+        run it means an earlier attempt died before its commit, and every
+        unit of work is a deterministic function of (input, config), so
+        recomputing is safe (at-least-once, reference README.md:211-219)."""
+        proc = self.get(id, context_id)
+        status = process_status(proc, config.max_processing_time_s, now)
+        if status is Status.COMPLETED:
+            payload = json.loads(proc.result)
+            if (payload.get("config_hash") == config.config_hash()
+                    and replayable(payload)):
+                return payload
+            self.delete(id, context_id)
+            status = Status.NOT_STARTED
+        if status in (Status.TIMEOUT, Status.EXPIRED):
+            if not self.attempt_replacing(id, context_id, proc.started_at, now):
+                raise ClaimLost(
+                    f"{context_id}/{id}: another run took over the stale claim"
+                )
+        elif status is Status.NOT_STARTED:
+            self.create(id, context_id, now)
+        return None
 
     # -- R10 over the store -------------------------------------------------
 

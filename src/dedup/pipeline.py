@@ -3,7 +3,7 @@
 This is the batch realization of the reference's protect lifecycle
 (SURVEY.md section 3.4). For each stage, in order:
 
-    claim (ledger.create, R6) -> compute (DataFrame transform, R12)
+    claim (ledger.claim, R6/R9/R11) -> compute (DataFrame transform, R12)
     -> atomic data commit (TableStore snapshot, R7 phase 1)
     -> completion record with metrics (ledger.mark_completed, R7 phase 2)
 
@@ -23,9 +23,10 @@ it is opened; rebuild it with `jobs/run_pipeline.py --input <files>
 
 Resume: a COMPLETED stage whose output snapshot still exists is skipped
 (duplicate call replays the stored result — DeduplicationContext.scala:163-167);
-TIMEOUT/EXPIRED claims are taken over via CAS (attempt_replacing, R9) and
-recomputed, which is safe because every stage is a deterministic function of
-(input snapshot, config) — SURVEY.md section 2.3 invariants 1/4/5.
+TIMEOUT/EXPIRED claims are taken over via CAS and recomputed (Ledger.claim,
+the same claim every incremental ingest makes), which is safe because every
+stage is a deterministic function of (input snapshot, config) — SURVEY.md
+section 2.3 invariants 1/4/5.
 
 Per-stage `_metrics` (row counts per output table — the batch form of the
 reference's duplicate-detected callback counting, R4) and `_lineage`
@@ -47,7 +48,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .ledger import Ledger, Status
+from .ledger import Ledger
 from .storage import TableStore
 from .stages import cluster as stage_cluster
 from .stages import exact as stage_exact
@@ -56,12 +57,6 @@ from .stages import simhash as stage_simhash
 from .stages import verify as stage_verify
 
 STAGES = ["sha256", "signatures", "verify", "cluster"]
-
-# tables written hive-partitioned so incremental probes can prune the scan
-_PARTITIONED: dict[str, list[str]] = {
-    "bands": ["pbucket"],
-    "sim_blocks": ["sbucket"],
-}
 
 
 def near_dup_labels(
@@ -175,34 +170,18 @@ class Pipeline:
     # ----------------------------------------------------------- protocol
 
     def _stage(self, name: str, fn, resume: bool) -> None:
-        now = time.time()
-        status = self.ledger.status(
-            _STAGE_KEY, name, self.config.max_processing_time_s, now
-        )
-        if resume and status is Status.COMPLETED:
-            proc = self.ledger.get(_STAGE_KEY, name)
-            payload = json.loads(proc.result)
-            if payload.get("config_hash") == self.config.config_hash() and all(
+        # a COMPLETED stage replays only while every snapshot it committed is
+        # still the table's current state; otherwise it recomputes
+        payload = self.ledger.claim(
+            _STAGE_KEY, name, self.config, time.time(),
+            replayable=lambda p: resume and all(
                 self.store.current_snapshot(t) == s
-                for t, s in payload["snapshots"].items()
-            ):
-                self.results.append(StageResult(name, True, 0.0, payload["snapshots"]))
-                return
-            # config changed or snapshots gone -> treat as expired, recompute
-            self.ledger.delete(_STAGE_KEY, name)
-            status = Status.NOT_STARTED
-        if status in (Status.TIMEOUT, Status.EXPIRED):
-            old = self.ledger.get(_STAGE_KEY, name)
-            if not self.ledger.attempt_replacing(
-                _STAGE_KEY, name, old.started_at, now
-            ):
-                raise RuntimeError(f"lost CAS takeover for stage {name}")
-        elif status in (Status.NOT_STARTED, Status.COMPLETED):
-            self.ledger.delete(_STAGE_KEY, name)
-            self.ledger.create(_STAGE_KEY, name, now)
-        # RUNNING with a live claim in a single-driver run means a previous
-        # attempt died without commit -> recompute is safe (at-least-once,
-        # reference README.md:211-219); the claim is ours now.
+                for t, s in p["snapshots"].items()
+            ),
+        )
+        if payload is not None:
+            self.results.append(StageResult(name, True, 0.0, payload["snapshots"]))
+            return
         t0 = time.time()
         try:
             outputs = fn()
@@ -216,8 +195,7 @@ class Pipeline:
                 obs = Observation()
                 observations[t] = obs
                 updates[t] = self.store.stage(
-                    df.observe(obs, F.count(F.lit(1)).alias("n_rows")),
-                    t, "replace", _PARTITIONED.get(t),
+                    df.observe(obs, F.count(F.lit(1)).alias("n_rows")), t
                 )
             self.store.commit_many(updates)
         finally:
@@ -275,7 +253,7 @@ class Pipeline:
 
         The fold is CAS-guarded (ADVICE r5): a concurrent run sharing the
         work_dir can append a segment between our read and the replace,
-        which an unguarded write_pandas would silently drop. On
+        which an unguarded replace would silently drop. On
         StaleReplaceError the fold is simply skipped — it is maintenance
         only, and the next writer past the threshold retries it."""
         self.store.append_pandas(pdf, table)
@@ -314,18 +292,14 @@ class Pipeline:
             # `signatures` feeds the verify stage's est-Jaccard gate
             "signatures": sigs.select("doc_id", "sig"),
             # `bands` IS the persistent LSH index (incremental batches probe
-            # it): hive-partitioned on pbucket (one file per pbucket via the
-            # repartition) so probes prune; a probe derives the per-bucket
-            # (size, pivot) it caps hot buckets with from the pruned rows
-            "bands": stage_minhash.with_pbucket(bands).repartition(
-                F.col("pbucket")
-            ),
+            # it): hive-partitioned on pbucket (storage.PARTITIONED) so probes
+            # prune; a probe derives the per-bucket (size, pivot) it caps hot
+            # buckets with from the pruned rows
+            "bands": stage_minhash.with_pbucket(bands),
             "edges_lsh": stage_minhash.candidate_pairs(bands, self.config),
             # the probeable Hamming-block index: exploded rows, hive-
             # partitioned on sbucket (same layout as `bands`/pbucket)
-            "sim_blocks": stage_simhash.with_sbucket(
-                stage_simhash.block_rows(sh)
-            ).repartition(F.col("sbucket")),
+            "sim_blocks": stage_simhash.with_sbucket(stage_simhash.block_rows(sh)),
             "edges_simhash": stage_simhash.candidate_pairs(sh, self.config),
             # fingerprints persist as their own index table: incremental
             # ingests then fingerprint only their new reps (ADVICE r2)

@@ -129,6 +129,43 @@ def connected_components(
     return labels, rounds
 
 
+def touched_components(
+    new_edges: DataFrame, clusters_old: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Connected components of an incremental ingest over the TOUCHED
+    subgraph only (VERDICT r3 #6): returns (labels(doc_id, cluster_id),
+    members_old), where members_old are the `clusters_old(doc_id,
+    cluster_id)` rows of every old cluster a new edge touches.
+
+    Only components connected to the batch can change: new edges always
+    have >= 1 new endpoint, and an old cluster is a star onto its
+    cluster_id. So CC runs over the new edges plus those stars —
+    O(batch + touched members), never O(corpus) — and the caller rewrites
+    exactly the batch plus members_old."""
+    # O(batch) rows read by two consumers (endpoints, CC input): the eager
+    # checkpoint keeps both from re-deriving the ingest's verify chain
+    new_edges = new_edges.localCheckpoint()
+    endpoints = (
+        new_edges.select(F.col("src").alias("doc_id"))
+        .unionByName(new_edges.select(F.col("dst").alias("doc_id")))
+        .distinct()
+    )
+    touched = (
+        clusters_old.join(endpoints, "doc_id").select("cluster_id").distinct()
+    )
+    # O(touched) rows; eagerly checkpointed, NOT persisted: the self-join of
+    # clusters_old (`touched` is derived from it) inside the later union
+    # trips Catalyst's union constraint rewriting (key-not-found in
+    # rewriteConstraints), and cutting the lineage here also stops CC
+    # re-deriving the probe chain per round
+    members_old = clusters_old.join(touched, "cluster_id").localCheckpoint()
+    stars = members_old.where(F.col("doc_id") != F.col("cluster_id")).select(
+        F.col("doc_id").alias("src"), F.col("cluster_id").alias("dst")
+    )
+    labels, _ = connected_components(new_edges.unionByName(stars))
+    return labels, members_old
+
+
 def assign_clusters(
     exact_clusters: DataFrame, near_labels: DataFrame
 ) -> DataFrame:

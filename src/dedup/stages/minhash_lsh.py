@@ -79,7 +79,6 @@ def joint_signatures(
     candidate-only queries pass False."""
     k = config.shingle_k
     bands, rows = config.bands, config.rows_per_band
-    norm = config.normalize
     n_blocks = config.hamming_radius + 1
     a, b = K.make_minhash_coeffs(config.num_perm, config.seed)
     width = config.lcs_min_chars
@@ -98,9 +97,7 @@ def joint_signatures(
 
     @F.pandas_udf(T.StructType(fields))
     def joint_udf(texts: pd.Series) -> pd.DataFrame:
-        ts = (
-            [K.normalize_text(t) for t in texts] if norm else texts.tolist()
-        )
+        ts = [K.normalize_text(t) for t in texts]
         sigs, sims = K.minhash_simhash_batch(ts, k, a, b, normalize=False)
         bh = K.band_hashes(sigs, bands, rows)
         blocks = K.hamming_blocks(sims, n_blocks)

@@ -193,7 +193,6 @@ def make_verifier(config: DedupConfig):
     job; captures only scalars, so Spark serialization is unchanged.
     """
     k = config.shingle_k
-    norm = config.normalize
     floor = config.jaccard_floor
     lcs_min = config.lcs_min_chars
     lcs_ratio = config.lcs_min_ratio
@@ -230,7 +229,7 @@ def make_verifier(config: DedupConfig):
             nonlocal memo_chars
             t = texts.get(doc_id)
             if t is None:
-                t = K.normalize_text(raw) if norm else raw
+                t = K.normalize_text(raw)
                 if memo_chars + len(t) > _MEMO_CHAR_BUDGET:
                     texts.clear()
                     shingle_sets.clear()

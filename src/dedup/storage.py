@@ -43,6 +43,15 @@ from .retry import BACKOFF, CommitConflict, RetryStrategy, attempt_with_backoff
 # Any change to the layout of a table written through TableStore increments this.
 STORE_FORMAT = 2
 
+# The bucket indexes: each is hive-partitioned on its bucket column, one file
+# per bucket, so a probe reads only the partitions its batch touches.
+PARTITIONED: dict[str, str] = {
+    "bands": "pbucket",
+    "sim_blocks": "sbucket",
+    "emb_buckets": "pbucket",
+    "span_index": "pbucket",
+}
+
 
 class StoreFormatError(RuntimeError):
     """The store was written at a format this code does not read. There is
@@ -128,7 +137,13 @@ class TableStore:
         partition_by: list[str] | None = None,
     ) -> TableUpdate:
         """Write `df` as a new immutable segment; returns the staged update.
-        Nothing is visible until commit_many publishes the catalog."""
+        Nothing is visible until commit_many publishes the catalog.
+
+        partition_by=None lays out a PARTITIONED table on its bucket column,
+        repartitioned first so each bucket is one file."""
+        if partition_by is None and name in PARTITIONED:
+            partition_by = [PARTITIONED[name]]
+            df = df.repartition(F_col(PARTITIONED[name]))
         tdir = self._table_dir(name)
         tdir.mkdir(parents=True, exist_ok=True)
         seg = f"seg-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
@@ -204,10 +219,6 @@ class TableStore:
         self.commit_many({name: self.stage(df, name, "append", partition_by)})
         return self.current_snapshot(name)
 
-    def write_pandas(self, pdf, name: str) -> str:
-        """Snapshot-commit a pandas DataFrame (small control tables)."""
-        return self._commit_pandas(pdf, name, "replace")
-
     def append_pandas(self, pdf, name: str) -> str:
         """Append a pandas DataFrame as a new segment — O(new rows) per
         call, unlike read-concat-rewrite which is O(history) (ADVICE r4:
@@ -220,25 +231,20 @@ class TableStore:
     ) -> str:
         """Snapshot-replace a pandas control table under the commit_many
         CAS `expected` guard — for read-modify-write folds (ADVICE r5: an
-        unguarded write_pandas can drop a segment appended by a concurrent
+        unguarded replace can drop a segment appended by a concurrent
         writer between the read and the replace)."""
-        tdir = self._table_dir(name)
-        tdir.mkdir(parents=True, exist_ok=True)
-        seg = f"seg-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
-        (tdir / seg).mkdir()
-        pdf.to_parquet(tdir / seg / "part-0.parquet", index=False)
-        self.commit_many(
-            {name: TableUpdate("replace", [seg])}, expected=expected
-        )
-        return self.current_snapshot(name)
+        return self._commit_pandas(pdf, name, "replace", expected)
 
-    def _commit_pandas(self, pdf, name: str, mode: str) -> str:
+    def _commit_pandas(
+        self, pdf, name: str, mode: str,
+        expected: dict[str, str | None] | None = None,
+    ) -> str:
         tdir = self._table_dir(name)
         tdir.mkdir(parents=True, exist_ok=True)
         seg = f"seg-{int(time.time() * 1000)}-{uuid.uuid4().hex[:8]}"
         (tdir / seg).mkdir()
         pdf.to_parquet(tdir / seg / "part-0.parquet", index=False)
-        self.commit_many({name: TableUpdate(mode, [seg])})
+        self.commit_many({name: TableUpdate(mode, [seg])}, expected=expected)
         return self.current_snapshot(name)
 
     # -- reads -------------------------------------------------------------
@@ -261,13 +267,6 @@ class TableStore:
         if segs is None:
             raise FileNotFoundError(f"table {name!r} has no committed snapshot")
         return [str(self._table_dir(name) / s) for s in segs]
-
-    def path(self, name: str) -> str:
-        """Single-segment path (snapshot tables); segmented tables need paths()."""
-        ps = self.paths(name)
-        if len(ps) != 1:
-            raise ValueError(f"table {name!r} has {len(ps)} segments; use paths()")
-        return ps[0]
 
     def partition_cols(self, name: str) -> list[str]:
         """Hive partition columns of `name`, detected from the segment layout

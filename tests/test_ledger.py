@@ -5,6 +5,8 @@ Direct graft of the reference's test layers:
 - MeteorProcessRepoSuite.scala:21-178 (repo contract: context segregation,
   create-inserts / create-returns-existing / create-never-mutates,
   markAsCompleted expiry math, attemptReplacing CAS)
+plus `Ledger.claim`, the one claim state machine of the pipeline stages and
+the incremental ingests (no Spark needed).
 """
 
 from __future__ import annotations
@@ -14,7 +16,15 @@ import datetime as dt
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from dedup.ledger import Ledger, Process, Status, process_status, status_column
+from dedup.config import DedupConfig
+from dedup.ledger import (
+    ClaimLost,
+    Ledger,
+    Process,
+    Status,
+    process_status,
+    status_column,
+)
 
 MPT = 300.0  # max_processing_time_s
 NOW = 1_700_000_000.0
@@ -183,3 +193,96 @@ def test_status_lifecycle(ledger):
     assert ledger.status("k", "c", MPT, NOW + 20) is Status.COMPLETED
     # TTL re-opens the key (DeduplicationSuite.scala:183-200 analogue)
     assert ledger.status("k", "c", MPT, NOW + 10 + 51) is Status.EXPIRED
+
+
+# ---------------------------------------------------------------------------
+# Ledger.claim: replay / claim / takeover (DeduplicationContext.scala:95-111)
+# ---------------------------------------------------------------------------
+
+CFG = DedupConfig(max_processing_time_s=MPT)
+
+
+def _complete(ledger, cfg=CFG, **payload):
+    assert ledger.claim("k", "c", cfg, NOW) is None
+    ledger.mark_completed(
+        "k", "c", {**payload, "config_hash": cfg.config_hash()}, NOW + 5,
+        ttl_s=None,
+    )
+
+
+def test_claim_new_key_creates_running_claim(ledger):
+    assert ledger.claim("k", "c", CFG, NOW) is None
+    assert ledger.get("k", "c").started_at == NOW
+    assert ledger.status("k", "c", MPT, NOW + 1) is Status.RUNNING
+
+
+def test_claim_replays_completion_under_matching_config(ledger):
+    _complete(ledger, snapshots={"t": "seg-1"})
+    payload = ledger.claim("k", "c", CFG, NOW + 10)
+    assert payload["snapshots"] == {"t": "seg-1"}
+    assert ledger.get("k", "c").result is not None  # replay leaves the row
+
+
+def test_claim_after_config_change_claims_afresh(ledger):
+    _complete(ledger)
+    other = DedupConfig(max_processing_time_s=MPT, bucket_cap=8)
+    assert other.config_hash() != CFG.config_hash()
+    assert ledger.claim("k", "c", other, NOW + 10) is None
+    p = ledger.get("k", "c")
+    # the stale completion is gone and the key is claimed again: a crash
+    # now leaves a RUNNING claim, not an unclaimed key
+    assert p is not None and p.result is None and p.started_at == NOW + 10
+
+
+def test_claim_not_replayable_claims_afresh(ledger):
+    _complete(ledger, snapshots={"t": "seg-1"})
+    seen = []
+
+    def replayable(payload):
+        seen.append(payload["snapshots"])
+        return False
+
+    assert ledger.claim("k", "c", CFG, NOW + 10, replayable) is None
+    assert seen == [{"t": "seg-1"}]
+    p = ledger.get("k", "c")
+    assert p.result is None and p.started_at == NOW + 10
+
+
+def test_claim_running_claim_proceeds_unchanged(ledger):
+    assert ledger.claim("k", "c", CFG, NOW) is None
+    # an earlier attempt died before its commit: the claim is ours
+    assert ledger.claim("k", "c", CFG, NOW + 1) is None
+    assert ledger.get("k", "c").started_at == NOW
+
+
+@pytest.mark.parametrize("stale", ["timeout", "expired"])
+def test_claim_timeout_takeover_moves_started_at(ledger, stale):
+    if stale == "timeout":
+        assert ledger.claim("k", "c", CFG, NOW) is None
+    else:
+        ledger.create("k", "c", NOW)
+        ledger.mark_completed("k", "c", {"config_hash": CFG.config_hash()},
+                              NOW + 5, ttl_s=10.0)
+    later = NOW + MPT + 1
+    assert ledger.status("k", "c", MPT, later) is Status(stale)
+    assert ledger.claim("k", "c", CFG, later) is None
+    p = ledger.get("k", "c")
+    assert p.started_at == later
+    assert p.result is None and p.expires_on is None
+
+
+def test_claim_lost_takeover_raises(ledger, monkeypatch):
+    """A rival run takes the stale claim over between this run's read and
+    its CAS: this run must stop rather than compute beside the winner."""
+    assert ledger.claim("k", "c", CFG, NOW) is None
+    real = ledger.attempt_replacing
+    rival = NOW + MPT + 2
+
+    def rival_wins_first(id, context_id, old, new):
+        assert real(id, context_id, old, rival)
+        return real(id, context_id, old, new)
+
+    monkeypatch.setattr(ledger, "attempt_replacing", rival_wins_first)
+    with pytest.raises(ClaimLost):
+        ledger.claim("k", "c", CFG, NOW + MPT + 1)
+    assert ledger.get("k", "c").started_at == rival

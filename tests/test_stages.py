@@ -94,7 +94,7 @@ def test_signature_udf_matches_kernel(spark, reps):
     sample = reps.limit(10).select("doc_id", "content").collect()
     a, b = K.make_minhash_coeffs(CFG.num_perm, CFG.seed)
     for r in sample:
-        sigs = K.minhash_batch([r["content"]], CFG.shingle_k, a, b, CFG.normalize)
+        sigs = K.minhash_batch([r["content"]], CFG.shingle_k, a, b)
         expect = K.band_hashes(sigs, CFG.bands, CFG.rows_per_band)[0]
         assert list(expect) == got[r["doc_id"]]
 
