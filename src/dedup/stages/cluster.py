@@ -143,7 +143,9 @@ def touched_components(
     O(batch + touched members), never O(corpus) — and the caller rewrites
     exactly the batch plus members_old."""
     # O(batch) rows read by two consumers (endpoints, CC input): the eager
-    # checkpoint keeps both from re-deriving the ingest's verify chain
+    # checkpoint keeps both from re-deriving the ingest's verify chain, and
+    # cuts the union-of-self-referencing-branches plan shape that trips
+    # Catalyst's rewriteConstraints
     new_edges = new_edges.localCheckpoint()
     endpoints = (
         new_edges.select(F.col("src").alias("doc_id"))
