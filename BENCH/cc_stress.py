@@ -1,8 +1,10 @@
 """Connected-components skew stress: planted mega-star / chain / broom.
 
-Measures the CC driver loop (stages/cluster.py) on adversarial edge shapes
-at increasing scale, to decide whether the Kiveris large-star/small-star
-implementation needs BTS-style load balancing (PAPERS.md) or whether
+Measures connected components (stages/cluster.py) on adversarial edge
+shapes at increasing scale: the Kiveris large-star/small-star rounds while
+the edge set is above `_LOCAL_MAX_EDGES`, and the driver union-find that
+finishes it once it is at or below. Above the bound it shows whether the
+star rounds need BTS-style load balancing (PAPERS.md) or whether
 map-side-combined min-aggregations + AQE skew-join splitting already keep
 the mega-star linear:
 
@@ -12,8 +14,9 @@ the mega-star linear:
 - chain(L):  a path of length L — worst case for ROUND COUNT (diameter);
 - broom(H,L): a star whose hub hangs off a chain — both at once.
 
-Usage: python BENCH/cc_stress.py [--sizes 100000 400000 1600000]
-Writes one JSON line per shape/size with wall seconds and rounds.
+Usage: python BENCH/cc_stress.py [--cpus 4] [--sizes 100000 400000 1600000]
+Writes one JSON line per shape/size with wall seconds, star rounds and the
+core count.
 """
 
 from __future__ import annotations
@@ -75,7 +78,7 @@ def main() -> int:
             wall = round(time.time() - t0, 2)
             row = {"shape": name, "size": h, "wall_s": wall,
                    "rounds": rounds, "components": n_comp,
-                   "ok": n_comp == want_components}
+                   "ok": n_comp == want_components, "cpus": args.cpus}
             results.append(row)
             print(json.dumps(row), flush=True)
     # chain round-count scaling (diameter stress, fixed small sizes)
@@ -85,7 +88,7 @@ def main() -> int:
         n_comp = labels.select("cluster_id").distinct().count()
         row = {"shape": "chain", "size": l,
                "wall_s": round(time.time() - t0, 2), "rounds": rounds,
-               "components": n_comp, "ok": n_comp == 1}
+               "components": n_comp, "ok": n_comp == 1, "cpus": args.cpus}
         results.append(row)
         print(json.dumps(row), flush=True)
     out = Path(__file__).parent / "cc_stress_results.json"

@@ -8,7 +8,8 @@ ovotech/comms-deduplication grafted onto a batch pipeline:
   inside pandas/Arrow UDFs — no per-row Python),
 - SimHash + Hamming-ball candidate generation,
 - suffix-array longest-common-substring verification,
-- connected-components (large-star/small-star) clustering,
+- connected-components clustering (large-star/small-star rounds on
+  Spark, finished by a driver union-find once the edge set is small),
 - a per-stage checkpoint ledger (claim -> commit -> complete) that makes the
   whole pipeline resumable, mirroring the reference's 5-state process
   lifecycle (reference: src/main/scala/deduplication/model.scala:10-17,

@@ -335,8 +335,8 @@ vedges AS (
 
 def cc_clusters_sql(edges_cte: str, nodes_sql: str, id_out: str) -> str:
     """Recursive-CTE connected components: min doc_id reachable over the
-    symmetrized `edges_cte(src, dst)` = the large-star/small-star fixpoint
-    of stages.cluster.connected_components. `nodes_sql` must yield one
+    symmetrized `edges_cte(src, dst)` = the component-min label of
+    stages.cluster.connected_components. `nodes_sql` must yield one
     `doc_id` per node (unmatched nodes become their own singleton cluster,
     like the Spark side's coalesce)."""
     return f"""sym AS (

@@ -962,7 +962,7 @@ SELECT src, dst, sim FROM edges
 def _neardup_clusters_sql(tau: float) -> str:
     # Recursive-CTE connected components over the already-oracled edge set
     # (VERDICT r2 #3): min-vec_id label propagation converges to the same
-    # cluster_id = min(component) the large-star/small-star loop computes.
+    # cluster_id = min(component) that stages.cluster computes.
     return f"""
 WITH RECURSIVE {_neardup_edges_ctes(tau)},
 sym AS (
@@ -990,11 +990,12 @@ def embedding_neardup_clusters(
     """Embedding-cosine near-dup dedup: vectors within cosine >= tau form a
     cluster (cluster_id = min vec_id of the connected component).
 
-    Rows-only by design: the large-star/small-star CC iteration is not
-    SQL-expressible — but its ENTIRE input edge set is the value-hash
-    oracled `embedding_neardup_edges`, and planted-cluster recall is
-    asserted in tests, so only the (networkx-verified) CC step itself is
-    outside the hash gate."""
+    Rows-only by design: connected components (Spark star rounds while
+    the edge set is big, a driver union-find once it is small; both label
+    with the component min) is not SQL-expressible — but its ENTIRE input
+    edge set is the value-hash oracled `embedding_neardup_edges`, and
+    planted-cluster recall is asserted in tests, so only the
+    (networkx-verified) CC step itself is outside the hash gate."""
     from ..stages.cluster import connected_components
 
     base, edges = _neardup_edges(spark, sf_dir, tau)

@@ -72,8 +72,10 @@ def near_dup_labels(
     fingerprints (content crosses Arrow once, normalization and shingle
     hashing shared); per-channel dedup is deferred to the union's single
     (src, dst) dropDuplicates, the only shuffle the candidate set pays
-    (see pairs_from_buckets). Both persisted inputs of CC are released
-    once it returns: its eager checkpoint has cut their lineage."""
+    (see pairs_from_buckets). `sigs` feeds three consumers and is
+    persisted; the verified edges have one reader, CC's eager checkpoint,
+    so they are not. `sigs` is released once CC returns: that checkpoint
+    has cut its lineage."""
     sigs = stage_minhash.joint_signatures(reps, config, with_fp=True).persist()
     e_lsh = stage_minhash.candidate_pairs(
         stage_minhash.band_rows(sigs), config, dedup=False
@@ -87,10 +89,9 @@ def near_dup_labels(
                                    fps=sigs.select("doc_id", "fp", "nlen")),
         config,
         num_partitions=num_partitions,
-    ).where("accepted").persist()
+    ).where("accepted")
     labels, rounds = stage_cluster.connected_components(verified)
     sigs.unpersist()
-    verified.unpersist()
     return labels, rounds
 
 

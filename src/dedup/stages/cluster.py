@@ -1,22 +1,41 @@
-"""Stage 5 — connected components via alternating large-star / small-star.
+"""Stage 5 — connected components, in two phases.
 
-Driver-loop implementation of the Kiveris et al. MapReduce connected-
-components algorithm (SURVEY.md section 4.2.3; load-balancing context in
-PAPERS.md BTS entry) on plain DataFrame ops — GraphFrames is not assumed.
-Each round is two groupBy/join jobs; lineage is truncated per round with an
-eager localCheckpoint so the loop survives many iterations, and convergence
-is detected by an edge-set fingerprint (count + xor-style hash sum), one
-cheap aggregate per round.
+While the edge set is big, the driver loops the Kiveris et al. MapReduce
+connected-components algorithm (alternating large-star / small-star;
+SURVEY.md section 4.2.3, load-balancing context in PAPERS.md BTS entry) on
+plain DataFrame ops — GraphFrames is not assumed. Each round is two
+groupBy/join jobs; lineage is truncated per round with an eager
+localCheckpoint, whose observed (count, xor-hash) fingerprint both detects
+convergence and reports the edge count. Once that count is at most
+_LOCAL_MAX_EDGES, the edges are collected and finished on the driver by a
+numpy union-find (`_local_labels`), so a small graph — every near-dup pass
+at bench scale — pays one checkpoint and one collect, no star rounds.
 
-The final cluster_id = min(doc_id) of the component — the deterministic
-canonical election that replaces the reference's first-writer-wins
-(SURVEY.md section 2.3 invariant 3).
+Both phases label a vertex with cluster_id = min(doc_id) of its component —
+the deterministic canonical election that replaces the reference's
+first-writer-wins (SURVEY.md section 2.3 invariant 3). The star rounds
+converge to a star onto each component's min; the union-find only ever
+hooks a root under a smaller root, so each root is its component's min.
+The switch point therefore never changes the output.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Edge count at or below which the rest of CC runs on the driver: the
+# collect is two int64 columns (~16 MB at the bound) and the union-find
+# finishes 1M edges in about half a second (shuffled chain, 14 passes).
+_LOCAL_MAX_EDGES = 1_000_000
+_MAX_ROUNDS = 50  # star rounds; a chain of length L needs O(log L)
+
+
+class ConvergenceError(RuntimeError):
+    """The star loop ran _MAX_ROUNDS rounds without reaching a fixed point
+    while its edge set stayed above _LOCAL_MAX_EDGES."""
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -67,14 +86,6 @@ def _small_star(edges: DataFrame, canonical: bool = False) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
 def _ckpt_with_fingerprint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     """Eager localCheckpoint + edge-set fingerprint from the SAME action
     (r6, guide §1.5/§2.4): the fingerprint rides the checkpoint
@@ -92,11 +103,45 @@ def _ckpt_with_fingerprint(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]
     return out, (int(m["n"]), int(m["h"]))
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50
-) -> tuple[DataFrame, int]:
+def _local_labels(edges: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id = component min) for every vertex of the
+    checkpointed `edges(u, v)`, by a numpy union-find on the driver.
+
+    Each pass hooks every root that still has an edge to a foreign root
+    under the smaller root (`minimum.at`, so a root takes its smallest
+    offer), then pointer-jumps until every node points at a root. A pass
+    at least halves the components, so O(log n) passes; hooking roots, not
+    nodes, is what keeps a long chain from taking O(n) passes."""
+    pdf = edges.toPandas()
+    n = len(pdf)
+    ids, idx = np.unique(
+        np.concatenate([pdf["u"].to_numpy(np.int64), pdf["v"].to_numpy(np.int64)]),
+        return_inverse=True,
+    )
+    a, b = idx[:n], idx[n:]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb  # an edge whose endpoints share a root stays done
+        if not live.any():
+            break
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "cluster_id": ids[parent]}),
+        "doc_id long, cluster_id long",
+    )
+
+
+def connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     """(doc_id, cluster_id) for every vertex appearing in `edges`, plus the
-    number of rounds to convergence.
+    number of star rounds run on Spark (0 when the input is already small
+    enough to finish on the driver).
 
     `edges` needs columns (src, dst); isolated vertices are the caller's
     concern (left-join + coalesce to self).
@@ -104,29 +149,37 @@ def connected_components(
     # The initial eager checkpoint is LOAD-BEARING, not overhead: the star
     # transforms reference their input twice (symmetrize = input union
     # swapped-input), so an unmaterialized upstream DAG — e.g. the whole
-    # UDF-heavy verify pipeline — would recompute per reference, per round.
-    # r6: the convergence fingerprint is observed on the checkpoint action
-    # itself (one job per round, not two), and the small-star skips its
-    # re-canonicalization distinct since large-star's output is already
-    # canonical (one exchange fewer per round).
-    cur, prev_fp = _ckpt_with_fingerprint(
+    # UDF-heavy verify pipeline — would recompute per reference, per round;
+    # and the local finish collects from it. r6: the fingerprint is
+    # observed on the checkpoint action itself (one job per round, not
+    # two), and the small-star skips its re-canonicalization distinct since
+    # large-star's output is already canonical (one exchange fewer/round).
+    cur, fp = _ckpt_with_fingerprint(
         _canon(edges.select(F.col("src").alias("u"), F.col("dst").alias("v")))
     )
     rounds = 0
-    for rounds in range(1, max_iter + 1):
+    while fp[0] > _LOCAL_MAX_EDGES:
+        if rounds == _MAX_ROUNDS:
+            raise ConvergenceError(
+                f"connected components did not converge in {_MAX_ROUNDS} "
+                f"star rounds ({fp[0]} edges left)"
+            )
+        rounds += 1
+        prev_fp = fp
         cur, fp = _ckpt_with_fingerprint(
             _small_star(_large_star(cur), canonical=True)
         )
         if fp == prev_fp:
-            break
-        prev_fp = fp
-    # Converged state: every edge is (member, root). Labels = min neighbor
-    # per node across both directions, coalesced with self.
-    sym = cur.unionByName(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    labels = sym.groupBy("u").agg(F.min("v").alias("mn")).select(
-        F.col("u").alias("doc_id"), F.least("u", "mn").alias("cluster_id")
-    )
-    return labels, rounds
+            # Converged state: every edge is (member, root). Labels = min
+            # neighbor per node across both directions, coalesced with self.
+            sym = cur.unionByName(
+                cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            labels = sym.groupBy("u").agg(F.min("v").alias("mn")).select(
+                F.col("u").alias("doc_id"), F.least("u", "mn").alias("cluster_id")
+            )
+            return labels, rounds
+    return _local_labels(cur), rounds
 
 
 def touched_components(

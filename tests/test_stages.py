@@ -246,10 +246,27 @@ def test_verify_accepts_near_rejects_far(spark):
 
 
 # ---------------------------------------------------------------------------
-# connected components vs networkx
+# connected components vs networkx, on both CC paths
 # ---------------------------------------------------------------------------
 
-def test_cc_matches_networkx_random_graphs(spark):
+@pytest.fixture(params=["local", "spark"])
+def cc_path(request, monkeypatch):
+    """Run a CC test on the driver union-find (`local`: every test graph is
+    under the bound) and on the large-star/small-star loop (`spark`: a
+    bound no edge set is at or below keeps it from finishing locally)."""
+    if request.param == "spark":
+        monkeypatch.setattr(SC, "_LOCAL_MAX_EDGES", -1)
+    return request.param
+
+
+def _assert_cc_matches_networkx(labels, edges):
+    got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
+    g = nx.Graph()
+    g.add_edges_from(edges)
+    assert got == {v: min(c) for c in nx.connected_components(g) for v in c}
+
+
+def test_cc_matches_networkx_random_graphs(spark, cc_path):
     import random
 
     rng = random.Random(7)
@@ -262,18 +279,11 @@ def test_cc_matches_networkx_random_graphs(spark):
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, "src long, dst long")
         labels, rounds = SC.connected_components(df)
-        got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
-
-        g = nx.Graph()
-        g.add_edges_from(edges)
-        for comp in nx.connected_components(g):
-            expect = min(comp)
-            for v in comp:
-                assert got[v] == expect, f"trial {trial} vertex {v}"
-        assert rounds < 20
+        _assert_cc_matches_networkx(labels, edges)
+        assert rounds < 20 if cc_path == "spark" else rounds == 0
 
 
-def test_cc_chain_graph(spark):
+def test_cc_chain_graph(spark, cc_path):
     """Worst-case diameter: a long path must still converge (log rounds)."""
     n = 200
     edges = [(i, i + 1) for i in range(n - 1)]
@@ -282,7 +292,70 @@ def test_cc_chain_graph(spark):
     got = labels.collect()
     assert all(r["cluster_id"] == 0 for r in got)
     assert len(got) == n
-    assert rounds <= 15
+    assert rounds <= 15 if cc_path == "spark" else rounds == 0
+
+
+def test_cc_switches_to_local_finish_mid_loop(spark, monkeypatch):
+    """A broom whose bristles also touch the handle has 664 canonical edges,
+    and one star round cuts them to 365: with the bound between the two,
+    round 1 runs on Spark and the union-find finishes from its output."""
+    chain_len, leaves = 64, 300
+    edges = (
+        [(i, i + 1) for i in range(chain_len)]
+        + [(chain_len, j) for j in range(chain_len + 1, chain_len + 1 + leaves)]
+        + [(chain_len - 1, j)
+           for j in range(chain_len + 1, chain_len + 1 + leaves)]
+    )
+    finishes = []
+    local_labels = SC._local_labels
+    monkeypatch.setattr(SC, "_LOCAL_MAX_EDGES", 500)
+    monkeypatch.setattr(
+        SC, "_local_labels", lambda e: finishes.append(1) or local_labels(e)
+    )
+    labels, rounds = SC.connected_components(
+        spark.createDataFrame(edges, "src long, dst long")
+    )
+    assert (rounds, len(finishes)) == (1, 1)
+    _assert_cc_matches_networkx(labels, edges)
+
+
+def test_cc_empty_edge_set_local(spark):
+    labels, rounds = SC.connected_components(
+        spark.createDataFrame([], "src long, dst long")
+    )
+    assert labels.schema.simpleString() == "struct<doc_id:bigint,cluster_id:bigint>"
+    assert (labels.count(), rounds) == (0, 0)
+
+
+def test_cc_unconverged_loop_raises(spark, monkeypatch):
+    """Running out of star rounds above the bound is an error, not labels
+    read off an edge set that has not reached its fixed point."""
+    monkeypatch.setattr(SC, "_LOCAL_MAX_EDGES", -1)
+    monkeypatch.setattr(SC, "_MAX_ROUNDS", 1)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(199)],
+                                  "src long, dst long")
+    with pytest.raises(SC.ConvergenceError):
+        SC.connected_components(chain)
+
+
+def test_cc_small_graph_runs_checkpoint_and_collect_only(spark):
+    """Over a small graph CC runs the jobs of its initial eager checkpoint
+    and one collect; each star round it no longer runs cost ~7 jobs."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    ckpt = jobs("cc-ckpt", lambda: SC._ckpt_with_fingerprint(SC._canon(
+        df.select(F.col("src").alias("u"), F.col("dst").alias("v")))))
+    assert jobs("cc-local", lambda: SC.connected_components(df)) == ckpt + 1
 
 
 # ---------------------------------------------------------------------------
@@ -463,7 +536,7 @@ def test_prepare_pairs_keeps_short_long_lcs_pair(spark):
     assert out[0]["accepted"] and out[0]["lcs"] >= 92
 
 
-def test_cc_mega_star_and_broom_skew(spark):
+def test_cc_mega_star_and_broom_skew(spark, cc_path):
     """Skew stress (round-4 stretch): a 200k-leaf star (the exact shape the
     bucket cap emits for a boilerplate mega-bucket) and a broom (star hung
     off a chain) must converge in few rounds with one component — the
@@ -478,7 +551,7 @@ def test_cc_mega_star_and_broom_skew(spark):
         F.lit(0).alias("src"), F.col("id").alias("dst")
     )
     labels, rounds = connected_components(star)
-    assert rounds <= 3
+    assert rounds <= 3 if cc_path == "spark" else rounds == 0
     got = labels.select(F.count_distinct("cluster_id").alias("n"),
                         F.min("cluster_id").alias("mn"),
                         F.count(F.lit(1)).alias("rows")).collect()[0]
