@@ -1,7 +1,7 @@
 """Profile the verify stage's Python worker in isolation.
 
 Builds the bench corpus, runs the REAL candidate-generation + screening
-plan (joint signatures, both channels, deferred dedup, prepare_pairs) on
+plan (joint signatures, pipeline.candidate_edges, prepare_pairs) on
 Spark, collects the surviving content-bearing pairs to the driver, then
 cProfiles `stages.verify.make_verifier(config)` single-threaded over the
 same Arrow-batch shape the executors see (sorted by (src, dst), chunked).
@@ -38,10 +38,10 @@ def main() -> int:
 
     from dedup.config import DedupConfig
     from dedup.corpus import generate_corpus
+    from dedup.pipeline import candidate_edges
     from dedup.session import build_session
     from dedup.stages import exact as stage_exact
     from dedup.stages import minhash_lsh as stage_minhash
-    from dedup.stages import simhash as stage_simhash
     from dedup.stages import verify as stage_verify
 
     config = DedupConfig(shuffle_partitions=args.cpus * 2)
@@ -55,13 +55,7 @@ def main() -> int:
     hashed = stage_exact.hash_content(files)
     reps = stage_exact.representatives(hashed).persist()
     sigs = stage_minhash.joint_signatures(reps, config, with_fp=True).persist()
-    e_lsh = stage_minhash.candidate_pairs(
-        stage_minhash.band_rows(sigs), config, dedup=False
-    )
-    e_sim = stage_simhash.candidate_pairs(
-        sigs.select("doc_id", "simhash", "blocks"), config, dedup=False
-    )
-    edges = e_lsh.unionByName(e_sim).dropDuplicates(["src", "dst"])
+    edges = candidate_edges(sigs, config)
 
     def noop(df) -> float:
         t0 = time.monotonic()

@@ -78,9 +78,9 @@ def breakdown_neardup(sf_dir: str, cpus: str) -> dict:
 
     from dedup.ops import load_table
     from dedup.ops.dedup_queries import DOC_CFG
+    from dedup.pipeline import candidate_edges
     from dedup.stages import cluster as SC
     from dedup.stages import minhash_lsh as SM
-    from dedup.stages import simhash as SS
     from dedup.stages import verify as SV
 
     spark = _session(cpus)
@@ -94,11 +94,7 @@ def breakdown_neardup(sf_dir: str, cpus: str) -> dict:
     out["1_joint_signatures"] = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()
-    e_lsh = SM.candidate_pairs(SM.band_rows(sigs), DOC_CFG, dedup=False)
-    e_sim = SS.candidate_pairs(
-        sigs.select("doc_id", "simhash", "blocks"), DOC_CFG, dedup=False
-    )
-    edges = e_lsh.unionByName(e_sim).dropDuplicates(["src", "dst"]).persist()
+    edges = candidate_edges(sigs, DOC_CFG).persist()
     n_edges = edges.count()
     out["2_candidate_pairs"] = round(time.perf_counter() - t0, 3)
     out["n_candidate_pairs"] = n_edges

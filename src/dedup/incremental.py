@@ -22,7 +22,8 @@ previously-clustered docs are never re-shingled:
      partition; a probe against a bucket larger than bucket_cap emits ONE
      star edge to the bucket pivot instead of bsz pairs — the same
      cap/star treatment the batch channels apply (ADVICE r1);
-4. candidates pass the same pre-verify screens + content verification;
+4. candidates pass the same pre-verify screens + content verification
+   (pipeline.candidate_edges / verified_edges, the one-shot composition);
 5. connected components run over (old assignments as edges) ∪ (exact
    inheritance edges) ∪ (new verified edges) — stage_cluster's
    touched_components — so new evidence can merge existing clusters, and
@@ -52,12 +53,12 @@ from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .ledger import Ledger
+from .pipeline import candidate_edges, verified_edges
 from .storage import TableStore
 from .stages import cluster as stage_cluster
 from .stages import exact as stage_exact
 from .stages import minhash_lsh as stage_minhash
 from .stages import simhash as stage_simhash
-from .stages import verify as stage_verify
 
 _CTX = "ingest"
 
@@ -277,38 +278,31 @@ def ingest_batch(
             stage_minhash.joint_signatures(reps_new, config, with_fp=True)
         )
         sigs_new = joint_new.select("doc_id", "sig")
-        bands_new = persist(stage_minhash.band_rows(joint_new))
-        sims_new = joint_new.select("doc_id", "simhash", "blocks")
 
-        # -- 5. candidates: new-new (capped) + new-old (index probe) --------
-        # dedup=False: the four channels union into ONE global (src, dst)
-        # dropDuplicates below (see pairs_from_buckets)
+        # -- 5. candidates: new-new (capped) + new-old (index probe), one
+        # dedup over all four sets (pipeline.candidate_edges) ----------------
         lsh_keys, sim_keys = ["band_id", "band_hash"], ["block_id", "block_val"]
-        bands_new_pb = persist(stage_minhash.with_pbucket(bands_new))
-        blocks_new = persist(stage_simhash.with_sbucket(
-            stage_simhash.block_rows(sims_new)
+        bands_new = persist(stage_minhash.with_pbucket(
+            stage_minhash.band_rows(joint_new)
         ))
+        blocks_new = persist(stage_simhash.with_sbucket(stage_simhash.block_rows(
+            joint_new.select("doc_id", "simhash", "blocks")
+        )))
         bands_old = persist(touched_slice(
-            spark, store, "bands", "pbucket", bands_new_pb, lsh_keys
+            spark, store, "bands", "pbucket", bands_new, lsh_keys
         ))
         blocks_old = persist(touched_slice(
             spark, store, "sim_blocks", "sbucket", blocks_new, sim_keys
         ))
-        cand = (
-            stage_minhash.candidate_pairs(bands_new, config, dedup=False)
-            .unionByName(
-                probe_index(bands_new_pb, bands_old, lsh_keys, config)
-                .select("src", "dst")
-            )
-            .unionByName(
-                stage_simhash.candidate_pairs(sims_new, config, dedup=False)
-            )
-            .unionByName(stage_simhash.within_radius(
+        cand = candidate_edges(
+            joint_new, config,
+            probe_index(bands_new, bands_old, lsh_keys, config)
+            .select("src", "dst"),
+            stage_simhash.within_radius(
                 probe_index(blocks_new, blocks_old, sim_keys, config,
                             payload="simhash"),
                 config,
-            ))
-            .dropDuplicates(["src", "dst"])
+            ),
         )
 
         # -- 6. verification over combined reps/signatures ---------------------
@@ -323,12 +317,10 @@ def ingest_batch(
         # endpoint.
         fps_new = joint_new.select("doc_id", "fp", "nlen")
         fps_all = store.read(spark, "winnow_fps").unionByName(fps_new)
-        verified = persist(stage_verify.verify_edges(
-            stage_verify.prepare_pairs(cand, reps_all, sigs_all, config,
-                                       fps=fps_all),
-            config,
-            num_partitions=config.shuffle_partitions,
-        ).where("accepted"))
+        verified = persist(verified_edges(
+            cand, reps_all, sigs_all, fps_all, config,
+            config.shuffle_partitions,
+        ))
 
         # -- 7. clustering over the TOUCHED subgraph only (VERDICT r3 #6) ------
         # new edges = exact inheritance + verified; the delta rewrites exactly
@@ -379,7 +371,7 @@ def ingest_batch(
             "hashed": hashed_new.select(*hashed_old.columns),
             "reps": reps_new.select(*reps_old.columns),
             "signatures": sigs_new,
-            "bands": bands_new_pb,
+            "bands": bands_new,
             "sim_blocks": blocks_new,
             "winnow_fps": fps_new,
         }

@@ -8,9 +8,12 @@ Each ingest runs under the one ingest protocol, incremental.run_ingest
 (ledger claim/replay, one guarded commit, log fold); previously-ingested
 vectors are never re-bucketed.
 
-The index key is the multi-probe hyperplane bucket of the ONE-SHOT
-embedding channel (ops.similarity._np_bucket_norm_udf/_probes_col) — not
-the IVF cell of the ANN query path. Deliberate: an LSH bucket is a SIMILARITY
+The build IS the one-shot channel's composition
+(ops.similarity.neardup_graph) with its bucket rows stored, and an ingest
+reuses its bucket-row, tau-edge and labelling steps, so the two paths
+cannot drift. The index key is the multi-probe hyperplane bucket of that
+channel (ops.similarity.neardup_probe_rows) — not the IVF cell of the ANN
+query path. Deliberate: an LSH bucket is a SIMILARITY
 statement (collision implies high cosine w.h.p.), so the shared cap/star
 skew machinery is sound there — a star edge to a mega-bucket's pivot
 survives the tau filter exactly when the members really are near-dups. An
@@ -47,8 +50,9 @@ come from the SAME probe as the MinHash/SimHash ingest
 bucket's rows all sit in its pbucket — and hot buckets contribute ONE star
 edge to their pivot (sound here: an LSH bucket is a similarity bucket, and
 the tau filter validates every edge). Every candidate then passes the
-exact rounded-cosine >= tau filter, and connected components run over the
-touched subgraph only (stages.cluster.touched_components).
+exact rounded-cosine >= tau filter (ops.similarity.neardup_cosine_edges), and
+connected components run over the touched subgraph only
+(stages.cluster.touched_components).
 """
 
 from __future__ import annotations
@@ -67,10 +71,11 @@ from .incremental import (
 from .ledger import Ledger
 from .ops.similarity import (
     _DIM,
-    _np_bucket_norm_udf,
-    _probes_col,
-    _sim4,
     ann_n_planes,
+    neardup_assign,
+    neardup_probe_rows,
+    neardup_graph,
+    neardup_cosine_edges,
     prep_vectors,
 )
 from .stages import cluster as stage_cluster
@@ -91,53 +96,24 @@ def read_emb_clusters(spark: SparkSession, store: TableStore) -> DataFrame:
     )
 
 
-def _bucket_rows(base: DataFrame, n_planes: int) -> DataFrame:
-    """(vec_id, bucket, pbucket): one row per multi-probe bucket of each
-    vector — the symmetric probing of the one-shot channel, so two vectors
-    meet whenever their sign buckets are within the probe radius."""
-    # the bucket is projected on its own first: _probes_col references it
-    # n_planes + 1 times, and a Python UDF must run once per vector
-    bucketed = base.select(
-        "vec_id",
-        _np_bucket_norm_udf(n_planes)(F.col("v"))["bucket"].alias("b"),
-    )
-    return (
-        bucketed.select(
-            "vec_id",
-            F.explode(_probes_col(F.col("b"), n_planes)).alias("bucket"),
-        )
-        .withColumn(
-            "pbucket",
-            F.pmod(F.col("bucket"), F.lit(N_PBUCKETS_EMB)).cast("int"),
-        )
+def _with_pbucket(rows: DataFrame) -> DataFrame:
+    """The stored index row: (vec_id, bucket) plus its hive partition."""
+    return rows.withColumn(
+        "pbucket", F.pmod(F.col("bucket"), F.lit(N_PBUCKETS_EMB)).cast("int")
     )
 
 
-def _tau_edges(pairs: DataFrame, vecs: DataFrame, tau: float) -> DataFrame:
-    """Exact rounded-cosine filter over candidate (src, dst) pairs."""
-    return (
-        pairs.join(
-            vecs.select(
-                F.col("vec_id").alias("src"), F.col("v").alias("v_src"),
-                F.col("nv").alias("n_src"),
-            ),
-            "src",
+def _check_dim(emb: DataFrame, what: str) -> None:
+    """Fail fast, with a typed error and before anything is committed, on
+    vectors whose dimension is not the plane pool's: the bucket UDF would
+    only fail later inside a worker (numpy's matmul core-dimension
+    mismatch)."""
+    first = emb.select(F.size("embedding").alias("d")).head(1)
+    if first and int(first[0]["d"]) != _DIM:
+        raise ValueError(
+            f"{what}: embedding dim {int(first[0]['d'])} != plane-pool dim "
+            f"{_DIM}; the hyperplane pool is fixed-dimension"
         )
-        .join(
-            vecs.select(
-                F.col("vec_id").alias("dst"), F.col("v").alias("v_dst"),
-                F.col("nv").alias("n_dst"),
-            ),
-            "dst",
-        )
-        .where(
-            _sim4(
-                F.col("v_src"), F.col("v_dst"),
-                F.col("n_src"), F.col("n_dst"),
-            ) >= tau
-        )
-        .select("src", "dst")
-    )
 
 
 def build_embedding_index(
@@ -151,36 +127,20 @@ def build_embedding_index(
     """Build the persistent bucket index + initial clusters from a base
     corpus (columns vec_id, embedding). n_planes defaults to the occupancy
     sizing the one-shot channel uses (ann_n_planes) and is FROZEN into
-    emb_meta — every later ingest buckets under it. Returns the clusters
-    DataFrame."""
+    emb_meta — every later ingest buckets under it. The index is the
+    one-shot channel's own composition (ops.similarity.neardup_graph) with
+    its bucket rows stored. Returns the clusters DataFrame."""
+    _check_dim(emb, "build_embedding_index")
     base = prep_vectors(emb).persist()
     try:
-        first = base.select(F.size("v").alias("d")).first()
-        if first is not None and first["d"] != _DIM:
-            raise ValueError(
-                f"embedding dim {first['d']} != plane-pool dim {_DIM}: the "
-                "hyperplane pool is fixed-dimension; zip_with against a "
-                "shorter vector NULLs every dot and collapses all buckets "
-                "to 0"
-            )
         if n_planes is None:
             n_planes = ann_n_planes(base.count())
-        rows = _bucket_rows(base, n_planes)
-        pairs = pairs_from_buckets(
-            rows.withColumnRenamed("vec_id", "doc_id"), ["bucket"], config
-        ).select("src", "dst")
-        edges = _tau_edges(pairs, base, tau)
-        labels, _ = stage_cluster.connected_components(edges)
-        clusters = (
-            base.select("vec_id")
-            .join(
-                labels.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left"
-            )
-            .select(
-                "vec_id",
-                F.coalesce("cluster_id", "vec_id").alias("cluster_id"),
-            )
-            .withColumn("_v", F.lit(0).cast("int"))
+        rows, edges = neardup_graph(base, n_planes, config, tau)
+        labels, _ = stage_cluster.connected_components(
+            edges.select("src", "dst")
+        )
+        clusters = neardup_assign(base.select("vec_id"), labels).withColumn(
+            "_v", F.lit(0).cast("int")
         )
         meta = spark.createDataFrame([(int(n_planes),)], "n_planes int")
         store.commit_many({
@@ -188,7 +148,9 @@ def build_embedding_index(
             "emb_vectors": store.stage(
                 base.select("vec_id", "v", "nv"), "emb_vectors", "replace"
             ),
-            "emb_buckets": store.stage(rows, "emb_buckets", "replace"),
+            "emb_buckets": store.stage(
+                _with_pbucket(rows), "emb_buckets", "replace"
+            ),
             "emb_clusters": store.stage(clusters, "emb_clusters", "replace"),
         })
         return read_emb_clusters(spark, store)
@@ -212,16 +174,8 @@ def ingest_embeddings(
         n_planes = int(store.read_pandas("emb_meta")["n_planes"].iloc[0])
         clusters_old = read_emb_clusters(spark, store)
 
-        # -- 0. dimension guard (ADVICE r5): build_embedding_index raises on
-        # dim != _DIM, but a wrong-dim ingest batch would silently bucket
-        # every vector to 0 (zip_with NULLs the dot) and commit the bad rows
-        # permanently. Fail fast on the first row instead.
-        bad = new_emb.select(F.size("embedding").alias("d")).head(1)
-        if bad and int(bad[0]["d"]) != _DIM:
-            raise ValueError(
-                f"ingest_embeddings: embedding dim {int(bad[0]['d'])} != "
-                f"index dim {_DIM}"
-            )
+        # -- 0. dimension guard: a wrong-dim batch must not commit anything
+        _check_dim(new_emb, "ingest_embeddings")
 
         # -- 1. drop re-ingested vec_ids (commits are all-or-nothing, so a
         # vec_id in emb_vectors implies its bucket/cluster rows landed too)
@@ -232,7 +186,7 @@ def ingest_embeddings(
         )
 
         # -- 2. bucket under the FROZEN plane count --------------------------
-        rows_new = persist(_bucket_rows(fresh, n_planes))
+        rows_new = persist(_with_pbucket(neardup_probe_rows(fresh, n_planes)))
 
         # -- 3. candidates: new-new (capped) + new-old (pruned probe) -------
         new_docs = rows_new.withColumnRenamed("vec_id", "doc_id")
@@ -251,7 +205,7 @@ def ingest_embeddings(
             fresh.select("vec_id", "v", "nv")
         )
         labels, members_old = stage_cluster.touched_components(
-            _tau_edges(cand, vecs, tau),
+            neardup_cosine_edges(cand, vecs, tau).select("src", "dst"),
             clusters_old.withColumnRenamed("vec_id", "doc_id"),
         )
 
@@ -259,11 +213,7 @@ def ingest_embeddings(
         delta_ids = fresh.select("vec_id").unionByName(
             members_old.select(F.col("doc_id").alias("vec_id"))
         )
-        clusters_delta = delta_ids.join(
-            labels.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left"
-        ).select(
-            "vec_id", F.coalesce("cluster_id", "vec_id").alias("cluster_id")
-        )
+        clusters_delta = neardup_assign(delta_ids, labels)
         appends = {
             "emb_vectors": fresh.select("vec_id", "v", "nv"),
             "emb_buckets": rows_new,

@@ -32,9 +32,13 @@ Tables (TableStore):
   compaction.
 - ``span_stats`` (doc_id, n_spans, n_dup_spans, _v): log-structured
   per-doc stats deltas; `read_span_stats` folds latest-wins and derives
-  dup_ratio with ops.spans' exact rounding, so an ingest sequence is
+  dup_ratio with ops.spans.with_dup_ratio, so an ingest sequence is
   row-identical to the one-shot `doc_dup_span_stats` over the union
   corpus (test-pinned).
+
+The build shares the one-shot query's steps (ops.spans._per_doc_counts and
+dup_span_counts) rather than copying them, so its cross-document flag is
+the query's streaming hash-agg, not a per-h window sort.
 """
 
 from __future__ import annotations
@@ -50,7 +54,14 @@ from .incremental import (
     touched_slice,
 )
 from .ledger import Ledger
-from .ops.spans import SPAN_L, SPAN_P, sampled_span_hashes
+from .ops.spans import (
+    SPAN_L,
+    SPAN_P,
+    _per_doc_counts,
+    dup_span_counts,
+    sampled_span_hashes,
+    with_dup_ratio,
+)
 from .storage import TableStore
 
 _CTX = "ingest_spans"
@@ -62,46 +73,16 @@ N_PBUCKETS_SPANS = 64
 
 def read_span_stats(spark: SparkSession, store: TableStore) -> DataFrame:
     """Latest-wins view of the log-structured stats, with dup_ratio derived
-    exactly as ops.spans.doc_dup_span_stats derives it."""
-    latest = _read_latest(spark, store, "span_stats", ["doc_id"])
-    return latest.select(
-        "doc_id",
-        "n_spans",
-        "n_dup_spans",
-        (F.floor(F.col("n_dup_spans") / F.col("n_spans") * 10000
-                 + F.lit(0.5)) / 10000).alias("dup_ratio"),
-    )
+    by ops.spans.with_dup_ratio, the step doc_dup_span_stats ends in."""
+    return with_dup_ratio(_read_latest(spark, store, "span_stats", ["doc_id"]))
 
 
-def _per_doc_hash_counts(docs: DataFrame, L: int, p: int) -> DataFrame:
-    """(h, doc_id, cnt, pbucket): distinct sampled (hash, doc) pairs with
-    position counts — the index row shape."""
-    return (
-        sampled_span_hashes(docs, L=L, p=p)
-        .groupBy("h", "doc_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn(
-            "pbucket",
-            F.pmod(F.col("h"), F.lit(N_PBUCKETS_SPANS)).cast("int"),
-        )
-    )
-
-
-def _stats_from_index_rows(per_doc: DataFrame) -> DataFrame:
-    """One-shot stats over (h, doc_id, cnt) rows — the batch query's
-    window-flag fold (ops.spans.doc_dup_span_stats), reused by build."""
-    from pyspark.sql import Window
-
-    nd = F.count(F.lit(1)).over(Window.partitionBy("h"))
-    return (
-        per_doc.withColumn("nd", nd)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("n_spans"),
-            F.sum(
-                F.when(F.col("nd") >= 2, F.col("cnt")).otherwise(F.lit(0))
-            ).alias("n_dup_spans"),
-        )
+def _index_rows(docs: DataFrame, L: int, p: int) -> DataFrame:
+    """(h, doc_id, cnt, pbucket): the one-shot query's per-(hash, doc)
+    position counts (ops.spans._per_doc_counts) plus their hive partition —
+    the index row shape."""
+    return _per_doc_counts(sampled_span_hashes(docs, L=L, p=p)).withColumn(
+        "pbucket", F.pmod(F.col("h"), F.lit(N_PBUCKETS_SPANS)).cast("int")
     )
 
 
@@ -115,12 +96,12 @@ def build_span_index(
 ) -> DataFrame:
     """Build the persistent span index + initial stats from a base corpus
     (columns doc_id, text). L and p are FROZEN into span_meta; every later
-    ingest samples under them. Returns the stats DataFrame."""
-    per_doc = _per_doc_hash_counts(
-        docs.select("doc_id", "text"), L, p
-    ).persist()
+    ingest samples under them. The stats are the one-shot query's fold
+    (ops.spans.dup_span_counts) over the index rows. Returns the stats
+    DataFrame."""
+    per_doc = _index_rows(docs.select("doc_id", "text"), L, p).persist()
     try:
-        stats = _stats_from_index_rows(per_doc).withColumn(
+        stats = dup_span_counts(per_doc).withColumn(
             "_v", F.lit(0).cast("int")
         )
         meta = spark.createDataFrame([(int(L), int(p))], "L int, p int")
@@ -157,7 +138,7 @@ def ingest_spans(
         fresh = new_docs.join(stats_old.select("doc_id"), "doc_id", "left_anti")
 
         # -- 2. sample under the FROZEN (L, p) -------------------------------
-        per_new = persist(_per_doc_hash_counts(fresh, L, p))
+        per_new = persist(_index_rows(fresh, L, p))
 
         # -- 3. pruned probe: old index rows in the batch's pbuckets, for
         # the batch's hashes only ------------------------------------------

@@ -16,12 +16,15 @@
   generator -> exact cosine >= tau -> connected components. The edge set
   (everything up to CC) is exposed as its own fully-oracled query
   `embedding_neardup_edges`; only the iterative CC remains rows-only.
+  `neardup_graph` is the channel's one composition: the queries here and
+  the persistent index (incremental_ann) build on it, and the index's
+  ingest reuses its bucket-row, tau-edge and labelling steps.
 
 Determinism: similarity rounded to 4 decimals (floor-half-up) before ranking
 and thresholding, ties broken by vec_id.
 
 Scale note (VERDICT r3 #1 — now WIRED): the plane count is no longer a
-fixed 8. `_ann_topk` and `_neardup_edges` derive
+fixed 8. `_ann_topk` and the near-dup queries derive
 `n_planes = ann_n_planes(corpus_count)` per run, so the bucket space grows
 with the corpus (expected occupancy <= target_bucket; at 10^12 rows that is
 2^30 buckets, not 256). At the driver tiers (<= 262,144 vectors) the
@@ -842,61 +845,75 @@ SELECT q_id, vec_id, sim, rk FROM ranked WHERE rk <= {_TOPK}
 # (ADVICE r2: a hardcoded 0.90 / 64 silently diverges if either changes)
 _NEARDUP_TAU = 0.90
 from ..config import DEFAULT_CONFIG as _DC  # noqa: E402 — shared cap source
+from ..config import DedupConfig  # noqa: E402
 
 
-def _neardup_edges(
-    spark: SparkSession,
-    sf_dir: str,
-    tau: float,
-    n_planes: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(base, accepted-similarity-edges) — multi-probe LSH bucket rows
-    through the skew-capped pair generator
-    (stages/minhash_lsh.pairs_from_buckets), exact rounded cosine, keep
-    sim >= tau. n_planes=None sizes the bucket space from the corpus
-    (ann_n_planes; == the oracled 8 at driver tiers). Internal helper —
-    the edges-only public query is embedding_neardup_edges (VERDICT r5 #8:
-    the annotation now matches the tuple return)."""
-    from ..config import DedupConfig
-    from ..stages.minhash_lsh import pairs_from_buckets
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    if n_planes is None:
-        n_planes = ann_n_planes(_corpus_count(sf_dir, emb))
-    vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = emb.select(
-        F.col("vec_id").alias("doc_id"), vec.alias("v"),
-        _np_bucket_norm_udf(n_planes)(F.col("embedding"))["bucket"].alias(
-            "bucket"),
-    ).withColumn("nv", _norm_col(F.col("v"))).persist()
-    rows = base.select(
-        "doc_id",
-        F.explode(_probes_col(F.col("bucket"), n_planes)).alias("bucket"),
+def neardup_probe_rows(vecs: DataFrame, n_planes: int) -> DataFrame:
+    """(vec_id, bucket): one row per multi-probe bucket of each vector of
+    `vecs(vec_id, v)` — its sign bucket plus every Hamming-1 flip, so two
+    vectors meet whenever their buckets are within the probe radius."""
+    # the bucket is projected on its own first: _probes_col references it
+    # n_planes + 1 times, and a Python UDF must run once per vector
+    bucketed = vecs.select(
+        "vec_id", _np_bucket_norm_udf(n_planes)(F.col("v"))["bucket"].alias("b")
     )
-    pairs = pairs_from_buckets(rows, ["bucket"], DedupConfig()).select(
-        "src", "dst"
+    return bucketed.select(
+        "vec_id", F.explode(_probes_col(F.col("b"), n_planes)).alias("bucket")
     )
-    vecs = base.select("doc_id", "v", "nv")
-    edges = (
-        pairs.join(
-            vecs.select(F.col("doc_id").alias("src"),
-                        F.col("v").alias("v_src"), F.col("nv").alias("n_src")),
-            "src",
-        )
-        .join(
-            vecs.select(F.col("doc_id").alias("dst"),
-                        F.col("v").alias("v_dst"), F.col("nv").alias("n_dst")),
-            "dst",
-        )
-        .withColumn(
-            "sim",
-            _sim4(F.col("v_src"), F.col("v_dst"),
-                  F.col("n_src"), F.col("n_dst")),
-        )
+
+
+def neardup_cosine_edges(
+    pairs: DataFrame, vecs: DataFrame, tau: float
+) -> DataFrame:
+    """(src, dst, sim): the candidate `pairs(src, dst)` whose exact rounded
+    cosine over `vecs(vec_id, v, nv)` is at least tau."""
+
+    def side(name: str) -> DataFrame:
+        return vecs.select(F.col("vec_id").alias(name),
+                           F.col("v").alias(f"v_{name}"),
+                           F.col("nv").alias(f"n_{name}"))
+
+    return (
+        pairs.join(side("src"), "src")
+        .join(side("dst"), "dst")
+        .withColumn("sim", _sim4(F.col("v_src"), F.col("v_dst"),
+                                 F.col("n_src"), F.col("n_dst")))
         .where(F.col("sim") >= tau)
         .select("src", "dst", "sim")
     )
-    return base, edges
+
+
+def neardup_graph(
+    vecs: DataFrame, n_planes: int, config: DedupConfig, tau: float
+) -> tuple[DataFrame, DataFrame]:
+    """(bucket rows, edges) of the embedding near-dup channel over
+    `vecs(vec_id, v, nv)` (prep_vectors): the bucket rows through the
+    skew-capped pair generator (stages/minhash_lsh.pairs_from_buckets),
+    then the cosine filter. Shared by the queries and the index build."""
+    from ..stages.minhash_lsh import pairs_from_buckets
+
+    rows = neardup_probe_rows(vecs, n_planes)
+    pairs = pairs_from_buckets(
+        rows.withColumnRenamed("vec_id", "doc_id"), ["bucket"], config
+    ).select("src", "dst")
+    return rows, neardup_cosine_edges(pairs, vecs, tau)
+
+
+def neardup_assign(ids: DataFrame, labels: DataFrame) -> DataFrame:
+    """(vec_id, cluster_id) for every row of `ids(vec_id)`: its component
+    label from `labels(doc_id, cluster_id)`, or its own id when it is on
+    no edge."""
+    return ids.join(
+        labels.withColumnRenamed("doc_id", "vec_id"), "vec_id", "left"
+    ).select("vec_id", F.coalesce("cluster_id", "vec_id").alias("cluster_id"))
+
+
+def _neardup_input(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """(vecs, n_planes) of the one-shot queries: the embeddings table as
+    prep_vectors rows, and the bucket space sized from the corpus
+    (ann_n_planes; == the oracled 8 at driver tiers)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    return prep_vectors(emb), ann_n_planes(_corpus_count(sf_dir, emb))
 
 
 def embedding_neardup_edges(
@@ -907,7 +924,8 @@ def embedding_neardup_edges(
     pairs_from_buckets cap/star skew treatment (small buckets all-pairs, big
     buckets star-to-min-pivot; the max_bucket_pairs slice cannot trigger at
     the default cap since C(64,2) <= 2048)."""
-    _base, edges = _neardup_edges(spark, sf_dir, tau)
+    vecs, n_planes = _neardup_input(spark, sf_dir)
+    _rows, edges = neardup_graph(vecs, n_planes, _DC, tau)
     return edges
 
 
@@ -998,16 +1016,15 @@ def embedding_neardup_clusters(
     (networkx-verified) CC step itself is outside the hash gate."""
     from ..stages.cluster import connected_components
 
-    base, edges = _neardup_edges(spark, sf_dir, tau)
+    # the vectors feed both sides of the pair generator and the cosine
+    # joins; released once CC's checkpoint has cut the edges' lineage
+    vecs, n_planes = _neardup_input(spark, sf_dir)
+    vecs = vecs.persist()
+    _rows, edges = neardup_graph(vecs, n_planes, _DC, tau)
     labels, _ = connected_components(edges.select("src", "dst"))
-    return (
-        base.select("doc_id")
-        .join(labels, "doc_id", "left")
-        .select(
-            F.col("doc_id").alias("vec_id"),
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-        )
-        .withColumn("is_canonical", F.col("vec_id") == F.col("cluster_id"))
+    vecs.unpersist()
+    return neardup_assign(vecs.select("vec_id"), labels).withColumn(
+        "is_canonical", F.col("vec_id") == F.col("cluster_id")
     )
 
 

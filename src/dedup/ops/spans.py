@@ -29,7 +29,7 @@ only corpus-sized exchange and p scales it down linearly; the per-(h, doc)
 combine happens map-side before the exchange; no collect, no crossJoin, no
 driver loop. Skewed hashes (a license block in 10^8 docs) concentrate one
 key's rows, but each row is 16 bytes and the first groupBy collapses them
-map-side to one row per (h, doc) before the h-window count.
+to one row per (h, doc) before the per-h count.
 
 Oracle: `oracle_u64.runwin_ctes` renders the identical uint64 chain as
 DuckDB SQL (HUGEINT limb arithmetic), so both queries are value-hash
@@ -128,10 +128,11 @@ def _per_doc_counts(spans: DataFrame) -> DataFrame:
     """(h, doc_id, cnt) hash-partitioned on h ALONE. The explicit
     repartition("h") is the plan-shaping move: hashpartitioning(h) satisfies
     ClusteredDistribution for BOTH the (h, doc_id) count and every downstream
-    h-keyed operator (the inventory's groupBy(h), the stats' h-window), so
-    the whole chain runs on ONE exchange of the sampled stream instead of
-    re-shuffling the per-(h, doc) rows a second time — at 100 TB that second
-    exchange is another full pass over the channel's largest intermediate.
+    h-keyed operator (the inventory's groupBy(h), the stats' cross-doc
+    flag), so the whole chain runs on ONE exchange of the sampled stream
+    instead of re-shuffling the per-(h, doc) rows a second time — at 100 TB
+    that second exchange is another full pass over the channel's largest
+    intermediate.
     (Trade-off: the first count loses its pre-shuffle partial-agg, but
     sampled hashes are almost all unique per (h, doc), so the combine was
     removing ~nothing while the extra exchange cost a full stream.)
@@ -166,28 +167,21 @@ def dup_span_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doc_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document duplicated-span exposure: of this doc's sampled windows,
-    how many are shared verbatim with ANOTHER document? `dup_ratio` is the
-    Lee-et-al-style filter signal (drop/trim docs dominated by text that
-    exists elsewhere in the corpus).
+def dup_span_counts(per_doc: DataFrame) -> DataFrame:
+    """(doc_id, n_spans, n_dup_spans) over `per_doc(h, doc_id, cnt)` rows
+    (_per_doc_counts): every sampled position, and those whose hash occurs
+    in >= 2 distinct documents. The one stats fold of the span channel —
+    the one-shot query and the persistent index build
+    (incremental_spans.build_span_index) both run it.
 
-    ONE corpus scan: the sampled emit collapses to (h, doc_id, cnt), a
-    streaming hash-agg + same-partition join flags cross-doc hashes (no
-    per-h window sort — see inline note), and the final groupBy folds both
-    totals per doc — no self-join, no second pass over content.
-    """
-    per_doc = _per_doc_counts(
-        sampled_span_hashes(load_table(spark, sf_dir, "documents"))
-    )
-    # Cross-doc flag WITHOUT a per-h window sort (VERDICT r5 #4): a
-    # boilerplate hash shared by 10^8 docs made `count(*) OVER (PARTITION
-    # BY h)` sort that key's rows inside one task. per_doc is already
-    # hash-partitioned on h, so the groupBy below is a streaming hash-agg
-    # on the SAME exchange and the h-keyed join adds no exchange either
-    # (the shared repartition("h") is planned once + ReusedExchange —
-    # plan-pinned in tests/test_plans.py). nd >= 2 over per-(h, doc) rows
-    # == "h occurs in >= 2 distinct documents" == the old window flag.
+    Cross-doc flag WITHOUT a per-h window sort (VERDICT r5 #4): a
+    boilerplate hash shared by 10^8 docs made `count(*) OVER (PARTITION
+    BY h)` sort that key's rows inside one task. per_doc is already
+    hash-partitioned on h, so the groupBy below is a streaming hash-agg
+    on the SAME exchange and the h-keyed join adds no exchange either
+    (the shared repartition("h") is planned once + ReusedExchange —
+    plan-pinned in tests/test_plans.py). nd >= 2 over per-(h, doc) rows
+    == "h occurs in >= 2 distinct documents" == the old window flag."""
     dup_h = (
         per_doc.groupBy("h")
         .agg(F.count(F.lit(1)).alias("nd"))
@@ -202,17 +196,35 @@ def doc_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_cnt = F.sum(
         F.when(F.col("isdup").isNotNull(), F.col("cnt")).otherwise(F.lit(0))
     ).alias("n_dup_spans")
-    return (
-        flagged.groupBy("doc_id")
-        .agg(F.sum("cnt").alias("n_spans"), dup_cnt)
-        .select(
-            "doc_id",
-            "n_spans",
-            "n_dup_spans",
-            (F.floor(F.col("n_dup_spans") / F.col("n_spans") * 10000
-                     + F.lit(0.5)) / 10000).alias("dup_ratio"),
-        )
+    return flagged.groupBy("doc_id").agg(F.sum("cnt").alias("n_spans"), dup_cnt)
+
+
+def with_dup_ratio(counts: DataFrame) -> DataFrame:
+    """(doc_id, n_spans, n_dup_spans, dup_ratio): the duplicated share of a
+    doc's sampled positions, floor-half-up rounded to 4 decimals."""
+    return counts.select(
+        "doc_id",
+        "n_spans",
+        "n_dup_spans",
+        (F.floor(F.col("n_dup_spans") / F.col("n_spans") * 10000
+                 + F.lit(0.5)) / 10000).alias("dup_ratio"),
     )
+
+
+def doc_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document duplicated-span exposure: of this doc's sampled windows,
+    how many are shared verbatim with ANOTHER document? `dup_ratio` is the
+    Lee-et-al-style filter signal (drop/trim docs dominated by text that
+    exists elsewhere in the corpus).
+
+    ONE corpus scan: the sampled emit collapses to (h, doc_id, cnt), a
+    streaming hash-agg + same-partition join flags cross-doc hashes (no
+    per-h window sort — see dup_span_counts), and the final groupBy folds
+    both totals per doc — no self-join, no second pass over content.
+    """
+    return with_dup_ratio(dup_span_counts(_per_doc_counts(
+        sampled_span_hashes(load_table(spark, sf_dir, "documents"))
+    )))
 
 
 def doc_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:

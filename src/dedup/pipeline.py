@@ -10,10 +10,13 @@ This is the batch realization of the reference's protect lifecycle
 Stages (STAGES): `sha256` (exact dedup, representatives), `signatures`
 (ONE fused pandas-UDF pass over the representatives: MinHash bands and LSH
 candidates, SimHash blocks and Hamming candidates, and the verify stage's
-winnowed fingerprints, committed as six index/edge tables), `verify`
+winnowed fingerprints, committed as the `signatures`, `bands`,
+`sim_blocks`, `candidates` and `winnow_fps` tables), `verify`
 (screens + pairwise verification against the stored fingerprints) and
 `cluster` (connected components). The store-free composition
-(`near_dup_labels`, `run_dataframe_pipeline`) runs the same signature pass.
+(`near_dup_labels`, `run_dataframe_pipeline`), these stages and the
+incremental ingest all build candidates with `candidate_edges` and verify
+them with `verified_edges`.
 
 Store format: the work_dir's TableStore stamps `storage.STORE_FORMAT` into
 every catalog version, and any change to a table's layout increments it.
@@ -59,37 +62,61 @@ from .stages import verify as stage_verify
 STAGES = ["sha256", "signatures", "verify", "cluster"]
 
 
+def candidate_edges(
+    sigs: DataFrame, config: DedupConfig, *more: DataFrame
+) -> DataFrame:
+    """(src, dst) candidates of `sigs(doc_id, sig, simhash, blocks)`: the
+    LSH and SimHash channels plus any further edge sets (`more`, e.g. an
+    ingest's index probes), deduplicated ONCE — the union's single
+    dropDuplicates is the only shuffle the candidate set pays (see
+    pairs_from_buckets)."""
+    edges = stage_minhash.candidate_pairs(
+        stage_minhash.band_rows(sigs), config, dedup=False
+    ).unionByName(stage_simhash.candidate_pairs(
+        sigs.select("doc_id", "simhash", "blocks"), config, dedup=False
+    ))
+    for extra in more:
+        edges = edges.unionByName(extra)
+    return edges.dropDuplicates(["src", "dst"])
+
+
+def verified_edges(
+    edges: DataFrame,
+    reps: DataFrame,
+    sigs: DataFrame,
+    fps: DataFrame,
+    config: DedupConfig,
+    num_partitions: int | None,
+) -> DataFrame:
+    """The accepted rows of `edges` after the pre-verify screens and the
+    content verification (stages.verify); `num_partitions` is the verify
+    stage's Python task count (None keeps the input partitioning)."""
+    return stage_verify.verify_edges(
+        stage_verify.prepare_pairs(edges, reps, sigs, config, fps=fps),
+        config,
+        num_partitions=num_partitions,
+    ).where("accepted")
+
+
 def near_dup_labels(
     reps: DataFrame, config: DedupConfig, num_partitions: int | None = None
 ) -> tuple[DataFrame, int]:
     """Near-duplicate components over `reps(doc_id, content)` as one lazy
     composition: ((doc_id, cluster_id) for every doc on an accepted edge,
     CC rounds). Shared by `run_dataframe_pipeline` and the
-    `neardup_clusters_documents` query; `num_partitions` is the verify
-    stage's Python task count (None keeps the input partitioning).
+    `neardup_clusters_documents` query.
 
     One fused UDF pass computes both signature channels AND the verify
     fingerprints (content crosses Arrow once, normalization and shingle
-    hashing shared); per-channel dedup is deferred to the union's single
-    (src, dst) dropDuplicates, the only shuffle the candidate set pays
-    (see pairs_from_buckets). `sigs` feeds three consumers and is
-    persisted; the verified edges have one reader, CC's eager checkpoint,
-    so they are not. `sigs` is released once CC returns: that checkpoint
-    has cut its lineage."""
+    hashing shared). `sigs` feeds three consumers and is persisted; the
+    verified edges have one reader, CC's eager checkpoint, so they are
+    not. `sigs` is released once CC returns: that checkpoint has cut its
+    lineage."""
     sigs = stage_minhash.joint_signatures(reps, config, with_fp=True).persist()
-    e_lsh = stage_minhash.candidate_pairs(
-        stage_minhash.band_rows(sigs), config, dedup=False
+    verified = verified_edges(
+        candidate_edges(sigs, config), reps, sigs,
+        sigs.select("doc_id", "fp", "nlen"), config, num_partitions,
     )
-    e_sim = stage_simhash.candidate_pairs(
-        sigs.select("doc_id", "simhash", "blocks"), config, dedup=False
-    )
-    edges = e_lsh.unionByName(e_sim).dropDuplicates(["src", "dst"])
-    verified = stage_verify.verify_edges(
-        stage_verify.prepare_pairs(edges, reps, sigs, config,
-                                   fps=sigs.select("doc_id", "fp", "nlen")),
-        config,
-        num_partitions=num_partitions,
-    ).where("accepted")
     labels, rounds = stage_cluster.connected_components(verified)
     sigs.unpersist()
     return labels, rounds
@@ -140,6 +167,8 @@ class Pipeline:
         self.results: list[StageResult] = []
         # DataFrames the running stage persisted; released once its commit ran
         self._cached: list[DataFrame] = []
+        # snapshot of each table the running stage read (_read): its lineage
+        self._inputs: dict[str, str] = {}
 
     # ------------------------------------------------------------------ API
 
@@ -184,6 +213,7 @@ class Pipeline:
             self.results.append(StageResult(name, True, 0.0, payload["snapshots"]))
             return
         t0 = time.time()
+        self._inputs = {}
         try:
             outputs = fn()
             # stage all data first, then ONE atomic catalog CAS for the whole
@@ -233,14 +263,8 @@ class Pipeline:
         self._append_control("_metrics", pdf)
 
     def _append_lineage(self, stage: str, snapshots: dict[str, str], wall: float) -> None:
-        inputs = {
-            t: self.store.current_snapshot(t)
-            for t in ["files", "hashed", "reps", "signatures", "winnow_fps",
-                      "edges_lsh", "edges_simhash", "edges_verified"]
-            if self.store.exists(t) and t not in snapshots
-        }
         pdf = pd.DataFrame([
-            dict(stage=stage, inputs=json.dumps(inputs),
+            dict(stage=stage, inputs=json.dumps(self._inputs),
                  outputs=json.dumps(snapshots),
                  config_hash=self.config.config_hash(),
                  committed_at=time.time(), wall_s=wall)
@@ -270,8 +294,14 @@ class Pipeline:
 
     # ------------------------------------------------------------- stages
 
+    def _read(self, table: str) -> DataFrame:
+        """Read a committed table for the running stage, recording its
+        snapshot as one of the stage's lineage inputs."""
+        self._inputs[table] = self.store.current_snapshot(table)
+        return self.store.read(self.spark, table)
+
     def _stage_sha256(self) -> dict[str, DataFrame]:
-        files = self.store.read(self.spark, "files")
+        files = self._read("files")
         hashed = stage_exact.hash_content(files)
         return {
             # content pruned from the scan the moment the hash exists
@@ -281,14 +311,12 @@ class Pipeline:
         }
 
     def _stage_signatures(self) -> dict[str, DataFrame]:
-        reps = self.store.read(self.spark, "reps")
+        reps = self._read("reps")
         # ONE pandas-UDF pass: both signature channels and the verify
         # fingerprints are pure functions of reps, so one fused pass does
         # less work than one stage per channel, even on a resume
         sigs = stage_minhash.joint_signatures(reps, self.config, with_fp=True)
         self._cached.append(sigs.persist())
-        bands = stage_minhash.band_rows(sigs)
-        sh = sigs.select("doc_id", "simhash", "blocks")
         return {
             # `signatures` feeds the verify stage's est-Jaccard gate
             "signatures": sigs.select("doc_id", "sig"),
@@ -296,37 +324,28 @@ class Pipeline:
             # it): hive-partitioned on pbucket (storage.PARTITIONED) so probes
             # prune; a probe derives the per-bucket (size, pivot) it caps hot
             # buckets with from the pruned rows
-            "bands": stage_minhash.with_pbucket(bands),
-            "edges_lsh": stage_minhash.candidate_pairs(bands, self.config),
+            "bands": stage_minhash.with_pbucket(stage_minhash.band_rows(sigs)),
             # the probeable Hamming-block index: exploded rows, hive-
             # partitioned on sbucket (same layout as `bands`/pbucket)
-            "sim_blocks": stage_simhash.with_sbucket(stage_simhash.block_rows(sh)),
-            "edges_simhash": stage_simhash.candidate_pairs(sh, self.config),
+            "sim_blocks": stage_simhash.with_sbucket(stage_simhash.block_rows(
+                sigs.select("doc_id", "simhash", "blocks")
+            )),
+            "candidates": candidate_edges(sigs, self.config),
             # fingerprints persist as their own index table: incremental
             # ingests then fingerprint only their new reps (ADVICE r2)
             "winnow_fps": sigs.select("doc_id", "fp", "nlen"),
         }
 
     def _stage_verify(self) -> dict[str, DataFrame]:
-        reps = self.store.read(self.spark, "reps")
-        sigs = self.store.read(self.spark, "signatures")
-        edges = (
-            self.store.read(self.spark, "edges_lsh")
-            .unionByName(self.store.read(self.spark, "edges_simhash"))
-            .dropDuplicates(["src", "dst"])
-        )
-        pairs = stage_verify.prepare_pairs(
-            edges, reps, sigs, self.config,
-            fps=self.store.read(self.spark, "winnow_fps"),
-        )
-        verified = stage_verify.verify_edges(
-            pairs, self.config, num_partitions=self.config.shuffle_partitions
-        )
-        return {"edges_verified": verified.where("accepted")}
+        return {"edges_verified": verified_edges(
+            self._read("candidates"), self._read("reps"),
+            self._read("signatures"), self._read("winnow_fps"),
+            self.config, self.config.shuffle_partitions,
+        )}
 
     def _stage_cluster(self) -> dict[str, DataFrame]:
-        edges = self.store.read(self.spark, "edges_verified")
-        exact_clusters = self.store.read(self.spark, "exact_clusters")
+        edges = self._read("edges_verified")
+        exact_clusters = self._read("exact_clusters")
         labels, rounds = stage_cluster.connected_components(edges)
         # `_v` = log-structured version stamp: incremental ingests append
         # delta segments at higher _v; readers resolve latest-wins per doc

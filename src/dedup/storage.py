@@ -41,7 +41,7 @@ from pyspark.sql.functions import col as F_col
 from .retry import BACKOFF, CommitConflict, RetryStrategy, attempt_with_backoff
 
 # Any change to the layout of a table written through TableStore increments this.
-STORE_FORMAT = 2
+STORE_FORMAT = 3
 
 # The bucket indexes: each is hive-partitioned on its bucket column, one file
 # per bucket, so a probe reads only the partitions its batch touches.

@@ -118,13 +118,12 @@ def test_all_stages_completed(clusters):
     for s in STAGES:
         assert pipe.ledger.status("__stage__", s, CFG.max_processing_time_s,
                                   __import__("time").time()) is Status.COMPLETED
-    # one fused stage commits both signature channels' indexes and edges
-    # and the verify fingerprints
+    # one fused stage commits both signature channels' indexes, their
+    # once-deduplicated candidates and the verify fingerprints
     by_name = {r.name: r for r in pipe.results}
     assert [r.name for r in pipe.results] == STAGES
     assert set(by_name["signatures"].snapshots) == {
-        "signatures", "bands", "edges_lsh", "sim_blocks", "edges_simhash",
-        "winnow_fps",
+        "signatures", "bands", "sim_blocks", "candidates", "winnow_fps",
     }
 
 
@@ -134,8 +133,8 @@ def test_rerun_is_noop(spark, corpus, run_dir, clusters):
     _, first = clusters
     snaps_before = {
         t: first.store.current_snapshot(t)
-        for t in ["hashed", "reps", "exact_clusters", "edges_lsh",
-                  "edges_simhash", "edges_verified", "clusters"]
+        for t in ["hashed", "reps", "exact_clusters", "candidates",
+                  "edges_verified", "clusters"]
     }
     pipe2 = Pipeline(spark, CFG, run_dir)
     files = spark.createDataFrame(corpus.files)
@@ -154,7 +153,7 @@ def test_resume_after_simulated_failure(spark, corpus, run_dir, clusters):
     early = ["sha256", "signatures"]
     snaps_early = {t: first.store.current_snapshot(t)
                    for t in ["hashed", "reps", "exact_clusters",
-                             "edges_lsh", "edges_simhash"]}
+                             "candidates"]}
     for s in ["verify", "cluster"]:
         first.ledger.delete("__stage__", s)
     pipe3 = Pipeline(spark, CFG, run_dir)
@@ -217,6 +216,30 @@ def test_metrics_and_lineage_written(clusters, spark):
         assert observed == pipe.store.read(spark, table).count()
 
 
+def test_lineage_records_each_stage_reads(clusters):
+    """Each stage's lineage inputs are exactly the tables it read, at the
+    snapshots it read them."""
+    _, pipe = clusters
+    lineage = pipe.store.read_pandas("_lineage").drop_duplicates(
+        "stage", keep="first"
+    ).set_index("stage")
+    expected = {
+        "sha256": {"files"},
+        "signatures": {"reps"},
+        "verify": {"reps", "signatures", "candidates", "winnow_fps"},
+        "cluster": {"edges_verified", "exact_clusters"},
+    }
+    outputs = {}
+    for stage in STAGES:
+        inputs = json.loads(lineage.loc[stage, "inputs"])
+        assert set(inputs) == expected[stage], stage
+        outputs.update(json.loads(lineage.loc[stage, "outputs"]))
+    for stage in STAGES:
+        for t, snap in json.loads(lineage.loc[stage, "inputs"]).items():
+            if t in outputs:
+                assert snap == outputs[t], (stage, t)
+
+
 def test_metrics_ride_the_write_no_rescan(spark, corpus, tmp_path):
     """VERDICT r3 #3: per-stage metrics come from df.observe on the staging
     write, not a post-commit re-read. `hashed` is never an input to any
@@ -258,17 +281,39 @@ def test_compositions_release_what_they_persist(spark, tmp_path):
     """Each composition unpersists the DataFrames it persisted once they
     are no longer needed, so nothing stays cached for the rest of the
     session: the store-free compositions after connected components, the
-    signatures stage after its commit."""
+    signatures stage after its commit, the embedding near-dup query after
+    connected components and the embedding index build after its commit."""
+    import numpy as np
+
+    from dedup.incremental_ann import build_embedding_index
+    from dedup.ops.similarity import embedding_neardup_clusters
     from dedup.pipeline import near_dup_labels, run_dataframe_pipeline
     from dedup.stages import exact as stage_exact
+    from dedup.storage import TableStore
 
     files = spark.createDataFrame(generate_corpus(80, seed=3).files)
     cache = spark._jsparkSession.sharedState().cacheManager()
     reps = stage_exact.representatives(stage_exact.hash_content(files))
+    rng = np.random.default_rng(5)
+    centers = rng.standard_normal((6, 64))
+    emb = pd.DataFrame({
+        "vec_id": np.arange(24, dtype=np.int64),
+        "embedding": [
+            (centers[i % 6] + 0.01 * rng.standard_normal(64))
+            .astype("float32").tolist()
+            for i in range(24)
+        ],
+    })
+    emb.to_parquet(tmp_path / "embeddings.parquet")
     for compose in (
         lambda: near_dup_labels(reps, CFG),
         lambda: run_dataframe_pipeline(files, CFG),
         lambda: Pipeline(spark, CFG, tmp_path / "w").run(files),
+        lambda: embedding_neardup_clusters(spark, str(tmp_path)),
+        lambda: build_embedding_index(
+            spark, CFG, TableStore(tmp_path / "emb"),
+            spark.read.parquet(str(tmp_path / "embeddings.parquet")), 0.9,
+        ),
     ):
         spark.catalog.clearCache()
         compose()

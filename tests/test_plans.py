@@ -172,3 +172,31 @@ def test_span_crossdoc_flag_has_no_per_h_sort(spark):
     assert all("ENSURE_REQUIREMENTS" not in ln
                for ln in plan.splitlines()
                if "Exchange hashpartitioning(h" in ln)
+
+
+def test_span_index_build_has_no_per_h_sort(spark, tmp_path):
+    """The persistent span index build stages its stats through the query's
+    own fold (ops.spans.dup_span_counts): the staged `span_stats` plan has
+    no Window and no Sort, the bar the query above sets."""
+    from dedup.incremental_spans import build_span_index
+    from dedup.storage import TableStore
+
+    store = TableStore(tmp_path / "tables")
+    plans: dict[str, str] = {}
+    orig_stage = store.stage
+
+    def spying_stage(df, table, *a, **k):
+        plans[table] = _plan(df)
+        return orig_stage(df, table, *a, **k)
+
+    store.stage = spying_stage
+    shared = "shared boilerplate header line for every document " * 3
+    docs = spark.createDataFrame(
+        [(i, f"{shared} doc {i} " + f"unique words {i} " * 12)
+         for i in range(12)],
+        "doc_id long, text string",
+    )
+    build_span_index(spark, CFG, store, docs)
+    plan = plans["span_stats"]
+    assert "Window" not in plan
+    assert "Sort " not in plan and "SortMergeJoin" not in plan

@@ -112,16 +112,17 @@ def test_commit_many_is_one_catalog_version(spark, tmp_path):
 
 
 def test_unstamped_store_is_refused_by_every_opener(spark, tmp_path):
-    """A catalog written before the format stamp counts as format 0, and a
+    """A catalog written before the format stamp counts as format 0, a
     format-1 catalog still holds the per-bucket stats logs this code no
-    longer keeps: once either holds tables, the store, the pipeline and the
-    protect engine all refuse it, naming the rebuild command, instead of
-    reading or migrating its tables."""
+    longer keeps, and a format-2 catalog holds per-channel candidate tables
+    instead of one `candidates` table: once any of them holds tables, the
+    store, the pipeline and the protect engine all refuse it, naming the
+    rebuild command, instead of reading or migrating its tables."""
     from dedup.api import Deduplication
     from dedup.config import DedupConfig
     from dedup.pipeline import Pipeline
 
-    for found, stamp in [(0, {}), (1, {"format": 1})]:
+    for found, stamp in [(0, {}), (1, {"format": 1}), (2, {"format": 2})]:
         work = tmp_path / f"w{found}"
         cat = work / "tables" / "_catalog"
         cat.mkdir(parents=True)
