@@ -76,9 +76,7 @@ def main() -> int:
     t_edges = noop(edges)
     edges_p = edges.persist()
     n_edges = edges_p.count()  # warm the persist so downstream reuses it
-    pairs = stage_verify.prepare_pairs(
-        edges_p, reps, sigs, config, fps=sigs.select("doc_id", "fp", "nlen")
-    )
+    pairs = stage_verify.prepare_pairs(edges_p, reps, sigs, config)
     t_pairs = noop(pairs)
     ver = stage_verify.verify_edges(pairs, config,
                                     num_partitions=args.cpus)

@@ -100,8 +100,7 @@ def breakdown_neardup(sf_dir: str, cpus: str) -> dict:
     out["n_candidate_pairs"] = n_edges
 
     t0 = time.perf_counter()
-    prepared = SV.prepare_pairs(edges, reps, sigs, DOC_CFG,
-                                fps=sigs.select("doc_id", "fp", "nlen"))
+    prepared = SV.prepare_pairs(edges, reps, sigs, DOC_CFG)
     verified = SV.verify_edges(prepared, DOC_CFG).where("accepted").persist()
     n_acc = verified.count()
     out["3_verify"] = round(time.perf_counter() - t0, 3)

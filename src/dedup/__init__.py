@@ -25,6 +25,11 @@ Package layout (SURVEY.md section 7):
     pipeline.py  stage orchestrator with resume
     stages/      exact, minhash_lsh, simhash, verify, cluster
     ops/         training-data-pipeline operators (text, similarity, multimodal)
+    _pyworker.py Spark Python workers skip re-reading unchanged zip archives
 """
 
 __version__ = "0.1.0"
+
+from ._pyworker import install as _install_pyworker  # noqa: E402
+
+_install_pyworker()

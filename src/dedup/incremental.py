@@ -318,8 +318,8 @@ def ingest_batch(
         fps_new = joint_new.select("doc_id", "fp", "nlen")
         fps_all = store.read(spark, "winnow_fps").unionByName(fps_new)
         verified = persist(verified_edges(
-            cand, reps_all, sigs_all, fps_all, config,
-            config.shuffle_partitions,
+            cand, reps_all, sigs_all, config, config.shuffle_partitions,
+            fps=fps_all,
         ))
 
         # -- 7. clustering over the TOUCHED subgraph only (VERDICT r3 #6) ------

@@ -132,10 +132,13 @@ def build_embedding_index(
     its bucket rows stored. Returns the clusters DataFrame."""
     _check_dim(emb, "build_embedding_index")
     base = prep_vectors(emb).persist()
+    rows = None
     try:
         if n_planes is None:
             n_planes = ann_n_planes(base.count())
-        rows, edges = neardup_graph(base, n_planes, config, tau)
+        # the pair generator and the emb_buckets commit read the probe rows
+        rows = neardup_probe_rows(base, n_planes).persist()
+        edges = neardup_graph(base, rows, config, tau)
         labels, _ = stage_cluster.connected_components(
             edges.select("src", "dst")
         )
@@ -155,6 +158,8 @@ def build_embedding_index(
         })
         return read_emb_clusters(spark, store)
     finally:
+        if rows is not None:
+            rows.unpersist()
         base.unpersist()
 
 

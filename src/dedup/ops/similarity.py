@@ -884,19 +884,21 @@ def neardup_cosine_edges(
 
 
 def neardup_graph(
-    vecs: DataFrame, n_planes: int, config: DedupConfig, tau: float
-) -> tuple[DataFrame, DataFrame]:
-    """(bucket rows, edges) of the embedding near-dup channel over
-    `vecs(vec_id, v, nv)` (prep_vectors): the bucket rows through the
-    skew-capped pair generator (stages/minhash_lsh.pairs_from_buckets),
-    then the cosine filter. Shared by the queries and the index build."""
+    vecs: DataFrame, rows: DataFrame, config: DedupConfig, tau: float
+) -> DataFrame:
+    """Edges of the embedding near-dup channel over `vecs(vec_id, v, nv)`
+    (prep_vectors) and their probe `rows` (neardup_probe_rows): the rows
+    through the skew-capped pair generator
+    (stages/minhash_lsh.pairs_from_buckets), then the cosine filter.
+    Shared by the queries and the index build. The generator reads `rows`
+    in several subtrees, so a caller that can release them persists them:
+    the bucket UDF then runs once per vector."""
     from ..stages.minhash_lsh import pairs_from_buckets
 
-    rows = neardup_probe_rows(vecs, n_planes)
     pairs = pairs_from_buckets(
         rows.withColumnRenamed("vec_id", "doc_id"), ["bucket"], config
     ).select("src", "dst")
-    return rows, neardup_cosine_edges(pairs, vecs, tau)
+    return neardup_cosine_edges(pairs, vecs, tau)
 
 
 def neardup_assign(ids: DataFrame, labels: DataFrame) -> DataFrame:
@@ -925,8 +927,7 @@ def embedding_neardup_edges(
     buckets star-to-min-pivot; the max_bucket_pairs slice cannot trigger at
     the default cap since C(64,2) <= 2048)."""
     vecs, n_planes = _neardup_input(spark, sf_dir)
-    _rows, edges = neardup_graph(vecs, n_planes, _DC, tau)
-    return edges
+    return neardup_graph(vecs, neardup_probe_rows(vecs, n_planes), _DC, tau)
 
 
 def _neardup_edges_ctes(tau: float) -> str:
@@ -1016,12 +1017,15 @@ def embedding_neardup_clusters(
     (networkx-verified) CC step itself is outside the hash gate."""
     from ..stages.cluster import connected_components
 
-    # the vectors feed both sides of the pair generator and the cosine
-    # joins; released once CC's checkpoint has cut the edges' lineage
+    # the vectors feed the probe rows and the cosine joins, the probe rows
+    # several subtrees of the pair generator; both are released once CC's
+    # checkpoint has cut the edges' lineage
     vecs, n_planes = _neardup_input(spark, sf_dir)
     vecs = vecs.persist()
-    _rows, edges = neardup_graph(vecs, n_planes, _DC, tau)
+    rows = neardup_probe_rows(vecs, n_planes).persist()
+    edges = neardup_graph(vecs, rows, _DC, tau)
     labels, _ = connected_components(edges.select("src", "dst"))
+    rows.unpersist()
     vecs.unpersist()
     return neardup_assign(vecs.select("vec_id"), labels).withColumn(
         "is_canonical", F.col("vec_id") == F.col("cluster_id")

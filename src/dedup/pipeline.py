@@ -84,13 +84,15 @@ def verified_edges(
     edges: DataFrame,
     reps: DataFrame,
     sigs: DataFrame,
-    fps: DataFrame,
     config: DedupConfig,
     num_partitions: int | None,
+    fps: DataFrame | None = None,
 ) -> DataFrame:
     """The accepted rows of `edges` after the pre-verify screens and the
     content verification (stages.verify); `num_partitions` is the verify
-    stage's Python task count (None keeps the input partitioning)."""
+    stage's Python task count (None keeps the input partitioning), `fps`
+    the winnowed fingerprints when `sigs` does not carry them
+    (stages.verify.prepare_pairs)."""
     return stage_verify.verify_edges(
         stage_verify.prepare_pairs(edges, reps, sigs, config, fps=fps),
         config,
@@ -114,8 +116,7 @@ def near_dup_labels(
     lineage."""
     sigs = stage_minhash.joint_signatures(reps, config, with_fp=True).persist()
     verified = verified_edges(
-        candidate_edges(sigs, config), reps, sigs,
-        sigs.select("doc_id", "fp", "nlen"), config, num_partitions,
+        candidate_edges(sigs, config), reps, sigs, config, num_partitions
     )
     labels, rounds = stage_cluster.connected_components(verified)
     sigs.unpersist()
@@ -339,8 +340,8 @@ class Pipeline:
     def _stage_verify(self) -> dict[str, DataFrame]:
         return {"edges_verified": verified_edges(
             self._read("candidates"), self._read("reps"),
-            self._read("signatures"), self._read("winnow_fps"),
-            self.config, self.config.shuffle_partitions,
+            self._read("signatures"), self.config,
+            self.config.shuffle_partitions, fps=self._read("winnow_fps"),
         )}
 
     def _stage_cluster(self) -> dict[str, DataFrame]:

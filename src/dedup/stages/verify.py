@@ -51,7 +51,7 @@ def prepare_pairs(
     reps: DataFrame,
     sig_df: DataFrame,
     config: DedupConfig,
-    fps: DataFrame,
+    fps: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs with contents attached, pruned BEFORE any content
     bytes move — (src, dst, est_jaccard, content_src, content_dst). A pair
@@ -67,10 +67,10 @@ def prepare_pairs(
        LCS branch would accept; hash collisions only keep extra pairs.
 
     `fps(doc_id, fp, nlen)` holds the winnowed fingerprints and normalized
-    lengths: the fused signature pass's columns
-    (minhash_lsh.joint_signatures(with_fp=True)) or the persisted
-    `winnow_fps` index the checkpointed and incremental paths read, so no
-    doc is fingerprinted twice.
+    lengths: the persisted `winnow_fps` index the checkpointed and
+    incremental paths read, so no doc is fingerprinted twice. None means
+    `sig_df` carries them itself (minhash_lsh.joint_signatures(with_fp=True)),
+    and the signature relation is read once per pair side, with no join.
 
     Only SURVIVORS join against the content table. The screen's own
     exchange carries each side's signature plus its fingerprints, about
@@ -78,7 +78,10 @@ def prepare_pairs(
     lcs_min_chars // 2 + 1): ~0.5 B per char at lcs_min_chars=60, ~110
     fingerprints for a 1.8 KB code file. Rejected pairs never move content.
     """
-    light = sig_df.select("doc_id", "sig").join(fps, "doc_id")
+    light = (
+        sig_df.select("doc_id", "sig", "fp", "nlen") if fps is None
+        else sig_df.select("doc_id", "sig").join(fps, "doc_id")
+    )
     n = float(config.num_perm)
     est = (
         F.aggregate(

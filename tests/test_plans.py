@@ -200,3 +200,71 @@ def test_span_index_build_has_no_per_h_sort(spark, tmp_path):
     plan = plans["span_stats"]
     assert "Window" not in plan
     assert "Sort " not in plan and "SortMergeJoin" not in plan
+
+
+def test_prepare_pairs_reads_signatures_once_per_side(spark, tmp_path):
+    """With no separate `fps` (the one-shot composition's signatures carry
+    `fp` and `nlen`), the screen reads the signature relation on the src
+    and dst sides only: no self-join of the signatures onto their own
+    fingerprint columns."""
+    d = str(tmp_path / "sigs")
+    spark.createDataFrame(
+        [(1, [1, 2], [7, 8], 90), (2, [1, 3], [8, 9], 95)],
+        "doc_id long, sig array<bigint>, fp array<bigint>, nlen int",
+    ).write.parquet(d)
+    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
+    reps = spark.createDataFrame(
+        [(1, "a" * 90), (2, "b" * 95)], "doc_id long, content string"
+    )
+    plan = _plan(SV.prepare_pairs(edges, reps, spark.read.parquet(d), CFG))
+    scans = [ln for ln in plan.splitlines() if "FileScan" in ln and d in ln]
+    assert len(scans) == 2
+    assert all("fp" in ln and "nlen" in ln and "sig" in ln for ln in scans)
+
+
+def _outside_cached(plan: str) -> list[str]:
+    """The lines of `plan` not inside an InMemoryRelation: a cached plan is
+    printed under every scan of it, but computed once."""
+    out, cache_indent = [], None
+    for ln in plan.splitlines():
+        indent = len(ln) - len(ln.lstrip(" :|+-"))
+        if cache_indent is not None and indent > cache_indent:
+            continue
+        cache_indent = indent if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return out
+
+
+def test_embedding_bucket_udf_runs_once_per_vector(spark, tmp_path,
+                                                   monkeypatch):
+    """The pair generator reads the probe rows in several subtrees; the
+    compositions that release what they persist persist the rows, so the
+    bucket UDF runs inside that one cached relation and nowhere else in
+    the edges plan that connected components receives."""
+    import numpy as np
+
+    from dedup.incremental_ann import build_embedding_index
+    from dedup.ops.similarity import embedding_neardup_clusters_t40
+    from dedup.stages import cluster as SC
+    from dedup.storage import TableStore
+
+    plans = []
+    orig_cc = SC.connected_components
+
+    def spying_cc(edges, *a, **k):
+        plans.append(_plan(edges))
+        return orig_cc(edges, *a, **k)
+
+    monkeypatch.setattr(SC, "connected_components", spying_cc)
+    embedding_neardup_clusters_t40(spark, "/root/testdata/sf0.001")
+    rng = np.random.default_rng(5)
+    emb = spark.createDataFrame(
+        [(i, rng.standard_normal(64).astype("float32").tolist())
+         for i in range(16)],
+        "vec_id long, embedding array<float>",
+    )
+    build_embedding_index(spark, CFG, TableStore(tmp_path / "emb"), emb, 0.4)
+    assert len(plans) == 2
+    for plan in plans:
+        assert "ArrowEvalPython" in plan
+        assert not any("ArrowEvalPython" in ln for ln in _outside_cached(plan))
